@@ -67,10 +67,23 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(" ")
       catch { case _: Throwable => "unavailable" }
+    // Generated classes compiled during each pass (Janino compiles,
+    // JVM-wide). With the codegen cache sized to the suite
+    // (EntryKit.CodegenCacheEntries), passes 2 and 3 compile only the
+    // ~300 classes whose code embeds a per-run value, against ~4,100 at
+    // Spark's default cache size, so a plan that stops hitting the
+    // cache shows in the artifact itself.
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
     val passMeta = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val passCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
     val passes = Seq.fill(3) {
       passMeta += ((loadavg(), System.currentTimeMillis()))
-      ordered.map { case (name, fn) => name -> once(fn) }
+      val c0 = compiles()
+      val pass = ordered.map { case (name, fn) => name -> once(fn) }
+      passCompiles += compiles() - c0
+      pass
     }
     val results = ordered.map { case (name, _) =>
       val samples = passes.map(_.find(_._1 == name).get._2)
@@ -132,7 +145,7 @@ object Bench {
           else ("null", "null")
         s"""{"subset_ratio":$ratio,"loadavg_min":$lmin,"loadavg_max":$lmax}"""
       }
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"baseline_subset":${EntryKit.fmt3(baselineSubset(results.map { case (k, (v, _)) => k -> v }))},"baseline_subset_passes":$passSubsets,"host_band":$hostBand,"pass_host_load":$passLoads,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"baseline_subset":${EntryKit.fmt3(baselineSubset(results.map { case (k, (v, _)) => k -> v }))},"baseline_subset_passes":$passSubsets,"host_band":$hostBand,"pass_host_load":$passLoads,"pass_compiles":${passCompiles.mkString("[", ",", "]")},"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detail + "\n")

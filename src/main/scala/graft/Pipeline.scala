@@ -9,8 +9,12 @@ import graft.ingest.Crossref
 /** End-to-end orchestration of the reference pipeline (SURVEY.md §3):
   * ingest JSONL pages → UPS gate → dimensions (batch ER) → facts
   * (idempotent keyed append) → catalog integration → flat analytics view.
-  * Each stage is a DataFrame plan with one write action; re-running
-  * `ingest` over the same pages is a no-op (K1 semantics).
+  * Each stage runs several Spark jobs: `ingest` checkpoints and swaps
+  * the two dimensions, appends the three fact tables and logs the run;
+  * `integrateCatalog` swaps the catalog and the relabeled affiliations
+  * and exports a CSV; `buildFlatView` writes the two clean tables, then
+  * the view from them. Re-running `ingest` over the same pages is a
+  * no-op (K1 semantics).
   */
 object Pipeline {
 
@@ -140,16 +144,20 @@ object Pipeline {
     val oaa = FlatView.enforceRi(
       Warehouse.read(spark, dir, "obra_autor_afiliacion"),
       obras, autores, afiliaciones)
-    val temas = Warehouse.read(spark, dir, "obra_tema")
-      .join(obras.select("doi"), Seq("doi"), "left_semi")
-      .dropDuplicates("doi", "tema")
-    val sedes = Warehouse.read(spark, dir, "sedes_areas")
-
     Warehouse.overwrite(obras, dir, "obras_clean")
     Warehouse.overwrite(oaa, dir, "oaa_clean")
 
-    val vista = FlatView.vistaAnalisis(obras, autores, afiliaciones, oaa,
-      temas, sedes)
+    // The view reads the clean tables just committed: re-using the
+    // `obras`/`oaa` plans would re-run the cleanup and the RI
+    // semi-joins a second and third time (PipelineSpec pins that the
+    // result is the same).
+    val obrasClean = Warehouse.read(spark, dir, "obras_clean")
+    val temas = Warehouse.read(spark, dir, "obra_tema")
+      .join(obrasClean.select("doi"), Seq("doi"), "left_semi")
+      .dropDuplicates("doi", "tema")
+    val sedes = Warehouse.read(spark, dir, "sedes_areas")
+    val vista = FlatView.vistaAnalisis(obrasClean, autores, afiliaciones,
+      Warehouse.read(spark, dir, "oaa_clean"), temas, sedes)
     Warehouse.overwrite(vista, dir, "vista_analisis")
     Warehouse.read(spark, dir, "vista_analisis")
   }

@@ -92,22 +92,6 @@ object Layout {
     cur.drop(px, py)
   }
 
-  /** Hilbert-clustered write — [[zorderWrite]] with the better curve:
-    * one range shuffle on the d-index (sampled bounds, balanced
-    * files), sort within partitions, helper column dropped. Each of
-    * the `nFiles` files covers a compact d-range = a CONTIGUOUS
-    * spatial blob (see [[withHilbert]]), so per-file min/max stays
-    * selective on both columns with strictly better locality than the
-    * Morton interleave.
-    */
-  def hilbertOrderWrite(df: DataFrame, colA: String, colB: String,
-      bits: Int, nFiles: Int, path: String): Unit =
-    withHilbert(df, colA, colB, bits, "__h")
-      .repartitionByRange(nFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode("overwrite").parquet(path)
-
   /** Exact d-interval decomposition of an axis-aligned cell box under
     * the Hilbert curve — the planning half of Hilbert-clustered
     * pruning (the Hilbert R-tree idea, Kamel & Faloutsos VLDB '94):

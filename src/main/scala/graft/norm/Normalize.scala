@@ -345,9 +345,6 @@ object Normalize {
     nullif(uniTrim(regexp_replace(c, "^https?://orcid\\.org/", "")),
       lit(""))
 
-  /** C13 — empty-string → null discipline (str.strip-parity trim). */
-  def emptyToNull(c: Column): Column = nullif(uniTrim(c), lit(""))
-
   /** C15 — ";"-packed keyword cell → trimmed, non-empty, lowercased array
     * (PIPE:436-437; str.strip-parity trim, so an NBSP-padded keyword
     * still dedups/joins against its clean spelling).

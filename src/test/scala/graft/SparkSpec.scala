@@ -12,6 +12,8 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.graft.vecDotRewrite.assumeNoNullElements", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      EntryKit.CodegenCacheEntries.toLong)
     .getOrCreate()
 
   def resource(name: String): String =

@@ -54,6 +54,11 @@ object Pipeline {
 
     // Incremental dimension merge: existing surrogate ids are preserved,
     // new entities append after the current max (PIPE:312-359 semantics).
+    // A swap a dead run left half done is finished first: a stashed
+    // dimension would otherwise probe as missing and be rebuilt from
+    // this batch alone, renumbering every entity.
+    Seq("autores", "afiliaciones", "sedes_areas")
+      .foreach(Warehouse.recover(spark, dir, _))
     // EAGER localCheckpoint, not cache: overwriteSwap below renames
     // the very files these merged plans read — a best-effort cache
     // that loses blocks would recompute against a deleted directory
@@ -118,6 +123,7 @@ object Pipeline {
   def integrateCatalog(spark: SparkSession, csvPath: String,
       dir: String): Unit = {
     val incoming = Catalog.readCsv(spark, csvPath)
+    Seq("sedes_areas", "afiliaciones").foreach(Warehouse.recover(spark, dir, _))
     val existing =
       if (Warehouse.exists(spark, dir, "sedes_areas"))
         Warehouse.read(spark, dir, "sedes_areas")

@@ -1,0 +1,130 @@
+package graft.etl
+
+import java.io.IOException
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
+/** All-or-nothing promote of staged paths over their live paths: the
+  * one at-rest replace the warehouse, zone-map, segment-index and
+  * LSH-index writers commit through.
+  *
+  * A group is a list of [[Move]]s plus one `aside` path. The caller
+  * stages every staged path completely; then the aside comes into
+  * existence, as an empty directory or as the first move's stash. Its
+  * existence is the commit point: from then on the group ends in its
+  * new state. Per move the live path is stashed and the staged path
+  * promoted; last the staging root, the stashes and the aside (last of
+  * all) are deleted. A failure while moving undoes every move so far
+  * and deletes the aside, so the call fails with the old state in
+  * place; a crash leaves the aside, and [[recover]] rolls the group
+  * forward. A crash before the aside exists leaves the live paths as
+  * they were and at most a partial staging, which the writer's next
+  * stage overwrites. One writer per group: a live writer's group looks
+  * like a dead one's.
+  */
+private[graft] object Swap {
+
+  /** `staged` replaces `live`, whose current copy waits at `stash`
+    * until the group finishes; `staged = None` only retires `live`.
+    */
+  final case class Move(staged: Option[Path], live: Path, stash: Path)
+
+  /** One move per entry under `stage` that `leaf` accepts (descending
+    * into the directories it rejects), to the same relative path under
+    * `live`, stashed at that path under `aside`. Nil without a stage.
+    */
+  def under(fs: FileSystem, stage: Path, live: Path, aside: Path)(
+      leaf: FileStatus => Boolean): Seq[Move] = {
+    def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap(st =>
+      if (leaf(st)) Seq(st.getPath)
+      else if (st.isDirectory) walk(st.getPath) else Nil)
+    // listStatus returns qualified paths: strip the qualified stage
+    val prefix = fs.makeQualified(stage).toString + "/"
+    if (!fs.exists(stage)) Nil
+    else walk(stage).map { p =>
+      val rel = p.toString.stripPrefix(prefix)
+      Move(Some(p), new Path(live, rel), new Path(aside, rel))
+    }
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit = {
+    fs.mkdirs(to.getParent)
+    if (!fs.rename(from, to))
+      throw new IOException(s"Swap: rename $from -> $to failed")
+  }
+
+  /** Commit `moves` as one group. The caller [[recover]]s the group
+    * before it stages, so the aside does not exist yet.
+    */
+  def swap(fs: FileSystem, aside: Path, moves: Seq[Move],
+      staging: Option[Path] = None): Unit = {
+    val had = moves.map(m => fs.exists(m.live))
+    var done = List.empty[(Path, Path)] // renames made, newest first
+    def move(from: Path, to: Path): Unit = {
+      rename(fs, from, to); done = (from, to) :: done
+    }
+    try {
+      if (!(moves.headOption.exists(_.stash == aside) && had.head))
+        fs.mkdirs(aside)
+      moves.zip(had).foreach { case (m, h) =>
+        if (h) move(m.live, m.stash)
+        m.staged.foreach(move(_, m.live))
+      }
+    } catch {
+      case e: Throwable =>
+        done.find { case (from, to) => Try(rename(fs, to, from)).isFailure }
+          .foreach { case (_, at) =>
+            throw new IOException(s"Swap: $e, and undoing it failed too: " +
+              s"data is at $at; $aside is kept, so the next recover " +
+              "rolls the group forward", e)
+          }
+        Try(fs.delete(aside, true))
+        throw e
+    }
+    finish(fs, aside, moves, staging)
+  }
+
+  /** Finish a group a dead writer left committed: promote each staged
+    * path still there (stashing a live path not yet stashed), then
+    * delete as [[swap]] does; a live path left with no copy at all gets
+    * its stash back. Idempotent; one `exists` when nothing is pending.
+    * `moves`, read from disk, is evaluated only when the aside exists.
+    */
+  def recover(fs: FileSystem, aside: Path, staging: Option[Path] = None)(
+      moves: => Seq[Move]): Unit =
+    if (fs.exists(aside)) {
+      val ms = moves
+      ms.foreach { m =>
+        m.staged.filter(fs.exists) match {
+          case Some(s) =>
+            if (fs.exists(m.live)) rename(fs, m.live, m.stash)
+            rename(fs, s, m.live)
+          case None =>
+            if (m.staged.nonEmpty && !fs.exists(m.live) && fs.exists(m.stash))
+              rename(fs, m.stash, m.live)
+        }
+      }
+      finish(fs, aside, ms, staging)
+    }
+
+  /** Where a reader finds each move's current data, mutating nothing
+    * (a reader must not race the writer's renames): the live paths
+    * when no aside exists; inside a committed group the staged copy
+    * while it exists, else the live path, else the stash.
+    */
+  def resolve(fs: FileSystem, aside: Path, moves: Seq[Move]): Seq[Path] =
+    if (!fs.exists(aside)) moves.map(_.live)
+    else moves.map(m =>
+      (m.staged.toSeq :+ m.live).find(fs.exists).getOrElse(m.stash))
+
+  private def finish(fs: FileSystem, aside: Path, moves: Seq[Move],
+      staging: Option[Path]): Unit = {
+    staging.foreach(fs.delete(_, true))
+    moves.map(_.stash).filterNot(s => s == aside ||
+        s.toString.startsWith(aside.toString + "/"))
+      .foreach(fs.delete(_, true))
+    fs.delete(aside, true)
+  }
+}

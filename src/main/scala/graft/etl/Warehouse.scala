@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,10 +19,8 @@ object Warehouse {
   /** Existence probe through the Hadoop FileSystem API — works for any
     * supported scheme (file://, hdfs://, s3a://), not just local paths.
     */
-  def exists(spark: SparkSession, dir: String, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(dir, table))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, dir: String, table: String): Boolean =
+    fsOf(spark, dir).exists(new Path(path(dir, table)))
 
   def read(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.parquet(path(dir, table))
@@ -47,8 +46,54 @@ object Warehouse {
     }: _*)
 
   /** K2 — full replace. */
-  def overwrite(df: DataFrame, dir: String, table: String): Unit =
+  def overwrite(df: DataFrame, dir: String, table: String): Unit = {
+    recover(df.sparkSession, dir, table)
     df.write.mode(SaveMode.Overwrite).parquet(path(dir, table))
+  }
+
+  /** The warehouse's file system, resolved from its path: the default
+    * file system (`FileSystem.get(conf)`) throws "Wrong FS" for an
+    * s3a:// warehouse on an hdfs-default cluster.
+    */
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** [[overwriteSwap]]'s group: `table__tmp` replaces `table`, which
+    * is stashed at `table__old`, the group's aside.
+    */
+  private def swapMove(dir: String, table: String): Swap.Move =
+    Swap.Move(Some(new Path(path(dir, table + "__tmp"))),
+      new Path(path(dir, table)), new Path(path(dir, table + "__old")))
+
+  /** [[mergeByKey]]'s group: each partition leaf (a directory holding
+    * no directory) staged under `table__delta` replaces the same leaf
+    * of `table`, stashed under `table__mergeold` — outside the table
+    * root, so a crashed merge is never read as an extra partition.
+    */
+  private def mergeMoves(fs: FileSystem, dir: String,
+      table: String): Seq[Swap.Move] =
+    Swap.under(fs, new Path(path(dir, table + "__delta")),
+      new Path(path(dir, table)), new Path(path(dir, table + "__mergeold")))(
+      st => st.isDirectory && fs.listStatus(st.getPath).forall(!_.isDirectory))
+
+  /** Finish whatever swap of `table` a dead writer left committed —
+    * [[overwriteSwap]]'s, [[mergeByKey]]'s or [[expirePartitions]]' —
+    * so the table is whole again ([[Swap.recover]]): one `exists` per
+    * kind when nothing is pending. Every writer here calls it before it
+    * reads its table; a pipeline calls it before it probes [[exists]],
+    * or a stashed table would look missing. Each kind keeps its own
+    * aside: an expiry marked under the merge's aside would roll a
+    * failed merge's leftover `__delta` forward.
+    */
+  def recover(spark: SparkSession, dir: String, table: String): Unit = {
+    val fs = fsOf(spark, dir)
+    val m = swapMove(dir, table)
+    Swap.recover(fs, m.stash)(Seq(m))
+    Swap.recover(fs, new Path(path(dir, table + "__mergeold")),
+      Some(new Path(path(dir, table + "__delta"))))(
+      mergeMoves(fs, dir, table))
+    Swap.recover(fs, new Path(path(dir, table + "__expired")))(Nil)
+  }
 
   /** Full replace of a table the plan also READS: write to a side
     * directory first, then swap — a lazy plan reading `table` while
@@ -56,29 +101,10 @@ object Warehouse {
     */
   def overwriteSwap(spark: SparkSession, df: DataFrame, dir: String,
       table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path(dir, table + "__tmp"))
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dst = new Path(path(dir, table))
-    val old = new Path(path(dir, table + "__old"))
-    // Hadoop FileSystem throughout (file://, hdfs://, s3a:// all work):
-    // move the live table aside, promote tmp, drop the old copy. On a
-    // failed promote the old table is restored — never a deleted table
-    // with the new data stranded in __tmp.
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadDst = fs.exists(dst)
-    if (hadDst && !fs.rename(dst, old))
-      throw new java.io.IOException(s"overwriteSwap: rename $dst -> $old failed")
-    if (!fs.rename(tmp, dst)) {
-      val restored = !hadDst || fs.rename(old, dst)
-      throw new java.io.IOException(
-        s"overwriteSwap: rename $tmp -> $dst failed" +
-          (if (restored) " (previous table restored)"
-           else s" AND restoring $old -> $dst failed — data preserved at $old"))
-    }
-    if (hadDst) fs.delete(old, true)
-    ()
+    recover(spark, dir, table)
+    val m = swapMove(dir, table)
+    df.write.mode(SaveMode.Overwrite).parquet(m.staged.get.toString)
+    Swap.swap(fsOf(spark, dir), m.stash, Seq(m))
   }
 
   /** K1 — keyed idempotent append. `partitionCols` (e.g. `anio` on obras)
@@ -88,6 +114,7 @@ object Warehouse {
   def idempotentAppend(spark: SparkSession, df: DataFrame, dir: String,
       table: String, keys: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
+    recover(spark, dir, table)
     val deduped = df.dropDuplicates(keys)
     def writer(d: DataFrame, mode: SaveMode) = {
       val w = d.write.mode(mode)
@@ -120,10 +147,9 @@ object Warehouse {
     * Mechanics: the merged rows for the touched partitions (batch ∪
     * existing-anti-batch, partition-pruned read) are staged to a
     * `__delta` side directory — fully materialized BEFORE any live file
-    * moves — then each staged partition directory is swapped in with the
-    * same aside/promote/restore discipline as `overwriteSwap`. Aside
-    * copies live OUTSIDE the table root so a crashed merge can never be
-    * misread as an extra partition value.
+    * moves — then every staged partition directory is promoted as ONE
+    * [[Swap]] group: a failed or crashed merge never leaves some
+    * touched partitions merged and others not.
     *
     * Contract: partition values must be stable under updates (derive
     * them from the key, or include them in it) — a key that MOVED
@@ -135,7 +161,7 @@ object Warehouse {
   def mergeByKey(spark: SparkSession, batch: DataFrame, dir: String,
       table: String, keys: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
-    import org.apache.hadoop.fs.Path
+    recover(spark, dir, table)
     val deduped = batch.dropDuplicates(keys)
     def antiMerged(existing: DataFrame): DataFrame =
       deduped.unionByName(
@@ -159,47 +185,13 @@ object Warehouse {
           touched.map(r => partitionCols.zipWithIndex
             .map { case (c, i) => col(c) === lit(r.get(i)) }
             .reduce(_ && _)).reduce(_ || _))
-        val delta = new Path(path(dir, table + "__delta"))
-        val dst = new Path(path(dir, table))
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val delta = path(dir, table + "__delta")
         // stage: materializes the pruned existing read before any move
         antiMerged(pruned).write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionCols: _*).parquet(delta.toString)
-        // enumerate the staged leaf partition dirs (depth = #partition
-        // cols) — Spark already encoded the values, so relative paths
-        // transfer verbatim to the live table
-        def leaves(base: Path, depth: Int): Seq[Path] =
-          if (depth == 0) Seq(base)
-          else fs.listStatus(base).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-            .flatMap(st => leaves(st.getPath, depth - 1))
-        val aside = new Path(path(dir, table + "__mergeold"))
-        if (fs.exists(aside)) fs.delete(aside, true)
-        // listStatus returns fully-qualified paths (scheme + authority);
-        // strip the equally-qualified delta prefix to get the relative
-        // partition path
-        val deltaPrefix = fs.makeQualified(delta).toString
-        leaves(delta, partitionCols.size).foreach { d =>
-          val rel = d.toString.stripPrefix(deltaPrefix).stripPrefix("/")
-          val target = new Path(dst, rel)
-          val asideDir = new Path(aside, rel)
-          fs.mkdirs(asideDir.getParent)
-          fs.mkdirs(target.getParent)
-          val had = fs.exists(target)
-          if (had && !fs.rename(target, asideDir))
-            throw new java.io.IOException(
-              s"mergeByKey: rename $target -> $asideDir failed")
-          if (!fs.rename(d, target)) {
-            val restored = !had || fs.rename(asideDir, target)
-            throw new java.io.IOException(
-              s"mergeByKey: rename $d -> $target failed" +
-                (if (restored) " (previous partition restored)"
-                 else s" AND restore failed — data preserved at $asideDir"))
-          }
-        }
-        fs.delete(delta, true)
-        fs.delete(aside, true)
-        ()
+          .partitionBy(partitionCols: _*).parquet(delta)
+        val fs = fsOf(spark, dir)
+        Swap.swap(fs, new Path(path(dir, table + "__mergeold")),
+          mergeMoves(fs, dir, table), Some(new Path(delta)))
       }
     }
   }
@@ -230,7 +222,6 @@ object Warehouse {
     */
   private def versionDirs(spark: SparkSession, dir: String,
       table: String): Seq[(Long, Boolean)] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(versionRoot(dir, table))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
@@ -278,7 +269,6 @@ object Warehouse {
     */
   def vacuumVersions(spark: SparkSession, dir: String, table: String,
       keep: Int): Unit = {
-    import org.apache.hadoop.fs.Path
     require(keep >= 1, "vacuumVersions: keep must be >= 1")
     val root = new Path(versionRoot(dir, table))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -301,42 +291,30 @@ object Warehouse {
     * directory listing + renames, zero data reads/writes, nothing
     * proportional to table bytes — which is the only acceptable cost
     * for expiring data at 100 TB (a filter-and-rewrite ages the whole
-    * table through the cluster). Expired dirs are moved into a
-    * `.expired-<stamp>` sibling first (one rename per partition — the
-    * same staged-swap discipline as [[overwriteSwap]]), so a crash
-    * mid-expiry never leaves a half-deleted partition visible, then
-    * the stage is deleted. Returns the expired partition values.
+    * table through the cluster). The expired dirs are stashed into
+    * `table__expired` as one [[Swap]] group with nothing promoted,
+    * lowest value first, then the stash is deleted: a failure restores
+    * every partition, and a crash leaves the table expired below some
+    * lower cutoff, which re-running the expiry completes. Returns the
+    * expired partition values.
     */
   def expirePartitions(spark: SparkSession, dir: String, table: String,
       partitionCol: String, cutoff: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
+    recover(spark, dir, table)
     val base = new Path(path(dir, table))
-    // resolve the FS from the path (like every other mutator here) —
-    // FileSystem.get(conf) is the DEFAULT fs and throws "Wrong FS" for
-    // an s3a:// table on an hdfs-default cluster
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, dir)
     if (!fs.exists(base)) return Nil
     val prefix = s"$partitionCol="
+    def value(p: Path) =
+      java.net.URLDecoder.decode(p.getName.stripPrefix(prefix), "UTF-8")
     val expired = fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter { s =>
-        val v = java.net.URLDecoder.decode(
-          s.getPath.getName.stripPrefix(prefix), "UTF-8")
-        v < cutoff
-      }
-    if (expired.nonEmpty) {
-      val stage = new Path(base, s".expired-${System.nanoTime()}")
-      fs.mkdirs(stage)
-      expired.foreach { s =>
-        // a silently failed rename would leave the partition live while
-        // this method reports it expired — fail like overwriteSwap does
-        require(fs.rename(s.getPath, new Path(stage, s.getPath.getName)),
-          s"expirePartitions: rename failed for ${s.getPath}")
-      }
-      fs.delete(stage, true)
-    }
-    expired.map(s => java.net.URLDecoder.decode(
-      s.getPath.getName.stripPrefix(prefix), "UTF-8")).sorted
+      .map(_.getPath).filter(value(_) < cutoff).sortBy(value)
+    val aside = new Path(path(dir, table + "__expired"))
+    if (expired.nonEmpty)
+      Swap.swap(fs, aside,
+        expired.map(p => Swap.Move(None, p, new Path(aside, p.getName))))
+    expired.map(value)
   }
 
   /** K3 — CSV export with header (the reference's catalog emit,

@@ -1,7 +1,9 @@
 package graft.ext
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.etl.Swap
 import graft.functions.DigestFunctions.fastMd5
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -335,19 +337,22 @@ object Dedup {
     */
   def writeLshIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4, portable: Boolean = false,
-      path: String, nDirs: Int = 64): Unit =
-    writeIndexAs(df, idCol, textCol, n, k, bands, portable, path,
-      nDirs, org.apache.spark.sql.SaveMode.Overwrite)
+      path: String, nDirs: Int = 64): Unit = {
+    // a dead append would otherwise be rolled forward into the rebuild
+    recoverAppend(new Path(path).getFileSystem(
+      df.sparkSession.sessionState.newHadoopConf()), path)
+    writeIndexAs(df, idCol, textCol, n, k, bands, portable, path, nDirs)
+  }
 
   /** The ONE copy of the index-layout contract (pdir hashing,
-    * directory partitioning, shingle projection) — write and append
-    * differ only in SaveMode, so a layout change can't silently break
-    * the append == rebuild invariant q183 grades on.
+    * directory partitioning, shingle projection) — the rebuild writes
+    * it over the index, the append into its staging, so a layout
+    * change can't silently break the append == rebuild invariant q183
+    * grades on.
     */
   private def writeIndexAs(df: DataFrame, idCol: String,
       textCol: String, n: Int, k: Int, bands: Int, portable: Boolean,
-      path: String, nDirs: Int,
-      mode: org.apache.spark.sql.SaveMode): Unit =
+      path: String, nDirs: Int): Unit =
     // the two table writes are independent (distinct dirs, both pure
     // functions of df) — overlapped per guide §2.6 so the shingle
     // write back-fills the band write's shuffle/commit tail (r15:
@@ -356,10 +361,24 @@ object Dedup {
       () => bandRows(df, idCol, textCol, n, k, bands, portable)
         .withColumn("pdir", pmod(hash(col("bkey")), lit(nDirs)))
         .repartition(col("pdir"))
-        .write.mode(mode).partitionBy("pdir").parquet(s"$path/bands"),
+        .write.mode("overwrite").partitionBy("pdir")
+        .parquet(s"$path/bands"),
       () => df.select(col(idCol),
           array_distinct(shingles(col(textCol), n)).as("sh"))
-        .write.mode(mode).parquet(s"$path/shingles"))
+        .write.mode("overwrite").parquet(s"$path/shingles"))
+
+  /** [[appendLshIndex]]'s group: each part file staged under
+    * `__append` goes to the same relative path in the index. New files
+    * replace nothing, so the aside `__append_old` only marks the commit.
+    */
+  private def appendStage(path: String) = new Path(s"$path/__append")
+  private def appendAside(path: String) = new Path(s"$path/__append_old")
+  private def recoverAppend(fs: FileSystem, path: String): Unit =
+    Swap.recover(fs, appendAside(path), Some(appendStage(path)))(
+      appendMoves(fs, path))
+  private def appendMoves(fs: FileSystem, path: String) =
+    Swap.under(fs, appendStage(path), new Path(path), appendAside(path))(
+      st => st.isFile && st.getPath.getName.startsWith("part-"))
 
   /** LSH-banding recall audit: on a BOUNDED id-range sample, compare
     * the banding's candidate pairs against brute-force ground truth
@@ -416,8 +435,9 @@ object Dedup {
     * ingest cycle: probe the index first (`incrementalNearDups`), keep
     * the survivors, then append them so tomorrow's batch dedups
     * against today's too. Band rows land in the same `pdir`
-    * directories (append mode adds files, existing ones are
-    * immutable); shingle rows append flat. After an append the index
+    * directories as new files (existing ones are immutable); shingle
+    * rows land flat. Both tables stage under `__append` first and
+    * publish as one [[Swap]] group. After an append the index
     * is EXACTLY the index a full rebuild over corpus ∪ batch would
     * produce, row-for-row — band keys and shingles are pure per-doc
     * functions, so index content is a union (spec-pinned).
@@ -435,9 +455,17 @@ object Dedup {
     */
   def appendLshIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4, portable: Boolean = false,
-      path: String, nDirs: Int = 64): Unit =
-    writeIndexAs(df, idCol, textCol, n, k, bands, portable, path,
-      nDirs, org.apache.spark.sql.SaveMode.Append)
+      path: String, nDirs: Int = 64): Unit = {
+    val fs = new Path(path).getFileSystem(
+      df.sparkSession.sessionState.newHadoopConf())
+    recoverAppend(fs, path)
+    // both tables stage under ParJobs as the rebuild writes them, then
+    // publish as ONE group: no failure leaves shingles without bands
+    writeIndexAs(df, idCol, textCol, n, k, bands, portable,
+      appendStage(path).toString, nDirs)
+    Swap.swap(fs, appendAside(path), appendMoves(fs, path),
+      Some(appendStage(path)))
+  }
 
   /** Incremental fuzzy dedup: near-dups of a (small) new batch against
     * a `writeLshIndex` corpus — the daily-ingest shape at 100 TB, where

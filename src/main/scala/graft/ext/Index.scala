@@ -1,8 +1,10 @@
 package graft.ext
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import graft.etl.Swap
 import graft.functions.DigestFunctions.fastMd5
 
 /** At-rest inverted index: the text-retrieval twin of
@@ -182,12 +184,12 @@ object Index {
     * `docs/seg=N`. One pass over the batch; the corpus is not touched.
     */
   def writeSegment(df: DataFrame, idCol: String, textCol: String,
-      path: String, seg: Int, nBuckets: Int = 16): Unit =
+      path: String, seg: Int, nBuckets: Int = 16): Unit = {
+    recoverSegments(df.sparkSession, path)
     // postings and manifest are independent writes to distinct dirs,
     // both pure functions of the batch — overlapped (guide §2.6, the
     // writeIndexAs pattern). Note this is WITHIN one segment: the
-    // compaction path's postings+manifest RENAME pair stays sequential
-    // (that one is a single logical commit).
+    // compaction path's postings+manifest pair is one Swap group.
     ParJobs(
       () => postingsOf(df, idCol, textCol, nBuckets)
         .repartition(col("bucket"))
@@ -196,6 +198,7 @@ object Index {
       () => df.select(col(idCol).as("doc_id")).distinct()
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/docs/seg=$seg"))
+  }
 
   /** Term lookup over a segmented index: bucket pruning applies inside
     * EVERY segment (`seg`/`bucket` are both partition directories, the
@@ -212,12 +215,15 @@ object Index {
     require(terms.nonEmpty, "termLookupSegments: terms must be non-empty")
     import org.apache.spark.sql.expressions.Window
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val post = spark.read.option("basePath", s"$path/postings")
-      .parquet(s"$path/postings")
+    // through Swap.resolve: a crash inside compactSegments' swap leaves
+    // the pair spread over live, staged and stashed paths
+    val ms = segmentMoves(path)
+    val Seq(postPath, docsPath) = Swap.resolve(segmentFs(spark, path),
+      ms.head.stash, ms).map(_.toString)
+    val post = spark.read.option("basePath", postPath).parquet(postPath)
     val bucketLits = AtRest.partitionLits("termLookupSegments", "bucket",
       post.schema("bucket").dataType, buckets.map(_.toLong))
-    val latest = spark.read.option("basePath", s"$path/docs")
-      .parquet(s"$path/docs")
+    val latest = spark.read.option("basePath", docsPath).parquet(docsPath)
       .groupBy("doc_id")
       .agg(max(col("seg").cast("long")).as("__live_seg"))
     val probed = post
@@ -236,13 +242,35 @@ object Index {
       .select("term", "df", "doc_id", "tf", "rank")
   }
 
+  /** [[compactSegments]]' group: postings and docs staged under
+    * `__compact` replace the live pair, stashed at `__old_postings`
+    * (the group's aside) and `__old_docs`. The pair moves as one: a
+    * compacted postings dir beside the OLD manifest (or vice versa)
+    * makes every lookup silently return zero rows, because the
+    * liveness filter expects seg numbers the other half does not have.
+    */
+  private def segmentMoves(path: String): Seq[Swap.Move] =
+    Seq("postings", "docs").map(n => Swap.Move(
+      Some(new Path(s"$path/__compact/$n")), new Path(s"$path/$n"),
+      new Path(s"$path/__old_$n")))
+
+  private def segmentFs(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Finish a compaction a dead writer left committed. */
+  private def recoverSegments(spark: SparkSession, path: String): Unit = {
+    val ms = segmentMoves(path)
+    Swap.recover(segmentFs(spark, path), ms.head.stash,
+      Some(new Path(s"$path/__compact")))(ms)
+  }
+
   /** Fold all segments into a fresh seg=0 (live rows only) and drop the
-    * rest — the LSM compaction. Staged write + directory swap, restore
-    * on failure (`overwriteSwap`'s discipline).
+    * rest — the LSM compaction, staged and then promoted as one
+    * [[Swap]] group.
     */
   def compactSegments(spark: SparkSession, path: String,
       nBuckets: Int = 16): Unit = {
-    import org.apache.hadoop.fs.Path
+    recoverSegments(spark, path)
     val post = spark.read.option("basePath", s"$path/postings")
       .parquet(s"$path/postings")
     val latest = spark.read.option("basePath", s"$path/docs")
@@ -253,8 +281,7 @@ object Index {
       .filter(col("seg").cast("long") === col("__live_seg"))
       .select("term", "doc_id", "tf", "bucket")
     val docs = latest.select("doc_id")
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = segmentFs(spark, path)
     // stage the compacted layout next to the live one
     val stage = new Path(s"$path/__compact")
     if (fs.exists(stage)) fs.delete(stage, true)
@@ -263,41 +290,7 @@ object Index {
       .parquet(s"$path/__compact/postings/seg=0")
     docs.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/__compact/docs/seg=0")
-    // postings + docs must move as ONE logical commit: a compacted
-    // postings dir paired with the OLD manifest (or vice versa) makes
-    // every lookup silently return zero rows — the liveness filter
-    // expects seg numbers the other half no longer has. Stash BOTH,
-    // then promote BOTH; any failure rolls back whatever moved so the
-    // old paired layout is restored. (A hard process crash inside the
-    // window leaves the `__old_*` stashes on disk — recovery is
-    // renaming them back; they are only deleted after both promotes
-    // succeed.)
-    val names = Seq("postings", "docs")
-    def cur(n: String) = new Path(s"$path/$n")
-    def aside(n: String) = new Path(s"$path/__old_$n")
-    try {
-      names.foreach { n =>
-        if (fs.exists(aside(n))) fs.delete(aside(n), true)
-        if (!fs.rename(cur(n), aside(n)))
-          throw new java.io.IOException(
-            s"compactSegments: stash $n failed")
-      }
-      names.foreach { n =>
-        if (!fs.rename(new Path(s"$path/__compact/$n"), cur(n)))
-          throw new java.io.IOException(
-            s"compactSegments: swap $n failed")
-      }
-    } catch {
-      case e: Throwable =>
-        names.foreach { n =>
-          if (fs.exists(aside(n))) {
-            if (fs.exists(cur(n))) fs.delete(cur(n), true)
-            fs.rename(aside(n), cur(n))
-          }
-        }
-        throw e
-    }
-    names.foreach(n => fs.delete(aside(n), true))
-    fs.delete(stage, true)
+    val ms = segmentMoves(path)
+    Swap.swap(fs, ms.head.stash, ms, Some(stage))
   }
 }

@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.etl.Swap
 
 /** Physical-layout operators: multi-dimensional clustering for data
   * skipping.
@@ -238,6 +240,10 @@ object Layout {
     */
   def zoneWrite(df: DataFrame, zoneCol: String, nFiles: Int,
       path: String): Unit = {
+    // a dead sidecar swap would otherwise be rolled forward over the
+    // sidecar written here
+    recoverZones(new Path(path).getFileSystem(
+      df.sparkSession.sessionState.newHadoopConf()), path)
     df.repartitionByRange(nFiles, col(zoneCol))
       .sortWithinPartitions(zoneCol)
       .write.mode("overwrite").parquet(path)
@@ -297,9 +303,7 @@ object Layout {
       path: String): Unit = {
     val spark = df.sparkSession
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // a prior swap that died between its stash and its promote left no
-    // live `.zones` — roll forward (single-writer, so no rename race)
-    // before reading it
+    // a sidecar swap that died half done: roll it forward first
     recoverZones(fs, path)
     val prior = spark.read.parquet(path + ".zones")
       .select("file", "mn", "mx", "rows").collect()
@@ -334,7 +338,7 @@ object Layout {
         spark.sparkContext.parallelize(prior.toSeq, 1), fresh.schema))
       .coalesce(1)
       .write.mode("overwrite").parquet(path + ".zones.next")
-    swapZones(spark, path)
+    swapZones(fs, path)
     fs.delete(marker, false)
   }
 
@@ -523,7 +527,7 @@ object Layout {
           zSchema)
         .coalesce(1)
         .write.mode("overwrite").parquet(path + ".zones.next")
-      swapZones(spark, path)
+      swapZones(fs, path)
       // Victim delete, by the NAMES the sidecar already gave us — the
       // happy path pays zero directory listings. The new sidecar
       // committed first, so a crash mid-delete leaves only
@@ -570,7 +574,7 @@ object Layout {
     * single-writer contract an unreferenced part file can only be a
     * dead run's garbage.
     */
-  private def sweepUnreferenced(fs: org.apache.hadoop.fs.FileSystem,
+  private def sweepUnreferenced(fs: FileSystem,
       path: String, liveUris: Set[String]): Unit = {
     val live =
       liveUris.map(f => new Path(new java.net.URI(f)).getName)
@@ -581,72 +585,26 @@ object Layout {
   }
 
   /** Recursive-if-directory delete (tmp dirs vs marker files). */
-  private def fs2Delete(fs: org.apache.hadoop.fs.FileSystem,
+  private def fs2Delete(fs: FileSystem,
       p: Path): Unit =
     if (fs.exists(p)) fs.delete(p, fs.getFileStatus(p).isDirectory)
 
-  /** Staged sidecar swap — the new manifest is fully written before it
-    * replaces the old one, and the old one is STASHED (not deleted)
-    * until the new one is in place: a failure mid-swap restores it, so
-    * a reader never sees a missing or half-written sidecar.
+  /** The sidecar's [[Swap]] group: `.zones.next` replaces `.zones`,
+    * stashed at `.zones.old`, the group's aside, so a reader never sees
+    * a missing or half-written sidecar. Readers resolve it without
+    * mutating anything (they must not race a writer's renames); the
+    * maintenance ops recover it first, under the single-writer contract.
     */
-  /** Where the live sidecar is, tolerating a crash INSIDE a prior
-    * [[swapZones]] (stash done, promote not): `.zones` when present;
-    * else the fully-committed `.zones.next` (it was completely written
-    * before the swap began — rolling FORWARD loses nothing); else the
-    * stashed `.zones.old`. Non-mutating, so a concurrent reader can
-    * never race a live writer's renames; the next MAINTENANCE op
-    * repairs the names via [[recoverZones]] under the single-writer
-    * contract.
-    */
-  private def sidecarPath(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String = {
-    if (fs.exists(new Path(path + ".zones"))) path + ".zones"
-    else if (fs.exists(new Path(path + ".zones.next"))) path + ".zones.next"
-    else if (fs.exists(new Path(path + ".zones.old"))) path + ".zones.old"
-    else path + ".zones" // read fails loudly on a truly absent sidecar
-  }
-
-  /** Mutating twin of [[sidecarPath]] for MAINTENANCE entries (append/
-    * compact — single-writer, so no rename race): if a prior swap died
-    * between its stash and its promote, promote the fully-committed
-    * `.zones.next` now and drop the stash; if only the stash survives
-    * (promote also lost `.next` somehow), restore it. After this the
-    * live sidecar is back at `.zones` and the op proceeds normally.
-    */
-  private def recoverZones(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val cur = new Path(path + ".zones")
-    val nxt = new Path(path + ".zones.next")
-    val old = new Path(path + ".zones.old")
-    if (!fs.exists(cur)) {
-      if (fs.exists(nxt)) {
-        if (!fs.rename(nxt, cur))
-          throw new java.io.IOException("recoverZones: promote failed")
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        if (!fs.rename(old, cur))
-          throw new java.io.IOException("recoverZones: restore failed")
-      }
-    }
-    ()
-  }
-
-  private def swapZones(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new Path(path + ".zones")
-    val nxt = new Path(path + ".zones.next")
-    val old = new Path(path + ".zones.old")
-    if (fs.exists(old)) fs.delete(old, true)
-    val had = fs.exists(cur)
-    if (had && !fs.rename(cur, old))
-      throw new java.io.IOException("swapZones: stash failed")
-    if (!fs.rename(nxt, cur)) {
-      if (had) fs.rename(old, cur)
-      throw new java.io.IOException("swapZones: swap failed")
-    }
-    fs.delete(old, true)
-  }
+  private def zonesAside(path: String) = new Path(path + ".zones.old")
+  private def sidecarMoves(path: String) = Seq(Swap.Move(
+    Some(new Path(path + ".zones.next")), new Path(path + ".zones"),
+    zonesAside(path)))
+  private def sidecarPath(fs: FileSystem, path: String): String =
+    Swap.resolve(fs, zonesAside(path), sidecarMoves(path)).head.toString
+  private def recoverZones(fs: FileSystem, path: String): Unit =
+    Swap.recover(fs, zonesAside(path))(sidecarMoves(path))
+  private def swapZones(fs: FileSystem, path: String): Unit =
+    Swap.swap(fs, zonesAside(path), sidecarMoves(path))
 
   /** Bucketed catalog-table write: hash-bucket on `key` into `nBuckets`
     * file groups, sorted within each bucket, registered so the planner

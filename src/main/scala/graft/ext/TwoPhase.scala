@@ -76,7 +76,7 @@ private[graft] object TwoPhase {
     * branch chain per row. The first cut summed `sp.size` separate
     * CaseWhens, which evaluated every branch for every row and fell
     * out of efficient codegen: ~6× slower measured on a 2M-row
-    * support (Scratch3). Nulls take the explicit first branch to
+    * support. Nulls take the explicit first branch to
     * bucket 0 — consistent with Spark's nulls-first ascending order,
     * so a null row's bucket agrees with its global sort position.
     */

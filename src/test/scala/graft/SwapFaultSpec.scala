@@ -1,0 +1,298 @@
+package graft
+
+import java.io.{File, IOException}
+import java.net.URI
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.functions._
+
+import graft.etl.Warehouse
+import graft.ext.{Dedup, Index, Layout}
+
+/** The local file system under the `faulty` scheme, failing on cue:
+  * the k-th rename or delete outside a Spark `_temporary` directory
+  * throws, returns false, or — in crash mode — throws, and so does
+  * every later mutation, as if the process had died there.
+  */
+class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = FaultFs.Uri
+}) {
+  override def getScheme: String = FaultFs.Uri.getScheme
+  override def rename(src: Path, dst: Path): Boolean =
+    FaultFs.step(src, dst)(super.rename(src, dst))
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    FaultFs.step(p)(super.delete(p, recursive))
+  override def mkdirs(p: Path): Boolean = { FaultFs.alive(); super.mkdirs(p) }
+  override def mkdirs(p: Path, perm: FsPermission): Boolean = {
+    FaultFs.alive(); super.mkdirs(p, perm)
+  }
+  override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FaultFs.alive()
+    super.create(p, perm, overwrite, bufferSize, replication, blockSize,
+      progress)
+  }
+}
+
+object FaultFs {
+  val Uri: URI = URI.create("faulty:///")
+
+  sealed trait Mode
+  case object Throw extends Mode
+  case object ReturnFalse extends Mode
+  case object Crash extends Mode
+
+  @volatile private var failAt = 0 // 0: disarmed
+  @volatile private var mode: Mode = Throw
+  @volatile private var dead = false
+  @volatile var fired = false
+  private val seen = new AtomicInteger
+
+  def arm(k: Int, m: Mode): Unit = {
+    seen.set(0); mode = m; dead = false; fired = false; failAt = k
+  }
+  def disarm(): Unit = { failAt = 0; dead = false }
+
+  def alive(): Unit =
+    if (dead) throw new IOException("FaultFs: the process has crashed")
+
+  def step(paths: Path*)(op: => Boolean): Boolean = {
+    alive()
+    if (failAt > 0 && !paths.exists(_.toString.contains("/_temporary")) &&
+        seen.incrementAndGet() == failAt) {
+      fired = true
+      mode match {
+        case ReturnFalse => return false
+        case Throw => throw new IOException(s"FaultFs: fault at step $failAt")
+        case Crash =>
+          dead = true
+          throw new IOException(s"FaultFs: crash at step $failAt")
+      }
+    }
+    op
+  }
+}
+
+/** Every at-rest replace, failed or crashed at each of its renames and
+  * deletes in turn: a reader must then see exactly the old or exactly
+  * the new state — right after a failed call, and after a crash once
+  * the next writer has recovered (readers that resolve through the
+  * swap group see it right after the crash too).
+  */
+class SwapFaultSpec extends SparkSpec {
+  import spark.implicits._
+
+  private lazy val registered = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faulty.impl", classOf[FaultFs].getName)
+    conf.setBoolean("fs.faulty.impl.disable.cache", true)
+    true
+  }
+
+  private def freshDir(): String = {
+    assert(registered)
+    "faulty://" + Files.createTempDirectory("graft_fault").toString
+  }
+
+  private def exists(p: String): Boolean =
+    new File(new URI(p).getPath).exists()
+
+  /** Runs `write` on a fresh `setup` fixture once per fault point and
+    * mode, until a run ends before its fault point. `state` reads the
+    * fixture as a reader does; `recover` is the next writer's entry.
+    * No write may leave its `asides` behind once recovered, nor its
+    * `staging` once it has succeeded (a failed write may leave a
+    * partial staging, which the next write overwrites).
+    */
+  private def sweep(setup: String => Unit, write: String => Unit,
+      state: String => Any, recover: String => Unit,
+      asides: String => Seq[String], staging: String => Seq[String],
+      resolving: Boolean = false): Unit = {
+    def debris(d: String) = asides(d) ++ staging(d)
+    def fixture() = { val d = freshDir(); setup(d); d }
+    val d0 = fixture()
+    val old = state(d0)
+    write(d0)
+    val neu = state(d0)
+    assert(neu != old, "the write changed nothing a reader can see")
+    debris(d0).foreach(p => assert(!exists(p), s"$p left behind"))
+    def check(what: String, s: Any): Unit =
+      assert(s == old || s == neu, s"$what: neither old nor new: $s")
+    for (mode <- Seq(FaultFs.Throw, FaultFs.ReturnFalse, FaultFs.Crash)) {
+      var k = 1
+      var swept = false
+      while (!swept) {
+        val d = fixture()
+        FaultFs.arm(k, mode)
+        val failed = Try(write(d)).isFailure
+        val fired = FaultFs.fired
+        FaultFs.disarm()
+        val at = s"$mode at step $k"
+        if (!fired) {
+          assert(!failed, s"$at: failed without a fault")
+          assert(state(d) == neu)
+          debris(d).foreach(p => assert(!exists(p), s"$p left behind"))
+          swept = true
+        } else {
+          if (mode != FaultFs.Crash || resolving) check(at, state(d))
+          if (!failed && mode != FaultFs.Crash) assert(state(d) == neu, at)
+          recover(d)
+          check(s"$at, recovered", state(d))
+          asides(d).foreach(p => assert(!exists(p), s"$at: $p left behind"))
+        }
+        k += 1
+      }
+      assert(k > 3, s"$mode: the write made too few renames and deletes")
+    }
+  }
+
+  private def rows(path: String): Seq[String] =
+    Try(spark.read.parquet(path).collect().map(_.toString).sorted.toSeq)
+      .getOrElse(Seq("<unreadable>"))
+
+  test("overwriteSwap is all-or-nothing under faults and crashes") {
+    sweep(
+      setup = d => Warehouse.overwrite(
+        (1 to 5).map(i => (i, s"v$i")).toDF("id", "v"), d, "t"),
+      write = d => Warehouse.overwriteSwap(spark,
+        Warehouse.read(spark, d, "t").withColumn("v", upper($"v")), d, "t"),
+      state = d => rows(s"$d/t"),
+      recover = d => Warehouse.recover(spark, d, "t"),
+      asides = d => Seq(s"$d/t__old"), staging = d => Seq(s"$d/t__tmp"))
+  }
+
+  test("mergeByKey over three touched partitions is all-or-nothing " +
+      "under faults and crashes") {
+    sweep(
+      setup = d => Warehouse.mergeByKey(spark,
+        (1 to 10).map(i => (i, 2019 + i % 5, s"v$i")).toDF("id", "anio", "v"),
+        d, "t", Seq("id"), Seq("anio")),
+      write = d => Warehouse.mergeByKey(spark,
+        Seq((1, 2020, "u1"), (2, 2021, "u2"), (3, 2022, "u3"),
+          (11, 2020, "n11")).toDF("id", "anio", "v"),
+        d, "t", Seq("id"), Seq("anio")),
+      state = d => rows(s"$d/t"),
+      recover = d => Warehouse.recover(spark, d, "t"),
+      asides = d => Seq(s"$d/t__mergeold"),
+      staging = d => Seq(s"$d/t__delta"))
+  }
+
+  test("expirePartitions is all-or-nothing under faults; after a crash " +
+      "the table is expired below a lower cutoff until the expiry re-runs") {
+    val data = (1 to 10).map(i => (i, (2019 + i % 5).toString))
+    def expiredBelow(c: String) =
+      data.filter(_._2 >= c).map(r => s"[${r._1},${r._2}]").sorted
+    sweep(
+      setup = d => data.toDF("id", "anio").repartition(1).write
+        .partitionBy("anio").parquet(s"$d/t"),
+      write = d => Warehouse.expirePartitions(spark, d, "t", "anio", "2022"),
+      state = d => rows(s"$d/t"),
+      recover = { d =>
+        Warehouse.recover(spark, d, "t")
+        assert(Seq("2019", "2020", "2021", "2022").map(expiredBelow)
+          .contains(rows(s"$d/t")))
+        Warehouse.expirePartitions(spark, d, "t", "anio", "2022")
+      },
+      asides = d => Seq(s"$d/t__expired"), staging = _ => Nil)
+  }
+
+  test("zoneAppend's sidecar swap is all-or-nothing under faults and " +
+      "crashes; the next maintenance op sweeps a dead append's files") {
+    def zoned(d: String) =
+      Layout.zoneRead(spark, s"$d/z", "x", lit(0L), lit(Long.MaxValue))
+        .collect().map(_.toString).sorted.toSeq
+    sweep(
+      setup = d => Layout.zoneWrite(
+        (1L to 40L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 2, s"$d/z"),
+      write = d => Layout.zoneAppend(
+        (41L to 60L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1, s"$d/z"),
+      state = zoned,
+      recover = { d =>
+        Layout.zoneCompact(spark, s"$d/z", "x", 1000L)
+        assert(rows(s"$d/z") == zoned(d),
+          "a direct read disagrees with the sidecar")
+      },
+      asides = d => Seq(s"$d/z.zones.old", s"$d/z.append.inprogress"),
+      staging = d => Seq(s"$d/z.zones.next"),
+      resolving = true)
+  }
+
+  test("compactSegments swaps postings and docs as one group under " +
+      "faults and crashes") {
+    val terms = Seq("join", "hash", "scan", "filter", "sort")
+    def lookup(d: String) = Index.termLookupSegments(spark, s"$d/idx",
+      terms, k = 10).collect().map(_.toString).sorted.toSeq
+    def segs(d: String) = new File(new URI(s"$d/idx/postings").getPath)
+      .list().filter(_.startsWith("seg=")).sorted.toSeq
+    sweep(
+      setup = { d =>
+        Index.writeSegment(Seq((1L, "join hash join"), (2L, "hash scan"),
+          (3L, "sort join")).toDF("doc_id", "text"), "doc_id", "text",
+          s"$d/idx", seg = 0)
+        Index.writeSegment(Seq((1L, "scan filter"), (4L, "join sort"))
+          .toDF("doc_id", "text"), "doc_id", "text", s"$d/idx", seg = 1)
+      },
+      write = d => Index.compactSegments(spark, s"$d/idx"),
+      // compaction preserves every lookup, so the state a reader can
+      // tell apart is the lookup result (a torn pair changes it) plus
+      // the segment count once the group has settled
+      state = d => (lookup(d), Try(segs(d)).toOption.map(_.size)),
+      recover = d => Index.compactSegments(spark, s"$d/idx"),
+      asides = d => Seq(s"$d/idx/__old_postings", s"$d/idx/__old_docs"),
+      staging = d => Seq(s"$d/idx/__compact"))
+  }
+
+  test("compactSegments readers resolve a crashed swap without waiting " +
+      "for recovery") {
+    val d = freshDir()
+    val idx = s"$d/idx"
+    Index.writeSegment(Seq((1L, "join hash join"), (2L, "hash scan"))
+      .toDF("doc_id", "text"), "doc_id", "text", idx, seg = 0)
+    Index.writeSegment(Seq((1L, "scan filter")).toDF("doc_id", "text"),
+      "doc_id", "text", idx, seg = 1)
+    def lookup() = Index.termLookupSegments(spark, idx,
+      Seq("join", "hash", "scan", "filter"), k = 10)
+      .collect().map(_.toString).sorted.toSeq
+    val expected = lookup()
+    var k = 1
+    var swept = false
+    while (!swept) {
+      FaultFs.arm(k, FaultFs.Crash)
+      Try(Index.compactSegments(spark, idx))
+      swept = !FaultFs.fired
+      FaultFs.disarm()
+      assert(lookup() === expected, s"crash at step $k")
+      Index.writeSegment(Seq((1L, "scan filter")).toDF("doc_id", "text"),
+        "doc_id", "text", idx, seg = k + 1)
+      k += 1
+    }
+    assert(k > 3)
+  }
+
+  test("appendLshIndex publishes bands and shingles as one group under " +
+      "faults and crashes") {
+    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    def docs(ids: Range) = ids.map(i => (i.toLong,
+      (0 until 8).map(j => words((i + j * j) % words.size)).mkString(" ")))
+      .toDF("doc_id", "text").repartition(1)
+    def index(d: String) = (rows(s"$d/lsh/bands"), rows(s"$d/lsh/shingles"))
+    sweep(
+      setup = d => Dedup.writeLshIndex(docs(1 to 12), "doc_id", "text",
+        path = s"$d/lsh", nDirs = 2),
+      write = d => Dedup.appendLshIndex(docs(13 to 18), "doc_id", "text",
+        path = s"$d/lsh", nDirs = 2),
+      state = index,
+      recover = d => Dedup.appendLshIndex(docs(1 to 0), "doc_id", "text",
+        path = s"$d/lsh", nDirs = 2),
+      asides = d => Seq(s"$d/lsh/__append_old"),
+      staging = d => Seq(s"$d/lsh/__append"))
+  }
+}

@@ -4,19 +4,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Catalog, Entities, FlatView, Warehouse}
+import graft.ext.ParJobs
 import graft.ingest.Crossref
 
 /** End-to-end orchestration of the reference pipeline (SURVEY.md §3):
   * ingest JSONL pages → UPS gate → dimensions (batch ER) → facts
   * (idempotent keyed append) → catalog integration → flat analytics view.
-  * Each stage runs several Spark jobs: `ingest` checkpoints and swaps
-  * the two dimensions, appends the three fact tables and logs the run;
-  * `integrateCatalog` swaps the catalog and the relabeled affiliations
-  * and exports a CSV; `buildFlatView` writes the two clean tables, then
-  * the view from them. Re-running `ingest` over the same pages is a
-  * no-op (K1 semantics).
+  * Re-running `ingest` over the same pages is a no-op (K1 semantics).
+  *
+  * On a small batch a stage's time is set by its chain of Spark jobs,
+  * not by compute, so each stage submits the actions that share no
+  * input and no output together, through [[graft.ext.ParJobs]]:
+  *  - `ingest`, after the swap recovery and the `exists` probes:
+  *    phase 1 resolves, merges and checkpoints `autores` and
+  *    `afiliaciones` while it appends `obras` and `obra_tema` — the two
+  *    facts read only the gated works, never a dimension; phase 2 swaps
+  *    both dimensions in while it appends `obra_autor_afiliacion` (which
+  *    sees the dimensions only through the two checkpoints) and counts
+  *    `obras` (written in phase 1, untouched in phase 2). The run log's
+  *    start and finish rows stay first and last.
+  *  - `integrateCatalog`: after the `sedes_areas` swap, the CSV export
+  *    and the relabel + `afiliaciones` swap, both readers of the new
+  *    catalog.
+  *  - `buildFlatView`: `obras_clean` and `oaa_clean`, both built from
+  *    the raw tables; then the view from them.
+  * Every writer still commits through its own swap or keyed append, a
+  * failed action rethrows once the others have settled, and a re-run
+  * converges to the state an unfailed run leaves (PipelineFaultSpec).
   */
 object Pipeline {
+
+  /** A phase action that only writes: no result for the phase. */
+  private def write(f: => Unit): () => Option[Nothing] = () => { f; None }
 
   /** Ingest one batch of CrossRef JSONL page files into the warehouse.
     * `maxWorks` is the F8 ingest cap (reference MAX_WORKS, PIPE:27):
@@ -49,8 +68,6 @@ object Pipeline {
     val occ = affRows
       .select("doi", "nombreLimpio", "nombreBusqueda", "orcid",
         "autorSecuencia")
-    val autoresBatch = Entities.resolveAuthors(occ)
-    val afilBatch = Entities.resolveAffiliations(affRows)
 
     // Incremental dimension merge: existing surrogate ids are preserved,
     // new entities append after the current max (PIPE:312-359 semantics).
@@ -59,29 +76,35 @@ object Pipeline {
     // this batch alone, renumbering every entity.
     Seq("autores", "afiliaciones", "sedes_areas")
       .foreach(Warehouse.recover(spark, dir, _))
-    // EAGER localCheckpoint, not cache: overwriteSwap below renames
-    // the very files these merged plans read — a best-effort cache
-    // that loses blocks would recompute against a deleted directory
-    // and die mid-run after facts were partially appended. The
-    // checkpoint cuts the lineage before the swap.
-    val autores = (if (Warehouse.exists(spark, dir, "autores"))
-      Entities.mergeAuthors(Warehouse.read(spark, dir, "autores"),
-        autoresBatch)
-    else autoresBatch.drop("entityKey")).localCheckpoint()
-    val afiliaciones = (if (Warehouse.exists(spark, dir, "afiliaciones"))
-      Entities.mergeAffiliations(Warehouse.read(spark, dir, "afiliaciones"),
-        afilBatch)
-    else afilBatch).localCheckpoint()
+    val Seq(hasAutores, hasAfiliaciones, hasSedes) =
+      Seq("autores", "afiliaciones", "sedes_areas")
+        .map(Warehouse.exists(spark, dir, _))
 
-    Warehouse.overwriteSwap(spark, autores, dir, "autores")
-    Warehouse.overwriteSwap(spark, afiliaciones, dir, "afiliaciones")
-
-    // Facts — idempotent keyed appends (K1).
+    // Phase 1. EAGER localCheckpoint, not cache: phase 2's overwriteSwap
+    // renames the very files these merged plans read — a best-effort
+    // cache that loses blocks would recompute against a deleted
+    // directory and die mid-run after facts were partially appended.
+    // The checkpoint cuts the lineage before the swap. Resolution runs
+    // inside its action: the surrogate-id step materialises eagerly.
     val obras = gated.drop("author", "subject")
-    Warehouse.idempotentAppend(spark, obras, dir, "obras", Seq("doi"),
-      partitionCols = Seq("anio"))
-    Warehouse.idempotentAppend(spark, Crossref.obraTema(gated), dir,
-      "obra_tema", Seq("doi", "tema"))
+    val Seq(autores, afiliaciones) = ParJobs[Option[DataFrame]](
+      () => Some({
+        val batch = Entities.resolveAuthors(occ)
+        if (hasAutores) Entities.mergeAuthors(
+          Warehouse.read(spark, dir, "autores"), batch)
+        else batch.drop("entityKey")
+      }.localCheckpoint()),
+      () => Some({
+        val batch = Entities.resolveAffiliations(affRows)
+        if (hasAfiliaciones) Entities.mergeAffiliations(
+          Warehouse.read(spark, dir, "afiliaciones"), batch)
+        else batch
+      }.localCheckpoint()),
+      // Facts — idempotent keyed appends (K1).
+      write(Warehouse.idempotentAppend(spark, obras, dir, "obras",
+        Seq("doi"), partitionCols = Seq("anio"))),
+      write(Warehouse.idempotentAppend(spark, Crossref.obraTema(gated), dir,
+        "obra_tema", Seq("doi", "tema")))).flatten
 
     // Bridge at (doi, autorId, afiliacionId) grain with A6/A7 semantics:
     // distinct affiliation set per author-in-work; sequence upgrades to
@@ -99,13 +122,19 @@ object Pipeline {
         === 0, lit("first")).otherwise(min(when(
         col("autorSecuencia") =!= "first", col("autorSecuencia"))))
         .as("autorSecuencia"))
-    Warehouse.idempotentAppend(spark, oaa, dir, "obra_autor_afiliacion",
-      Seq("doi", "autorId", "afiliacionId"))
 
-    if (!Warehouse.exists(spark, dir, "sedes_areas"))
-      Warehouse.overwrite(Catalog.seededSedes(spark), dir, "sedes_areas")
+    // Phase 2: publish the dimensions beside the bridge append.
+    val Seq(n) = ParJobs[Option[Long]](
+      () => Some(Warehouse.read(spark, dir, "obras").count()),
+      write(Warehouse.overwriteSwap(spark, autores, dir, "autores")),
+      write(Warehouse.overwriteSwap(spark, afiliaciones, dir,
+        "afiliaciones")),
+      write(Warehouse.idempotentAppend(spark, oaa, dir,
+        "obra_autor_afiliacion", Seq("doi", "autorId", "afiliacionId"))),
+      write(if (!hasSedes)
+        Warehouse.overwrite(Catalog.seededSedes(spark), dir, "sedes_areas"))
+    ).flatten
 
-    val n = Warehouse.read(spark, dir, "obras").count()
     Warehouse.logRun(spark, dir, runId, "finish", pagesPath, n)
     // release this batch's pinned state: per-batch caches would
     // otherwise accumulate across ingest calls and evict each other;
@@ -130,14 +159,14 @@ object Pipeline {
       else Catalog.seededSedes(spark)
     val merged = Catalog.upsertSedes(existing, incoming)
     Warehouse.overwriteSwap(spark, merged, dir, "sedes_areas")
-    // K3 — catalog CSV export (PIPE:396-398)
-    Warehouse.writeCsv(Warehouse.read(spark, dir, "sedes_areas")
-      .orderBy("sedeId"), s"$dir/export/sedes_areas_csv")
-
-    val afil = Warehouse.read(spark, dir, "afiliaciones")
-    val relabeled = Catalog.labelAffiliations(afil,
-      Warehouse.read(spark, dir, "sedes_areas"))
-    Warehouse.overwriteSwap(spark, relabeled, dir, "afiliaciones")
+    val sedes = Warehouse.read(spark, dir, "sedes_areas")
+    ParJobs(
+      // K3 — catalog CSV export (PIPE:396-398)
+      () => Warehouse.writeCsv(sedes.orderBy("sedeId"),
+        s"$dir/export/sedes_areas_csv"),
+      () => Warehouse.overwriteSwap(spark, Catalog.labelAffiliations(
+        Warehouse.read(spark, dir, "afiliaciones"), sedes),
+        dir, "afiliaciones"))
   }
 
   /** Cleanup + flat view (§3.3): *_clean tables and Vista_Analisis. */
@@ -150,8 +179,9 @@ object Pipeline {
     val oaa = FlatView.enforceRi(
       Warehouse.read(spark, dir, "obra_autor_afiliacion"),
       obras, autores, afiliaciones)
-    Warehouse.overwrite(obras, dir, "obras_clean")
-    Warehouse.overwrite(oaa, dir, "oaa_clean")
+    ParJobs(
+      () => Warehouse.overwrite(obras, dir, "obras_clean"),
+      () => Warehouse.overwrite(oaa, dir, "oaa_clean"))
 
     // The view reads the clean tables just committed: re-using the
     // `obras`/`oaa` plans would re-run the cleanup and the RI

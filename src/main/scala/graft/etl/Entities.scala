@@ -84,12 +84,18 @@ object Entities {
     * batch learned one); genuinely new entities get ids after the current
     * max. Matching precedence = ORCID, then nombreBusqueda — same as the
     * reference's probes.
+    *
+    * `batch` is a [[resolveAuthors]] output: `entityKey`, the name and
+    * every non-null ORCID are each unique in it. Then each existing
+    * entity meets at most one batch row per probe, and a batch key is
+    * claimed by an existing entity iff its ORCID or its name is already
+    * present — so the merge needs no existing × batch probe join on
+    * ORCID at all (EntitiesSpec pins it against the three-way join it
+    * replaced).
     */
   def mergeAuthors(existing: DataFrame, batch: DataFrame): DataFrame = {
     val e = existing.select(col("autorId"), col("nombreLimpio"),
       col("nombreBusqueda"), col("orcid"))
-    val byOrcid = batch.filter(col("orcid").isNotNull)
-      .select(col("orcid"), col("entityKey").as("kO"))
     // ORCID backfill through the NAME probe only when the batch ORCID
     // matched no existing entity (the reference backfills on the name
     // probe only after the ORCID probe MISSED, PIPE:326-335) — otherwise
@@ -100,28 +106,18 @@ object Entities {
     val byName = batch
       .join(claimedOrcids, col("orcid") === col("claimedOrcid"), "left")
       .select(col("nombreBusqueda"),
-        when(col("claimedOrcid").isNull, col("orcid")).as("bOrcid"),
-        col("entityKey").as("kN"))
-    val joined = e
-      .join(byOrcid, Seq("orcid"), "left")
-      .join(byName, Seq("nombreBusqueda"), "left")
-    val matched = joined
+        when(col("claimedOrcid").isNull, col("orcid")).as("bOrcid"))
+    val matched = e.join(byName, Seq("nombreBusqueda"), "left")
       .select(col("autorId"), col("nombreLimpio"), col("nombreBusqueda"),
         coalesce(col("orcid"), col("bOrcid")).as("orcid"))
-    // A batch key is "claimed" if it matched an existing entity on EITHER
-    // probe: an entity matched via ORCID may also name-match a different
-    // batch key, and that key must not re-enter as novel (it would mint a
-    // duplicate autorId for the same nombreBusqueda).
-    val claimedKeys = joined.select(col("kO").as("entityKey"))
-      .filter(col("entityKey").isNotNull)
-      .union(joined.select(col("kN").as("entityKey"))
-        .filter(col("entityKey").isNotNull))
-      .distinct()
-    // max over `existing` — identical value (matched left-preserves
-    // existing's id set) without executing the 3-way probe join twice
+    // A key claimed on EITHER probe is not novel: an entity matched via
+    // ORCID may also name-match a different batch key, and that key
+    // re-entering would mint a duplicate autorId for the same name.
+    val novel = batch
+      .join(claimedOrcids, col("orcid") === col("claimedOrcid"), "left_anti")
+      .join(e.select("nombreBusqueda"), Seq("nombreBusqueda"), "left_anti")
     val maxId = e.agg(coalesce(max("autorId"), lit(0L)).cast("long"))
       .head().getLong(0)
-    val novel = batch.join(claimedKeys, Seq("entityKey"), "left_anti")
     val novelWithIds = surrogateIds(novel.drop("autorId"), "entityKey",
       "autorId", maxId)
     matched

@@ -17,12 +17,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * new state. Per move the live path is stashed and the staged path
   * promoted; last the staging root, the stashes and the aside (last of
   * all) are deleted. A failure while moving undoes every move so far
-  * and deletes the aside, so the call fails with the old state in
-  * place; a crash leaves the aside, and [[recover]] rolls the group
-  * forward. A crash before the aside exists leaves the live paths as
-  * they were and at most a partial staging, which the writer's next
-  * stage overwrites. One writer per group: a live writer's group looks
-  * like a dead one's.
+  * and deletes the aside and the staging, so the call fails with the
+  * old state in place and nothing staged left; a crash leaves the
+  * aside, and [[recover]] rolls the group forward. A crash before the
+  * aside exists leaves the live paths as they were and at most a
+  * partial staging, which the writer's next stage overwrites. One
+  * writer per group: a live writer's group looks like a dead one's.
   */
 private[graft] object Swap {
 
@@ -55,6 +55,20 @@ private[graft] object Swap {
       throw new IOException(s"Swap: rename $from -> $to failed")
   }
 
+  /** Run `write`, the writer's staging under `staging`; if it throws,
+    * delete what it left there before rethrowing (a job commit that
+    * fails late leaves complete data files). A task of the failed job
+    * that is still running may recreate an empty `_temporary` skeleton;
+    * the writer's next stage overwrites it.
+    */
+  def stage(fs: FileSystem, staging: Path)(write: => Unit): Unit =
+    try write
+    catch {
+      case e: Throwable =>
+        Try(fs.delete(staging, true))
+        throw e
+    }
+
   /** Commit `moves` as one group. The caller [[recover]]s the group
     * before it stages, so the aside does not exist yet.
     */
@@ -81,6 +95,9 @@ private[graft] object Swap {
               "rolls the group forward", e)
           }
         Try(fs.delete(aside, true))
+        // the old state is back: the staging is garbage nothing recovers
+        (moves.flatMap(_.staged) ++ staging)
+          .foreach(p => Try(fs.delete(p, true)))
         throw e
     }
     finish(fs, aside, moves, staging)

@@ -83,10 +83,14 @@ object Warehouse {
     * reads its table; a pipeline calls it before it probes [[exists]],
     * or a stashed table would look missing. Each kind keeps its own
     * aside: an expiry marked under the merge's aside would roll a
-    * failed merge's leftover `__delta` forward.
+    * failed merge's leftover `__delta` forward. It also deletes a dead
+    * append's `_temporary`: Hadoop's job commit merges every committed
+    * task directory it finds there, so the next append into the table
+    * would publish the dead job's rows beside its own.
     */
   def recover(spark: SparkSession, dir: String, table: String): Unit = {
     val fs = fsOf(spark, dir)
+    fs.delete(new Path(path(dir, table), "_temporary"), true)
     val m = swapMove(dir, table)
     Swap.recover(fs, m.stash)(Seq(m))
     Swap.recover(fs, new Path(path(dir, table + "__mergeold")),
@@ -103,8 +107,11 @@ object Warehouse {
       table: String): Unit = {
     recover(spark, dir, table)
     val m = swapMove(dir, table)
-    df.write.mode(SaveMode.Overwrite).parquet(m.staged.get.toString)
-    Swap.swap(fsOf(spark, dir), m.stash, Seq(m))
+    val fs = fsOf(spark, dir)
+    val tmp = m.staged.get
+    Swap.stage(fs, tmp)(
+      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+    Swap.swap(fs, m.stash, Seq(m))
   }
 
   /** K1 — keyed idempotent append. `partitionCols` (e.g. `anio` on obras)
@@ -186,10 +193,11 @@ object Warehouse {
             .map { case (c, i) => col(c) === lit(r.get(i)) }
             .reduce(_ && _)).reduce(_ || _))
         val delta = path(dir, table + "__delta")
-        // stage: materializes the pruned existing read before any move
-        antiMerged(pruned).write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionCols: _*).parquet(delta)
         val fs = fsOf(spark, dir)
+        // stage: materializes the pruned existing read before any move
+        Swap.stage(fs, new Path(delta))(antiMerged(pruned).write
+          .mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+          .parquet(delta))
         Swap.swap(fs, new Path(path(dir, table + "__mergeold")),
           mergeMoves(fs, dir, table), Some(new Path(delta)))
       }
@@ -332,6 +340,7 @@ object Warehouse {
       phase: String, query: String, rowsIngested: Long): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{to_json, struct, lit, col}
+    recover(spark, dir, "runs")
     Seq((runId, phase, query, rowsIngested,
       java.time.Instant.now().toString))
       .toDF("runId", "phase", "source", "rowsIngested", "at")

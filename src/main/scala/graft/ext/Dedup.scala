@@ -461,8 +461,8 @@ object Dedup {
     recoverAppend(fs, path)
     // both tables stage under ParJobs as the rebuild writes them, then
     // publish as ONE group: no failure leaves shingles without bands
-    writeIndexAs(df, idCol, textCol, n, k, bands, portable,
-      appendStage(path).toString, nDirs)
+    Swap.stage(fs, appendStage(path))(writeIndexAs(df, idCol, textCol, n, k,
+      bands, portable, appendStage(path).toString, nDirs))
     Swap.swap(fs, appendAside(path), appendMoves(fs, path),
       Some(appendStage(path)))
   }

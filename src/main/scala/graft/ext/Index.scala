@@ -285,11 +285,13 @@ object Index {
     // stage the compacted layout next to the live one
     val stage = new Path(s"$path/__compact")
     if (fs.exists(stage)) fs.delete(stage, true)
-    live.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/__compact/postings/seg=0")
-    docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/__compact/docs/seg=0")
+    Swap.stage(fs, stage) {
+      live.repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$path/__compact/postings/seg=0")
+      docs.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/__compact/docs/seg=0")
+    }
     val ms = segmentMoves(path)
     Swap.swap(fs, ms.head.stash, ms, Some(stage))
   }

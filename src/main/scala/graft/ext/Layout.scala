@@ -334,10 +334,8 @@ object Layout {
       .groupBy(input_file_name().as("file"))
       .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
         count(lit(1)).as("rows"))
-    fresh.unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(prior.toSeq, 1), fresh.schema))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + ".zones.next")
+    stageZones(fs, path)(fresh.unionByName(spark.createDataFrame(
+        spark.sparkContext.parallelize(prior.toSeq, 1), fresh.schema)))
     swapZones(fs, path)
     fs.delete(marker, false)
   }
@@ -522,11 +520,8 @@ object Layout {
       // this window leaves a consistent sidecar (old or new) whose
       // files all still exist; the worst case is orphaned part files,
       // never a sidecar pointing at deleted data.
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(freshRows ++ keep.toSeq, 1),
-          zSchema)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(path + ".zones.next")
+      stageZones(fs, path)(spark.createDataFrame(
+        spark.sparkContext.parallelize(freshRows ++ keep.toSeq, 1), zSchema))
       swapZones(fs, path)
       // Victim delete, by the NAMES the sidecar already gave us — the
       // happy path pays zero directory listings. The new sidecar
@@ -603,6 +598,12 @@ object Layout {
     Swap.resolve(fs, zonesAside(path), sidecarMoves(path)).head.toString
   private def recoverZones(fs: FileSystem, path: String): Unit =
     Swap.recover(fs, zonesAside(path))(sidecarMoves(path))
+  private def stageZones(fs: FileSystem, path: String)(
+      zones: DataFrame): Unit = {
+    val next = sidecarMoves(path).head.staged.get
+    Swap.stage(fs, next)(
+      zones.coalesce(1).write.mode("overwrite").parquet(next.toString))
+  }
   private def swapZones(fs: FileSystem, path: String): Unit =
     Swap.swap(fs, zonesAside(path), sidecarMoves(path))
 

@@ -12,43 +12,54 @@ package graft.ext
   * directories, no shared mutable state, no read-after-write between
   * them (e.g. an index's band table and its shingle sidecar — two
   * writes derived independently from the same input). Blocks until
-  * every action completes; the first failure rethrows its original
-  * exception (unwrapped), after the others finish or fail, so error
-  * semantics match the sequential form.
+  * every action completes and returns their results in argument order;
+  * the first failure rethrows its original exception (unwrapped), after
+  * the others finish or fail, so error semantics match the sequential
+  * form. Each call starts its threads from the caller's, so the jobs
+  * carry the caller's job group and local properties.
+  *
+  * Callers: `Dedup.writeIndexAs` (bands ∥ shingles), `Index.writeSegment`
+  * (postings ∥ manifest), and `Pipeline.ingest`/`integrateCatalog`/
+  * `buildFlatView`, whose per-stage phases are listed in `Pipeline`.
   */
 private[graft] object ParJobs {
-  def apply(thunks: (() => Unit)*): Unit = {
+  def apply[A](thunks: (() => A)*): Seq[A] = {
     require(thunks.nonEmpty, "ParJobs: no actions")
-    if (thunks.size == 1) { thunks.head(); return }
+    if (thunks.size == 1) return Seq(thunks.head())
     val pool =
       java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
     try {
       val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = t()
         })
       }
       var firstErr: Throwable = null
       var interrupt: InterruptedException = null
-      futs.foreach { f =>
-        if (interrupt == null) {
-          try f.get()
+      val results = futs.map { f =>
+        if (interrupt != null) None
+        else {
+          try Some(f.get())
           catch {
             case e: java.util.concurrent.ExecutionException =>
               if (firstErr == null) firstErr = e.getCause
+              None
             case e: java.util.concurrent.CancellationException =>
               if (firstErr == null) firstErr = e
+              None
             case e: InterruptedException =>
               // caller interrupted: cancel the in-flight thunks (their
               // threads get interrupted) and fall through to the
               // settle-all in the finally block, then rethrow
               interrupt = e
               futs.foreach(_.cancel(true))
+              None
           }
         }
       }
       if (interrupt != null) throw interrupt
       if (firstErr != null) throw firstErr
+      results.flatten
     } finally {
       // settle-all on EVERY exit path: no thunk may keep running after
       // apply() has unwound (the doc's contract). Normal paths have

@@ -2,6 +2,8 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
+
 import graft.etl.Entities
 
 /** Entity-resolution determinism properties (SURVEY §5.3): identical input
@@ -24,6 +26,21 @@ class EntitiesSpec extends SparkSpec {
   private def toDf(rows: Seq[(String, String, String, String, String)]) =
     rows.toDF("doi", "nombreLimpio", "nombreBusqueda", "orcid",
       "autorSecuencia")
+
+  /** `Entities.mergeAuthors` equals the three-way-join reference on
+    * (`existing`, `batch`), row for row; returns the merge.
+    */
+  private def mergeLikeReference(existing: DataFrame,
+      batch: DataFrame): DataFrame = {
+    def rows(df: DataFrame) =
+      df.select("autorId", "nombreLimpio", "nombreBusqueda", "orcid")
+        .collect().map(_.toString).sorted.toSeq
+    val merged = Entities.mergeAuthors(existing, batch)
+    assert(rows(merged) == rows(
+      MergeAuthorsReference.mergeAuthors(existing, batch)),
+      "the merge differs from the three-way-join reference")
+    merged
+  }
 
   test("ER stability: shuffled input ⇒ identical entities and ids") {
     val expected = Entities.resolveAuthors(toDf(baseOcc))
@@ -66,7 +83,7 @@ class EntitiesSpec extends SparkSpec {
       ("0001", "J. Pérez", "j. perez", "0001"),       // ORCID match
       ("jose perez", "José Pérez", "jose perez", null) // name match
     ).toDF("entityKey", "nombreLimpio", "nombreBusqueda", "orcid")
-    val merged = Entities.mergeAuthors(existing, batch).cache()
+    val merged = mergeLikeReference(existing, batch).cache()
     assert(merged.count() == 1)
     assert(merged.select("autorId", "nombreBusqueda")
       .as[(Long, String)].head() == ((7L, "jose perez")))
@@ -86,14 +103,14 @@ class EntitiesSpec extends SparkSpec {
     ).toDF("autorId", "nombreLimpio", "nombreBusqueda", "orcid")
     val batch = Seq(("O", "J. Pérez", "j. perez", "O"))
       .toDF("entityKey", "nombreLimpio", "nombreBusqueda", "orcid")
-    val merged = Entities.mergeAuthors(existing, batch).cache()
+    val merged = mergeLikeReference(existing, batch).cache()
     assert(merged.count() == 2)
     assert(merged.filter($"autorId" === 2L).select("orcid")
       .as[Option[String]].head().isEmpty)
     // a genuinely unclaimed ORCID still backfills through the name probe
     val batch2 = Seq(("P", "J. Pérez", "j. perez", "P"))
       .toDF("entityKey", "nombreLimpio", "nombreBusqueda", "orcid")
-    val merged2 = Entities.mergeAuthors(existing, batch2)
+    val merged2 = mergeLikeReference(existing, batch2)
     assert(merged2.filter($"autorId" === 2L).select("orcid")
       .as[Option[String]].head().contains("P"))
   }
@@ -103,7 +120,7 @@ class EntitiesSpec extends SparkSpec {
       .toDF("autorId", "nombreLimpio", "nombreBusqueda", "orcid")
     val batch = Seq(("solo name", "Solo Name", "solo name", null))
       .toDF("entityKey", "nombreLimpio", "nombreBusqueda", "orcid")
-    val merged = Entities.mergeAuthors(noAuthors, batch)
+    val merged = mergeLikeReference(noAuthors, batch)
     assert(merged.select("autorId").as[Long].collect().toSeq == Seq(1L))
 
     val noAffs = Seq.empty[(Long, String, String, Int, String, String, Boolean)]
@@ -117,6 +134,31 @@ class EntitiesSpec extends SparkSpec {
     val mergedAff = Entities.mergeAffiliations(noAffs, affBatch)
     assert(mergedAff.select("afiliacionId").as[Long].collect().toSeq ==
       Seq(1L))
+  }
+
+  test("merge equals the three-way-join reference on random batches") {
+    // occurrences over a small name and ORCID pool, so names collide,
+    // ORCIDs unify several spellings, and a later batch both re-meets
+    // and extends the dimension; resolveAuthors yields the batch shape
+    // the merge assumes (entityKey, name and ORCID each unique)
+    val rnd = new Random(20261018)
+    def occurrences(n: Int) = toDf(Seq.fill(n) {
+      val name = s"author ${rnd.nextInt(40)}"
+      val orcid = if (rnd.nextInt(3) == 0) null
+        else "%04d".format(rnd.nextInt(25))
+      ("10.9/x", name.capitalize, name, orcid, "first")
+    })
+    (1 to 4).foreach { trial =>
+      var existing = Entities.resolveAuthors(occurrences(30))
+        .drop("entityKey")
+      (1 to 2).foreach { step =>
+        val batch = Entities.resolveAuthors(occurrences(25))
+        val merged = mergeLikeReference(existing, batch)
+        assert(merged.select("autorId").distinct().count() ==
+          merged.count(), s"trial $trial step $step: duplicate autorId")
+        existing = merged.localCheckpoint()
+      }
+    }
   }
 
   test("distributed surrogate ids equal the window formulation") {

@@ -1,0 +1,44 @@
+package graft
+
+import org.apache.spark.TaskContext
+
+import graft.ext.ParJobs
+
+/** `ParJobs` returns each action's result in argument order, and the
+  * jobs it submits carry the caller's job group and local properties —
+  * what tags a job with the query or pipeline stage that ran it.
+  */
+class ParJobsSpec extends SparkSpec {
+
+  test("ParJobs returns the actions' results in argument order") {
+    val got = ParJobs(
+      () => { Thread.sleep(50); spark.range(10).count() },
+      () => spark.range(3).count(),
+      () => 7L)
+    assert(got == Seq(10L, 3L, 7L))
+  }
+
+  test("a job submitted inside ParJobs carries the caller's job group " +
+      "and local properties") {
+    val sc = spark.sparkContext
+    def seen(): Set[(String, String)] =
+      sc.parallelize(1 to 8, 4).map { _ =>
+        val tc = TaskContext.get()
+        (tc.getLocalProperty("spark.jobGroup.id"),
+          tc.getLocalProperty("graft.test.stage"))
+      }.collect().toSet
+    sc.setJobGroup("ingest-group", "pipeline stage")
+    sc.setLocalProperty("graft.test.stage", "stage.ingest")
+    try {
+      val got = ParJobs(() => seen(), () => seen())
+      assert(got == Seq.fill(2)(Set(("ingest-group", "stage.ingest"))))
+      // a later call sees the caller's properties as they are now
+      sc.setLocalProperty("graft.test.stage", "stage.catalog")
+      assert(ParJobs(() => seen(), () => seen()) ==
+        Seq.fill(2)(Set(("ingest-group", "stage.catalog"))))
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.stage", null)
+    }
+  }
+}

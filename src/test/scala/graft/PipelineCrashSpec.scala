@@ -77,4 +77,20 @@ class PipelineCrashSpec extends SparkSpec {
     assert(Warehouse.read(spark, dir, "afiliaciones")
       .filter(col("sedeId").isNull).count() == 0)
   }
+
+  test("an append after a dead append's committed task output adds " +
+      "each row once") {
+    val dir = Files.createTempDirectory("graft_crash").toString
+    val base = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    val batch = Seq((2, "b"), (3, "c"), (4, "d")).toDF("id", "v")
+    Warehouse.idempotentAppend(spark, base, dir, "t", Seq("id"))
+    // the job of a process that died after its tasks committed and
+    // before the job did: task output waits under `_temporary`
+    batch.join(base, Seq("id"), "left_anti").write
+      .parquet(s"$dir/t/_temporary/0/task_202601010000_0001_m_000000")
+    Warehouse.idempotentAppend(spark, batch, dir, "t", Seq("id"))
+    assert(Warehouse.read(spark, dir, "t").orderBy("id")
+      .as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")))
+  }
 }

@@ -523,4 +523,33 @@ class PlanAuditSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"), s"cartesian in $n:\n$p")
     }
   }
+
+  test("incremental author merge plans each probe of the existing " +
+      "dimension once") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    def occ(names: Seq[String]) = names.map(n =>
+      ("10.1/a", n, n.toLowerCase, s"orcid-$n", "first"))
+      .toDF("doi", "nombreLimpio", "nombreBusqueda", "orcid",
+        "autorSecuencia")
+    graft.etl.Entities.resolveAuthors(occ(Seq("Ana", "Luis")))
+      .drop("entityKey").write.parquet(s"$dir/autores")
+    val batch = graft.etl.Entities.resolveAuthors(occ(Seq("Luis", "Eva")))
+    def exchanges(f: => org.apache.spark.sql.DataFrame): Int = {
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try f.queryExecution.executedPlan.collectWithSubqueries {
+        case e: Exchange => e
+      }.size
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+    val existing = spark.read.parquet(s"$dir/autores")
+    val got = exchanges(graft.etl.Entities.mergeAuthors(existing, batch))
+    val was = exchanges(MergeAuthorsReference.mergeAuthors(existing, batch))
+    // the three-way probe join planned 15 exchanges (AQE off) — once for
+    // the matched rows and once per claimed-key leg
+    assert(got <= 6 && got < was,
+      s"the merge plans $got exchanges (cap 6; the reference plans $was)")
+  }
 }

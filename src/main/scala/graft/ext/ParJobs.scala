@@ -36,30 +36,26 @@ private[graft] object ParJobs {
       }
       var firstErr: Throwable = null
       var interrupt: InterruptedException = null
-      val results = futs.map { f =>
-        if (interrupt != null) None
-        else {
-          try Some(f.get())
+      futs.foreach { f =>
+        if (interrupt == null) {
+          try f.get()
           catch {
             case e: java.util.concurrent.ExecutionException =>
               if (firstErr == null) firstErr = e.getCause
-              None
             case e: java.util.concurrent.CancellationException =>
               if (firstErr == null) firstErr = e
-              None
             case e: InterruptedException =>
               // caller interrupted: cancel the in-flight thunks (their
               // threads get interrupted) and fall through to the
               // settle-all in the finally block, then rethrow
               interrupt = e
               futs.foreach(_.cancel(true))
-              None
           }
         }
       }
       if (interrupt != null) throw interrupt
       if (firstErr != null) throw firstErr
-      results.flatten
+      futs.map(_.get())
     } finally {
       // settle-all on EVERY exit path: no thunk may keep running after
       // apply() has unwound (the doc's contract). Normal paths have

@@ -28,11 +28,11 @@ object Bench {
     // host stall, so best-of-2 still manufactured 2-6x "regressions" on
     // unchanged code (rounds 2 and 3 each produced one). Interleaving
     // separates a query's two samples by a whole suite pass — noise now
-    // has to persist for minutes to poison a minimum. clearCache()
-    // before every measurement drops anything a previous query pinned
-    // (e.g. dedup signature caches), so no query is timed against
-    // another query's leftover memory state and the CacheManager
-    // "already cached" re-registration warnings are gone.
+    // has to persist for minutes to poison a minimum. Each query's
+    // action runs in a Materialize.scope, which frees what the query
+    // pinned (operator caches and lineage cuts), also when it throws;
+    // clearCache() before every measurement stays as timing hygiene, so
+    // no query is timed against another query's leftover memory state.
     // A failing query reports time -1 plus an `errors` entry — it must
     // never read as a near-zero (i.e. fast) measurement.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -47,7 +47,7 @@ object Bench {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val err =
-        try { fn(spark, sfDir).count(); None }
+        try { graft.ext.Materialize.scope(fn(spark, sfDir).count()); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Catalog, Entities, FlatView, Warehouse}
-import graft.ext.ParJobs
+import graft.ext.{Materialize, ParJobs}
 import graft.ingest.Crossref
 
 /** End-to-end orchestration of the reference pipeline (SURVEY.md §3):
@@ -43,12 +43,12 @@ object Pipeline {
     * arbitrary-but-capped, via `limit`.
     */
   def ingest(spark: SparkSession, pagesPath: String, dir: String,
-      maxWorks: Int = 1000000): Long = {
+      maxWorks: Int = 1000000): Long = Materialize.scope {
     val runId = java.util.UUID.randomUUID().toString
     Warehouse.logRun(spark, dir, runId, "start", pagesPath, 0L)
 
     val items = Crossref.readPages(spark, pagesPath)
-    val allWorks = Crossref.works(items).cache()
+    val allWorks = Materialize.disk(Crossref.works(items))
     // DETERMINISTIC F8 cap: a bare limit over an unordered plan picks
     // an arbitrary subset PER EVALUATION — if the cache is lost
     // between the three fact appends (executor failure), each append
@@ -57,14 +57,14 @@ object Pipeline {
     // (the reference's arrival-order cutoff doesn't exist once pages
     // are a distributed dataset — same convention as the documented
     // lexicographic merge tiebreaks).
-    val gated = Crossref.upsGate(allWorks).orderBy("doi")
-      .limit(maxWorks).cache()
+    val gated = Materialize.disk(Crossref.upsGate(allWorks).orderBy("doi")
+      .limit(maxWorks))
 
     // Dimensions resolve over ALL scanned works — the reference upserts
     // authors/affiliations while parsing, BEFORE the work-level UPS gate
     // (PIPE:604-659 vs 662-663); only facts are gated. Authors enter the
     // dimension only with >=1 valid affiliation (`if aff_ids:` PIPE:653).
-    val affRows = Crossref.authorAffiliations(allWorks).cache()
+    val affRows = Materialize.disk(Crossref.authorAffiliations(allWorks))
     val occ = affRows
       .select("doi", "nombreLimpio", "nombreBusqueda", "orcid",
         "autorSecuencia")
@@ -80,26 +80,27 @@ object Pipeline {
       Seq("autores", "afiliaciones", "sedes_areas")
         .map(Warehouse.exists(spark, dir, _))
 
-    // Phase 1. EAGER localCheckpoint, not cache: phase 2's overwriteSwap
+    // Phase 1. EAGER lineage cut, not cache: phase 2's overwriteSwap
     // renames the very files these merged plans read — a best-effort
     // cache that loses blocks would recompute against a deleted
     // directory and die mid-run after facts were partially appended.
-    // The checkpoint cuts the lineage before the swap. Resolution runs
-    // inside its action: the surrogate-id step materialises eagerly.
+    // The cut happens before the swap. Resolution runs inside its
+    // action: the surrogate-id step materialises eagerly. The cuts are
+    // made on ParJobs threads and still register with this scope.
     val obras = gated.drop("author", "subject")
     val Seq(autores, afiliaciones) = ParJobs[Option[DataFrame]](
-      () => Some({
+      () => Some(Materialize.cut {
         val batch = Entities.resolveAuthors(occ)
         if (hasAutores) Entities.mergeAuthors(
           Warehouse.read(spark, dir, "autores"), batch)
         else batch.drop("entityKey")
-      }.localCheckpoint()),
-      () => Some({
+      }),
+      () => Some(Materialize.cut {
         val batch = Entities.resolveAffiliations(affRows)
         if (hasAfiliaciones) Entities.mergeAffiliations(
           Warehouse.read(spark, dir, "afiliaciones"), batch)
         else batch
-      }.localCheckpoint()),
+      }),
       // Facts — idempotent keyed appends (K1).
       write(Warehouse.idempotentAppend(spark, obras, dir, "obras",
         Seq("doi"), partitionCols = Seq("anio"))),
@@ -136,15 +137,8 @@ object Pipeline {
     ).flatten
 
     Warehouse.logRun(spark, dir, runId, "finish", pagesPath, n)
-    // release this batch's pinned state: per-batch caches would
-    // otherwise accumulate across ingest calls and evict each other;
-    // checkpoint blocks are pinned until driver GC (BUILD_NOTES), so
-    // their backing RDDs are unpersisted explicitly
-    Seq(allWorks, gated, affRows).foreach(_.unpersist())
-    Seq(autores, afiliaciones).foreach(
-      _.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false)))
+    // the scope releases this batch's three caches and two cuts, also
+    // when a phase throws
     n
   }
 

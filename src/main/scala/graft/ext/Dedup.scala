@@ -41,15 +41,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     graft.functions.ShingleFunctions.wordShingles(text, n)
 
-  /** Character n-gram shingles. */
-  def charShingles(text: Column, n: Int): Column = {
-    val s = trim(text)
-    when(length(s) >= n,
-      transform(sequence(lit(1), length(s) - (n - 1)),
-        i => s.substr(i, lit(n))))
-      .otherwise(array(s))
-  }
-
   // ------------------------------------------------------------------
   // MinHash
   // ------------------------------------------------------------------
@@ -818,30 +809,14 @@ object Dedup {
     * halves label-chain depth, giving O(log n) rounds on any topology
     * (a bare neighbor-propagation loop is O(diameter) and dies on long
     * chains). Every round is two equi-joins + one min-aggregate;
-    * lineage is truncated each round via [[Pin]] (executor-local by
-    * default; set a session checkpoint dir for the fault-tolerant
-    * reliable form) so the plan does not grow with the iteration
-    * count. For adversarial billion-edge graphs
+    * lineage is truncated each round via [[Materialize.cut]]
+    * (executor-local by default; set a session checkpoint dir for the
+    * fault-tolerant reliable form) so the plan does not grow with the
+    * iteration count. For adversarial billion-edge graphs
     * the same fixpoint can be computed with alternating large-star /
     * small-star rounds (Kiveris et al., "Connected Components in
     * MapReduce", SoCC'14) with fewer skewed shuffles.
     */
-  /** Release a [[Pin]]ned frame's executor blocks. A local checkpoint
-    * pins its materialized RDD for the lifetime of the driver
-    * reference — in an iterative loop the superseded rounds would pile
-    * up in the block store. Only call once nothing can re-read the frame
-    * (a local checkpoint cannot be recomputed). Under Pin's RELIABLE
-    * mode (session checkpoint dir set) the RDD is unpersisted-harmless
-    * — its blocks live as files in the checkpoint dir, whose lifecycle
-    * is the session's (see [[Pin]] cleanup notes).
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Min-rooted union-find over a collected edge list — the local fast
     * path for cluster assignment. Near-dup pair graphs are TINY relative
     * to the corpus (edges ≈ duplicate pairs, not documents), so the
@@ -903,9 +878,9 @@ object Dedup {
     }
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct().transform(Pin(_))
+      .distinct().transform(Materialize.cut)
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")).transform(Pin(_))
+      .withColumn("cluster", col("id")).transform(Materialize.cut)
 
     // one round: (1) min-label propagation along edges, (2) pointer
     // jumping (cluster := cluster of the cluster node — label values are
@@ -920,11 +895,11 @@ object Dedup {
       propagated
         .join(parents, propagated("cluster") === parents("p_id"))
         .select(col("id"), col("p_cluster").as("cluster"))
-        .transform(Pin(_))
+        .transform(Materialize.cut)
     }
     def step(): Unit = {
       val next = round(labels)
-      freeCheckpoint(labels)
+      Materialize.free(labels)
       labels = next
     }
     // At the fixpoint every component is uniformly labeled with its min
@@ -961,7 +936,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"dedupClusters: not converged after $maxIter rounds — raise maxIter")
-    freeCheckpoint(edges)
+    Materialize.free(edges)
     labels
   }
 
@@ -998,7 +973,7 @@ object Dedup {
     var edges = init
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct().transform(Pin(_))
+      .distinct().transform(Materialize.cut)
 
     def round(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -1015,7 +990,7 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(mSmall.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
-      children.transform(Pin(_))
+      children.transform(Materialize.cut)
     }
 
     var iter = 0
@@ -1032,7 +1007,7 @@ object Dedup {
             next.count() == edges.count()
         nextProbe *= 2
       }
-      freeCheckpoint(edges)
+      Materialize.free(edges)
       edges = next
     }
     if (!converged)
@@ -1043,8 +1018,8 @@ object Dedup {
       .unionByName(edges.select(col("v").as("cluster")).distinct()
         .select(col("cluster").as("id"), col("cluster")))
     // materialize before freeing the edge blocks the plan reads
-    val out = labels.transform(Pin(_))
-    freeCheckpoint(edges)
+    val out = labels.transform(Materialize.cut)
+    Materialize.free(edges)
     out
   }
 
@@ -1302,36 +1277,6 @@ object Dedup {
         col("cos6"))
   }
 
-  /** The retired bucket-partitioned-window form of
-    * [[embeddingDedupGroups]] — kept ONLY as the equality witness
-    * (Round13Spec pins the groupBy+join-back rewrite bit-equal to it):
-    * `min(struct).over(Window.partitionBy(bucket))` funnels each
-    * bucket through one task's sort and ships every vector twice
-    * (row + window buffer), so a dense semantic cluster concentrating
-    * a bucket serializes regardless of nBits.
-    */
-  private[graft] def embeddingDedupGroupsWindowed(df: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      nBits: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bits = math.min(nBits, Similarity.MaxRpBits)
-    val t6 = math.floor(threshold * 1e6).toLong
-    val w = Window.partitionBy("bucket")
-    df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", Similarity.l2norm(col("v")))
-      .withColumn("bucket", Similarity.rpBucket(col("v"), bits))
-      .withColumn("rep",
-        min(struct(col("id"), col("v"), col("nrm"))).over(w))
-      .withColumn("cos6",
-        when(col("nrm") > 0 && col("rep.nrm") > 0,
-          floor(Similarity.dot(col("v"), col("rep.v")) /
-            (col("nrm") * col("rep.nrm")) * lit(1e6)).cast("long")))
-      .select(col("id"),
-        when(col("cos6") >= t6, col("rep.id")).otherwise(col("id"))
-          .as("group_rep"),
-        col("cos6"))
-  }
-
   // ------------------------------------------------------------------
   // Exact set-similarity join (prefix filter)
   // ------------------------------------------------------------------
@@ -1380,16 +1325,15 @@ object Dedup {
     // persisted: `ranked` feeds the candidate path AND both verify
     // sides, and Spark recomputes an aliased subplan per self-join side
     // (no cross-alias exchange reuse — see ReuseCheck) — unpersisted
-    // this whole build ran 3x. The bench's clearCache() between queries
-    // releases it; callers embedding this in a longer pipeline release
-    // it (with every other operator cache) via OpCaches.release().
+    // this whole build ran 3x. The enclosing Materialize.scope (each
+    // bench query, each pipeline stage) releases it.
     val ranked = tokf.join(vocab, "s")
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("dfc"), col("s")))).as("srt"))
       .select(col("id"),
         transform(col("srt"), x => x.getField("s")).as("sh"),
         size(col("srt")).as("sz"))
-      .transform(OpCaches.pinDisk)
+      .transform(Materialize.disk)
     // overlap bound ⌈τ·sz⌉ = (tauNum·sz + tauDen - 1) div tauDen
     val oMin = floor((col("sz") * tauNum + (tauDen - 1))
       .cast("double") / tauDen).cast("int")
@@ -1494,9 +1438,8 @@ object Dedup {
     // persisted: feeds the tuple-key bucket pass plus the two
     // single-gram families, and Spark re-plans an aliased subplan per
     // consumer (same no-cross-alias-reuse reality as setSimJoin's
-    // ranked — unpersisted this whole build ran 4x). The bench's
-    // clearCache() between queries releases it; callers embedding this
-    // in longer pipelines release it via OpCaches.release().
+    // ranked — unpersisted this whole build ran 4x). The enclosing
+    // Materialize.scope releases it.
     val ranked = grams.join(gdf, "g")
       .groupBy("id")
       .agg(slice(sort_array(collect_list(struct(col("dfc"), col("g")))),
@@ -1504,7 +1447,7 @@ object Dedup {
       .select(col("id"),
         transform(col("pgx"), x => x.getField("g")).as("pg"),
         size(col("pgx")).as("np"))
-      .transform(OpCaches.pinDisk)
+      .transform(Materialize.disk)
     // rich strings (np == p): the c smallest shared grams of any
     // qualifying pair are a c-subset of BOTH prefixes -> tuple keys
     val combos = (0 until p).combinations(c).toSeq

@@ -36,9 +36,9 @@ object Graph {
     *   r'(v)    = (3*RankScale div 20) div N  +  17*inflow(v) div 20
     *
     * The expensive part — aggregating a 100 TB fact table down to the
-    * edge list — happens ONCE and is pinned via [[Pin]] (executor-local by
-    * default; a session checkpoint dir makes it a RELIABLE checkpoint
-    * so a lost executor can't kill a long run), so
+    * edge list — happens ONCE and is pinned via [[Materialize.cut]]
+    * (executor-local by default; a session checkpoint dir makes it a
+    * RELIABLE checkpoint so a lost executor can't kill a long run), so
     * the `iters` tiny join+agg rounds iterate over the materialized
     * edges, not the upstream plan. The only driver actions are the
     * checkpoint and one node count; ranks stay distributed throughout.
@@ -52,9 +52,9 @@ object Graph {
       .join(outw, col(srcCol) === col("__src"))
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         expr(s"$wCol * ${ProbScale}L div __outw").as("p"))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct().transform(Pin(_))
+      .union(e.select(col("dst"))).distinct().transform(Materialize.cut)
     val n = nodes.count()
     require(n > 0, "pageRank: empty edge list — no nodes to rank " +
       "(would otherwise surface as a bare divide-by-zero)")
@@ -97,15 +97,16 @@ object Graph {
       .join(outw, col(srcCol) === col("__src"))
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         expr(s"$wCol * ${ProbScale}L div __outw").as("p"))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
     // seeds restricted to graph nodes: restart mass must stay in the
     // component the walk can actually reach
     val seeds = sources.select(col(sources.columns.head).as("node"))
       .distinct().join(nodes, Seq("node"), "left_semi")
-      .withColumn("__seed", lit(1)).transform(Pin(_))
-    val flagged = nodes.join(seeds, Seq("node"), "left").transform(Pin(_))
+      .withColumn("__seed", lit(1)).transform(Materialize.cut)
+    val flagged = nodes.join(seeds, Seq("node"), "left")
+      .transform(Materialize.cut)
     val nS = seeds.count()
     require(nS > 0, "personalizedPageRank: no seed is a graph node")
     val base = (3L * RankScale / 20L) / nS
@@ -150,15 +151,15 @@ object Graph {
     * degenerates.
     *
     * Scale shape: the edge list is aggregated and pinned ONCE
-    * ([[Pin]] — reliable checkpoint when the session has a checkpoint
-    * dir); each of the `iters` rounds is two keyed join+agg steps
-    * plus two 1-row max aggregates that ride as broadcast cross
+    * ([[Materialize.cut]] — reliable checkpoint when the session has a
+    * checkpoint dir); each of the `iters` rounds is two keyed join+agg
+    * steps plus two 1-row max aggregates that ride as broadcast cross
     * joins. Unlike [[pageRank]]'s LINEAR recurrence (each round's
     * ranks feed exactly one consumer, so the lazy plan stays a
     * chain), each raw score table here feeds TWO consumers — its max
     * and its normalized select — so an un-pinned plan would double
     * per half-step and recompute the base joins 4^iters times; the
-    * raw tables are therefore [[Pin]]ned every round (2·iters bounded
+    * raw tables are therefore cut every round (2·iters bounded
     * materializations, the same per-round lineage discipline as
     * [[kcore]]/[[bfs]]). Scores stay distributed; zero/negative-
     * weight edges are dropped at entry (they contribute nothing and
@@ -174,9 +175,9 @@ object Graph {
     val e = edges.filter(col(wCol) > 0)
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w"))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct().transform(Pin(_))
+      .union(e.select(col("dst"))).distinct().transform(Materialize.cut)
     require(nodes.count() > 0,
       "hits: empty edge list — no nodes to score")
     var hub = nodes.select(col("node"), lit(ProbScale).as("h"))
@@ -184,14 +185,14 @@ object Graph {
     for (_ <- 1 to iters) {
       val rawA = e.join(hub, e("src") === hub("node"))
         .groupBy(col("dst")).agg(sum(d(col("w")) * col("h")).as("__raw"))
-        .transform(Pin(_))
+        .transform(Materialize.cut)
       val mA = rawA.agg(max(col("__raw")).as("__mx"))
       auth = rawA.crossJoin(broadcast(mA))
         .select(col("dst").as("node"),
           expr(s"(__raw * ${ProbScale}L) div __mx").as("a"))
       val rawH = e.join(auth, e("dst") === auth("node"))
         .groupBy(col("src")).agg(sum(d(col("w")) * col("a")).as("__raw"))
-        .transform(Pin(_))
+        .transform(Materialize.cut)
       val mH = rawH.agg(max(col("__raw")).as("__mx"))
       hub = rawH.crossJoin(broadcast(mH))
         .select(col("src").as("node"),
@@ -220,8 +221,8 @@ object Graph {
     * makes an iterative operator hash-gradeable.
     *
     * Scale shape: the symmetrized edge list is materialized ONCE
-    * ([[Pin]], same discipline as [[pageRank]]); every round
-    * is equi-joins + one partial-agg count keyed by node id — no
+    * ([[Materialize.cut]], same discipline as [[pageRank]]); every
+    * round is equi-joins + one partial-agg count keyed by node id — no
     * driver-side state, no growing lineage re-execution. Alive-set
     * size only shrinks.
     */
@@ -233,14 +234,14 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
     val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     def degrees(alive: DataFrame): DataFrame =
       sym.join(alive.select(col("node").as("u")), "u")
         .join(alive.select(col("node").as("v")), "v")
         .groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     // Each round consumes `alive` TWICE (u-side and v-side semi-join),
     // so an unchecked lineage doubles per round — 2^rounds copies of
-    // the first peel in the final plan. Pin every round's survivor
+    // the first peel in the final plan. Cut every round's survivor
     // list eagerly; each checkpoint is a node-id list that only
     // shrinks, so the per-round materialization is tiny. Peeling is
     // monotone, so a round that drops NOBODY is the fixpoint — every
@@ -248,13 +249,13 @@ object Graph {
     // makes the count a free read, and the early exit returns exactly
     // the `rounds`-peel answer).
     var alive = sym.select(col("u").as("node")).distinct()
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     var n = alive.count()
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
       alive = degrees(alive).filter(col("deg") >= k).select("node")
-        .transform(Pin(_))
+        .transform(Materialize.cut)
       val n2 = alive.count()
       converged = n2 == n
       n = n2
@@ -270,9 +271,9 @@ object Graph {
     * each round expands ONLY the nodes discovered last round (the
     * classic BFS work bound — Σ frontier degrees, not rounds·|E|),
     * anti-joins the visited set, and pins each round's DISCOVERED set
-    * with an eager [[Pin]]; the visited set itself stays a union of
-    * those pinned leaves (r16 — linear lineage, no per-round rewrite
-    * of the whole cumulative table).
+    * with an eager [[Materialize.cut]]; the visited set itself stays a
+    * union of those pinned leaves (r16 — linear lineage, no per-round
+    * rewrite of the whole cumulative table).
     * Semantics are "distance ≤ rounds, else absent" — deterministic
     * for any round budget, which keeps the iterative operator
     * hash-gradeable on every engine.
@@ -285,9 +286,9 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
     val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     var dist = sources.select(col(sources.columns.head).as("node"))
-      .distinct().withColumn("dist", lit(0L)).transform(Pin(_))
+      .distinct().withColumn("dist", lit(0L)).transform(Materialize.cut)
     var frontier = dist.select("node")
     var i = 0
     var exhausted = false
@@ -300,13 +301,13 @@ object Graph {
         .select(col("v").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .withColumn("dist", lit(i.toLong))
-        .transform(Pin(_))
+        .transform(Materialize.cut)
       exhausted = discovered.isEmpty
       if (!exhausted) {
         // r16: the cumulative table is a UNION OF PINNED LEAVES, not a
         // re-pinned copy — each round's discovered set is pinned once
         // (above) and never re-materialized. The old per-round
-        // Pin(dist ∪ discovered) rewrote EVERY arrived node's block
+        // cut(dist ∪ discovered) rewrote EVERY arrived node's block
         // again each round (O(rounds·|V|) checkpoint writes at scale;
         // one driver job per round at sf0.1); the union tree's lineage
         // grows only linearly in rounds (each leaf is a checkpoint
@@ -340,9 +341,9 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .distinct()
     val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Pin(_))
+      .transform(Materialize.cut)
     var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).transform(Pin(_))
+      .withColumn("label", col("node")).transform(Materialize.cut)
     val w = Window.partitionBy("node")
       .orderBy(col("__c").desc, col("label").asc)
     // (A max_by(label, (count, −label)) struct variant was measured and
@@ -430,9 +431,9 @@ object Graph {
       .select(col(srcCol).as("u"), col(dstCol).as("v"),
         col(tCol).cast("long").as("t"))
     val sym = dir.union(dir.select(col("v"), col("u"), col("t")))
-      .distinct().transform(Pin(_))
+      .distinct().transform(Materialize.cut)
     var arr = sources.select(col(sources.columns.head).as("node"))
-      .distinct().withColumn("arr", lit(0L)).transform(Pin(_))
+      .distinct().withColumn("arr", lit(0L)).transform(Materialize.cut)
     var frontier = arr
     for (_ <- 1 to rounds) {
       val cand = sym
@@ -442,7 +443,7 @@ object Graph {
         .select(col("v").as("node"), col("t").as("arr"))
       val next = arr.union(cand)
         .groupBy("node").agg(min(col("arr")).as("arr"))
-        .transform(Pin(_))
+        .transform(Materialize.cut)
       frontier = next
         .join(arr.withColumnRenamed("arr", "__prev"), Seq("node"), "left")
         .filter(col("__prev").isNull || col("arr") < col("__prev"))
@@ -476,10 +477,10 @@ object Graph {
     // q95), so each is pinned once: the edge-scale tables with the
     // disk-degradable level (the setSimJoin discipline — recompute is
     // a corpus-scale build), the node-sized degree table MEMORY_ONLY.
-    val und = OpCaches.pinDisk(edges.filter(a =!= b)
+    val und = Materialize.disk(edges.filter(a =!= b)
       .select(least(a, b).as("u"), greatest(a, b).as("v"))
       .distinct())
-    val deg = OpCaches.pin(und.select(col("u").as("node"))
+    val deg = Materialize.memory(und.select(col("u").as("node"))
       .union(und.select(col("v")))
       .groupBy("node").agg(count(lit(1)).as("deg")))
     // total order: (deg, node) — ties broken by id, so the orientation
@@ -487,7 +488,7 @@ object Graph {
     val withDeg = und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-    val oriented = OpCaches.pinDisk(withDeg.select(
+    val oriented = Materialize.disk(withDeg.select(
       when(col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v")),
         struct(col("u").as("lo"), col("v").as("hi")))

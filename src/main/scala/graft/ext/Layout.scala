@@ -447,21 +447,12 @@ object Layout {
       // listing-sized rows) so the stats collects overlap with other
       // components' rewrites instead of running as one trailing job,
       // and the sidecar is assembled on the driver with no extra scan.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(comps.size, 8))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val rewriteJobs = comps.zipWithIndex.map { case (comp, ci) =>
-        // The Either is produced INSIDE the future body under a
-        // catch-Throwable: Future.apply only converts NonFatal into a
-        // failed future — a fatal error in a rewrite job (OOM,
-        // StackOverflowError) would otherwise unwind the pool thread
-        // with the promise never completed, and the Duration.Inf await
-        // below would hang forever instead of surfacing the failure.
-        Future {
-          try Right {
+      // ParJobs settles every rewrite before it rethrows the first
+      // failure (the others attached as suppressed), so no component is
+      // still writing when control returns or a retry deletes the
+      // .compact tmp dir.
+      val freshRows = ParJobs(comps.zipWithIndex.map { case (comp, ci) =>
+        () => {
           val files = comp.map(i => zones(i).getString(0))
           val rows = comp.map(i => zones(i).getLong(3)).sum
           val nOut =
@@ -485,35 +476,8 @@ object Layout {
             .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
               count(lit(1)).as("rows"))
             .collect().toSeq
-          } catch { case t: Throwable => Left(t) }
         }
-      }
-      // Await EVERY job before inspecting failures: rethrowing on the
-      // first failed component while siblings are still writing would
-      // hand control back (and, on a retry, delete the .compact tmp
-      // dir) underneath in-flight jobs. The catch is Throwable — NOT
-      // NonFatal — because an InterruptedException mid-loop must not
-      // skip the remaining awaits either (the interrupt is re-asserted
-      // below instead). After this loop no component work is in
-      // flight, whatever happened.
-      val outcomes =
-        try rewriteJobs.map { f =>
-          try Await.result(f, Duration.Inf)
-          catch { case t: Throwable => Left(t) }
-        } finally pool.shutdown()
-      val failures = outcomes.collect { case Left(t) => t }
-      if (failures.nonEmpty) {
-        // surface EVERY component's root cause, not just the first
-        failures.tail.filter(_ ne failures.head)
-          .foreach(failures.head.addSuppressed)
-        if (failures.exists(_.isInstanceOf[InterruptedException]))
-          Thread.currentThread().interrupt()
-        throw failures.head
-      }
-      val freshRows = outcomes.flatMap {
-        case Right(rows) => rows
-        case Left(_) => Nil
-      }
+      }: _*).flatten
       // ORDER OF COMMIT: the rewritten files are invisible until the
       // sidecar lists them, so the new sidecar commits FIRST and the
       // victim data files are deleted only after — a crash anywhere in
@@ -666,7 +630,7 @@ object Layout {
     // bit-exact
     val dv = df.select(col(c).as("value")).filter(col("value").isNotNull)
       .distinct()
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val n = dv.count()
     if (n <= maxSingleTask)
       dv.withColumn("code",

@@ -59,7 +59,7 @@ object Mining {
       .agg(graft.functions.BoundedCollect.boundedCollectSet(
         col("__i"), maxBasketSize.toLong,
         "assocRules (maxBasketSize)").as("__is"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val nBaskets = sets.agg(count(lit(1)).as("__nb")).collect().head
       .getLong(0)
     val pairs = sets

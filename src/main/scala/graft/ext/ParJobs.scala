@@ -14,20 +14,27 @@ package graft.ext
   * writes derived independently from the same input). Blocks until
   * every action completes and returns their results in argument order;
   * the first failure rethrows its original exception (unwrapped), after
-  * the others finish or fail, so error semantics match the sequential
-  * form. Each call starts its threads from the caller's, so the jobs
-  * carry the caller's job group and local properties.
+  * the others finish or fail, with every later failure attached as
+  * suppressed, so error semantics match the sequential form and no
+  * root cause is lost. At most [[MaxThreads]] actions run at once; the
+  * rest queue. Each call starts its threads from the caller's, so the
+  * jobs carry the caller's job group and local properties, and pins
+  * register with the caller's [[Materialize.scope]].
   *
   * Callers: `Dedup.writeIndexAs` (bands ∥ shingles), `Index.writeSegment`
-  * (postings ∥ manifest), and `Pipeline.ingest`/`integrateCatalog`/
+  * (postings ∥ manifest), `Layout.zoneCompact` (one rewrite per overlap
+  * component), and `Pipeline.ingest`/`integrateCatalog`/
   * `buildFlatView`, whose per-stage phases are listed in `Pipeline`.
   */
 private[graft] object ParJobs {
+  /** Threads one call starts at most. */
+  val MaxThreads = 8
+
   def apply[A](thunks: (() => A)*): Seq[A] = {
     require(thunks.nonEmpty, "ParJobs: no actions")
     if (thunks.size == 1) return Seq(thunks.head())
-    val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(thunks.size, MaxThreads))
     try {
       val futs = thunks.map { t =>
         pool.submit(new java.util.concurrent.Callable[A] {
@@ -35,15 +42,18 @@ private[graft] object ParJobs {
         })
       }
       var firstErr: Throwable = null
+      def fail(e: Throwable): Unit =
+        if (firstErr == null) firstErr = e
+        else if (e ne firstErr) firstErr.addSuppressed(e)
       var interrupt: InterruptedException = null
       futs.foreach { f =>
         if (interrupt == null) {
           try f.get()
           catch {
             case e: java.util.concurrent.ExecutionException =>
-              if (firstErr == null) firstErr = e.getCause
+              fail(e.getCause)
             case e: java.util.concurrent.CancellationException =>
-              if (firstErr == null) firstErr = e
+              fail(e)
             case e: InterruptedException =>
               // caller interrupted: cancel the in-flight thunks (their
               // threads get interrupted) and fall through to the

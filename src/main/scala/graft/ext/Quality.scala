@@ -314,7 +314,7 @@ object Quality {
     // below — feeds the guard count, the N/m collect, and the spine
     // join, so cache it (MEMORY_ONLY: LRU-bounded, recompute exact)
     val global = base.groupBy("__v").agg(count(lit(1)).as("__gc"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val m = global.count()
     require(m <= maxDomain,
       s"tCloseness: sensitive domain has $m values, exceeding " +

@@ -121,7 +121,7 @@ object Sketches {
       .agg(udaf(new KmvSketchAggregator(k), Encoders.scalaDouble)
         .apply(Sampling.hashCoord(value)).as("__sk"))
       .select(col("g"), explode(col("__sk")).as("h"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val gs = sk.select("g").distinct()
     val nGroups = gs.count()
     require(nGroups <= maxGroups,

@@ -50,28 +50,6 @@ object Skew {
     require(!keys.contains("__shard"), "__shard cannot be a join/group key")
   }
 
-  /** Skew-safe equi-join of a big, skew-keyed left side against a right
-    * side that is modest but still too big (or too dynamic) to
-    * broadcast: left rows are salted into `salt` shards by a
-    * deterministic hash of `saltFrom` (pick a high-cardinality column —
-    * a row id, an event id), the right side is replicated once per
-    * shard, and the join key becomes (keys…, shard). A hot key's rows
-    * land on `salt` reducers instead of one; the result is exactly the
-    * plain equi-join (asserted in SkewSpec). Cost: right side is
-    * shuffled `salt`×.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-      saltFrom: Column, salt: Int = 16): DataFrame = {
-    require(salt > 0, s"salt must be positive, got $salt")
-    checkShardFree(big, keys)
-    checkShardFree(small, keys)
-    val b = big.withColumn("__shard",
-      pmod(xxhash64(saltFrom), lit(salt)).cast("int"))
-    val s = small.withColumn("__shard",
-      explode(sequence(lit(0), lit(salt - 1))))
-    b.join(s, keys :+ "__shard").drop("__shard")
-  }
-
   /** Two-phase skew-safe aggregation for aggregates WITHOUT map-side
     * combine (exact distincts, collect_set/list): phase 1 aggregates
     * per (keys…, shard) so a hot key's state is built on `salt`

@@ -235,14 +235,13 @@ object Stats {
     // blocks would accumulate until session end. No inline unpersist:
     // the returned (lazy) frame still reads it; correctness never
     // depends on the cache (every number is exact arithmetic, so an
-    // evicted block's recompute reproduces it bit-for-bit). The pin
-    // registers the cache with OpCaches so long-running sessions can
-    // release every operator cache deterministically
-    // (OpCaches.release) instead of accumulating block-manager
-    // entries until session end.
+    // evicted block's recompute reproduces it bit-for-bit). The
+    // enclosing Materialize.scope (each bench query, each pipeline
+    // stage) releases it, so a long session does not accumulate
+    // block-manager entries until session end.
     val merged = ca.join(cb, Seq("v"), "full_outer")
       .na.fill(0L, Seq("na", "nb"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val n = merged.count()
     if (n <= maxSingleTask) {
       // measured-small support: one window task holding ≤ maxSingleTask
@@ -530,7 +529,7 @@ object Stats {
       .groupBy("cat")
       .agg(count(lit(1)).as("__ncat"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("n11"))
-      .localCheckpoint()
+      .transform(Materialize.cut)
     val tot = counts.agg(sum(col("__ncat")).as("__n"),
       sum(col("n11")).as("__pos"))
     val d = (c: Column) => c.cast("decimal(38,0)")
@@ -579,7 +578,7 @@ object Stats {
     val baskets = df.filter(col(itemCol).isNotNull)
       .groupBy(col(basketCol))
       .agg(sort_array(collect_set(col(itemCol))).as("__items"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val pairs = baskets
       .select(explode(expr(
         """flatten(transform(__items, (a, i) ->
@@ -619,7 +618,7 @@ object Stats {
     // numericDrift's support table (MEMORY_ONLY: LRU-bounded,
     // recompute bit-exact)
     val perX = rows.groupBy(col(xCol)).agg(max(col(yCol)).as("__my"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     // MEASURED small-support branch — see numericDrift for rationale;
     // the running-max window's input is ≤ maxSingleTask rows here
     val nX = perX.count()
@@ -700,7 +699,7 @@ object Stats {
     // (MEMORY_ONLY: LRU-bounded, recompute bit-exact)
     val merged = ca.join(cb, Seq("__v"), "full_outer")
       .na.fill(0L, Seq("__na", "__nb"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val n = merged.count()
     if (n <= maxSingleTask) {
       val wc = Window.orderBy("__v")
@@ -976,7 +975,7 @@ object Stats {
       .groupBy(col(groupCol), col("__s"))
       .agg(sum(col("__p")).as("__pos"),
         (count(lit(1)) - sum(col("__p"))).as("__neg"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     groupedCumBelow(support, Seq(groupCol), "__s", Seq("__neg"),
         maxSingleTask)
       .groupBy(col(groupCol))
@@ -1024,7 +1023,7 @@ object Stats {
     def ranks2(vc: String, out: String): DataFrame = {
       val sup = rows.groupBy(col(groupCol), col(vc).as("__v"))
         .agg(count(lit(1)).as("__t"))
-        .transform(OpCaches.pin)
+        .transform(Materialize.memory)
       groupedCumBelow(sup, Seq(groupCol), "__v", Seq("__t"),
           maxSingleTask)
         .select(col(groupCol), col("__v").as(vc),
@@ -1112,7 +1111,7 @@ object Stats {
     // exact: within a rel run the positions are a permutation and the
     // weights sum over the same position set (Round16Spec pins it on
     // randomized inputs including ties across the k boundary).
-    val relSup = OpCaches.pin(
+    val relSup = Materialize.memory(
       base.groupBy(col(groupCol), negate(col("__rel")).as("__nr"))
         .agg(count(lit(1)).as("__c")))
     val wPrefix = ndcgWeights(k).scanLeft(0L)(_ + _)
@@ -1217,13 +1216,13 @@ object Stats {
     * denominator is ≤ 0 (P̄e = 1: all mass in one category).
     */
   def fleissKappa(df: DataFrame, itemCol: String, raterCol: String,
-      catCol: String): DataFrame = {
+      catCol: String): DataFrame = Materialize.scope {
     val spark = df.sparkSession
     import spark.implicits._
     val nic = df.select(col(itemCol).as("__i"), col(raterCol).as("__r"),
         col(catCol).as("__c"))
       .groupBy("__i", "__c").agg(count(lit(1)).as("__n"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val perItem = nic.groupBy("__i")
       .agg(sum(col("__n")).as("__ni"),
         sum(col("__n").cast("decimal(38,0)") * col("__n")).as("__s2i"))
@@ -1235,35 +1234,34 @@ object Stats {
     val nDist = perItem.groupBy("__ni").agg(count(lit(1)).as("__cnt"),
         sum(col("__s2i")).as("__s2"))
       .limit(2).collect()
-    if (nDist.isEmpty) { // empty input: degenerate 1-row, all null
-      nic.unpersist()
-      return Seq((0L, 0L, Option.empty[Long], Option.empty[Long],
+    if (nDist.isEmpty) // empty input: degenerate 1-row, all null
+      Seq((0L, 0L, Option.empty[Long], Option.empty[Long],
         Option.empty[Long]))
         .toDF("n_items", "n_raters", "pbar_ppm", "pe_ppm", "kappa_ppm")
+    else {
+      require(nDist.length == 1,
+        "fleissKappa: every item must have the same rater count (got " +
+          s">= 2 distinct counts, e.g. ${nDist.map(_.get(0)).mkString(", ")})")
+      val n = nDist.head.getLong(0)
+      require(n >= 2, s"fleissKappa: need >= 2 raters per item (got $n)")
+      val nItems = nDist.head.getLong(1) // Σ items, same collected row
+      val s2 = BigInt(nDist.head.getDecimal(2).toBigInteger)
+      val tc = nic.groupBy("__c").agg(sum(col("__n")).as("__t"))
+        .agg(sum(col("__t").cast("decimal(38,0)") * col("__t")).as("__tt"))
+        .collect().head.getDecimal(0)
+      val c = BigInt(tc.toBigInteger)
+      val bigN = BigInt(nItems) * n
+      val a = s2 - bigN
+      val b = bigN * (n - 1)
+      val dd = bigN * bigN
+      def ppm(num: BigInt, den: BigInt): Option[Long] =
+        if (den > 0) Some(((num.abs * 1000000 / den) * num.signum).toLong)
+        else None
+      val kNum = a * dd - b * c
+      val kDen = b * (dd - c)
+      Seq((nItems, n, ppm(a, b), ppm(c, dd), ppm(kNum, kDen)))
+        .toDF("n_items", "n_raters", "pbar_ppm", "pe_ppm", "kappa_ppm")
     }
-    require(nDist.length == 1,
-      "fleissKappa: every item must have the same rater count (got " +
-        s">= 2 distinct counts, e.g. ${nDist.map(_.get(0)).mkString(", ")})")
-    val n = nDist.head.getLong(0)
-    require(n >= 2, s"fleissKappa: need >= 2 raters per item (got $n)")
-    val nItems = nDist.head.getLong(1) // Σ items, same collected row
-    val s2 = BigInt(nDist.head.getDecimal(2).toBigInteger)
-    val tc = nic.groupBy("__c").agg(sum(col("__n")).as("__t"))
-      .agg(sum(col("__t").cast("decimal(38,0)") * col("__t")).as("__tt"))
-      .collect().head.getDecimal(0)
-    nic.unpersist()
-    val c = BigInt(tc.toBigInteger)
-    val bigN = BigInt(nItems) * n
-    val a = s2 - bigN
-    val b = bigN * (n - 1)
-    val dd = bigN * bigN
-    def ppm(num: BigInt, den: BigInt): Option[Long] =
-      if (den > 0) Some(((num.abs * 1000000 / den) * num.signum).toLong)
-      else None
-    val kNum = a * dd - b * c
-    val kDen = b * (dd - c)
-    Seq((nItems, n, ppm(a, b), ppm(c, dd), ppm(kNum, kDen)))
-      .toDF("n_items", "n_raters", "pbar_ppm", "pe_ppm", "kappa_ppm")
   }
 
   /** EXACT per-group quantiles at corpus scale — the third point on
@@ -1293,7 +1291,7 @@ object Stats {
       .filter(col("__v").isNotNull)
       .groupBy(col(groupCol), col("__v"))
       .agg(count(lit(1)).as("__c"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     quantilesFromSupport(support, groupCol, qPpm, maxSingleTask)
   }
 
@@ -1343,7 +1341,7 @@ object Stats {
       .filter(col("value").isNotNull)
       .groupBy(col(groupCol), col("value"))
       .agg(count(lit(1)).as("cnt"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val totals = support.groupBy(col(groupCol))
       .agg(sum(col("cnt")).as("n"))
     groupedCumBelow(support, Seq(groupCol), "value", Seq("cnt"),
@@ -1385,7 +1383,7 @@ object Stats {
       .filter(col("__v").isNotNull)
       .groupBy(col("__v")).agg(count(lit(1)).as("__c"))
       .withColumn("__g", lit(1))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val d = (c: Column) => c.cast("decimal(38,0)")
     groupedCumBelow(support, Seq("__g"), "__v", Seq("__c"),
         maxSingleTask)
@@ -1438,12 +1436,12 @@ object Stats {
       .filter(col("__v").isNotNull)
       .groupBy(col(groupCol), col("__v"))
       .agg(count(lit(1)).as("__c"))
-      .transform(OpCaches.pin)
-    val med = OpCaches.pin( // |groups| rows; consumed twice
+      .transform(Materialize.memory)
+    val med = Materialize.memory( // |groups| rows; consumed twice
       quantilesFromSupport(support, groupCol, Seq(500000L),
         maxSingleTask)
         .select(col(groupCol), col("value").as("median")))
-    val devSupport = OpCaches.pin(
+    val devSupport = Materialize.memory(
       support.join(med, groupCol)
         .select(col(groupCol),
           abs(col("__v") - col("median")).as("__v"), col("__c"))
@@ -1486,7 +1484,7 @@ object Stats {
       .filter(col("__v").isNotNull)
       .groupBy(col(groupCol), col("__v"))
       .agg(count(lit(1)).as("__c"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val bounds = support.groupBy(col(groupCol))
       .agg(sum(col("__c")).as("n"))
       .withColumn("__lo", expr(
@@ -1534,13 +1532,13 @@ object Stats {
     */
   def krippendorffAlpha(df: DataFrame, itemCol: String,
       raterCol: String, catCol: String,
-      maxDistinctM: Int = 1000): DataFrame = {
+      maxDistinctM: Int = 1000): DataFrame = Materialize.scope {
     val spark = df.sparkSession
     import spark.implicits._
     val nic = df.select(col(itemCol).as("__i"), col(raterCol).as("__r"),
         col(catCol).as("__c"))
       .groupBy("__i", "__c").agg(count(lit(1)).as("__n"))
-      .transform(OpCaches.pin)
+      .transform(Materialize.memory)
     val perItem = nic.groupBy("__i")
       .agg(sum(col("__n")).as("__m"),
         sum(col("__n").cast("decimal(38,0)") * col("__n")).as("__s2"))
@@ -1555,37 +1553,38 @@ object Stats {
         "counts — raise maxDistinctM deliberately")
     def nullRow = Seq((0L, 0L, Option.empty[Long]))
       .toDF("n_items", "n_values", "alpha_ppm")
-    if (byM.isEmpty) { nic.unpersist(); return nullRow }
-    val nItems = byM.map(_.getLong(1)).sum
-    val nn = byM.map(r => r.getLong(0) * r.getLong(1)).map(BigInt(_)).sum
-    val sc2 = BigInt(nic
-      .join(perItem.select(col("__i")), "__i") // pairable items only
-      .groupBy("__c").agg(sum(col("__n")).as("__t"))
-      .agg(coalesce(sum(col("__t").cast("decimal(38,0)") * col("__t")),
-        lit(0).cast("decimal(38,0)")).as("__sc2"))
-      .collect().head.getDecimal(0).toBigInteger)
-    nic.unpersist()
-    val d = nn * nn - sc2
-    // A = Σ_m S_m/(m−1) as an exact gcd-reduced fraction
-    var (aNum, aDen) = (BigInt(0), BigInt(1))
-    byM.foreach { r =>
-      val m = BigInt(r.getLong(0))
-      val sm = BigInt(r.getDecimal(2).toBigInteger)
-      val den = m - 1
-      aNum = aNum * den + sm * aDen
-      aDen = aDen * den
-      val g = aNum.gcd(aDen)
-      if (g > 1) { aNum /= g; aDen /= g }
-    }
-    val alpha: Option[Long] =
-      if (nn < 2 || d <= 0) None
-      else {
-        val num = d * aDen - (nn - 1) * aNum // α = num / (d·aDen)
-        val den = d * aDen
-        Some(((num.abs * 1000000 / den) * num.signum).toLong)
+    if (byM.isEmpty) nullRow
+    else {
+      val nItems = byM.map(_.getLong(1)).sum
+      val nn = byM.map(r => r.getLong(0) * r.getLong(1)).map(BigInt(_)).sum
+      val sc2 = BigInt(nic
+        .join(perItem.select(col("__i")), "__i") // pairable items only
+        .groupBy("__c").agg(sum(col("__n")).as("__t"))
+        .agg(coalesce(sum(col("__t").cast("decimal(38,0)") * col("__t")),
+          lit(0).cast("decimal(38,0)")).as("__sc2"))
+        .collect().head.getDecimal(0).toBigInteger)
+      val d = nn * nn - sc2
+      // A = Σ_m S_m/(m−1) as an exact gcd-reduced fraction
+      var (aNum, aDen) = (BigInt(0), BigInt(1))
+      byM.foreach { r =>
+        val m = BigInt(r.getLong(0))
+        val sm = BigInt(r.getDecimal(2).toBigInteger)
+        val den = m - 1
+        aNum = aNum * den + sm * aDen
+        aDen = aDen * den
+        val g = aNum.gcd(aDen)
+        if (g > 1) { aNum /= g; aDen /= g }
       }
-    Seq((nItems, nn.toLong, alpha))
-      .toDF("n_items", "n_values", "alpha_ppm")
+      val alpha: Option[Long] =
+        if (nn < 2 || d <= 0) None
+        else {
+          val num = d * aDen - (nn - 1) * aNum // α = num / (d·aDen)
+          val den = d * aDen
+          Some(((num.abs * 1000000 / den) * num.signum).toLong)
+        }
+      Seq((nItems, nn.toLong, alpha))
+        .toDF("n_items", "n_values", "alpha_ppm")
+    }
   }
 
   /** Per-group Gini concentration of a non-negative integer value

@@ -523,7 +523,7 @@ object TextStats {
   val LocalVocabCharBudget: Long = 64L << 20
 
   def bpeMerges(df: DataFrame, textCol: String, nMerges: Int,
-      localVocabThreshold: Int = 100000): DataFrame = {
+      localVocabThreshold: Int = 100000): DataFrame = Materialize.scope {
     require(nMerges > 0, "bpeMerges: nMerges must be positive")
     val spark = df.sparkSession
     import spark.implicits._
@@ -531,7 +531,7 @@ object TextStats {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(concat(lit(" "), array_join(split(col("w"), ""), "  "),
         lit(" ")).as("s"), col("cnt"))
-      .persist()
+      .transform(Materialize.disk)
     // Gate on a cheap count + char total of the PERSISTED vocab (r15
     // advice): the previous limit(threshold+1).collect() shipped up to
     // ~1M (string, long) rows to the driver on EVERY call only to
@@ -550,44 +550,42 @@ object TextStats {
     val nWords = gate.getLong(0)
     val vocabChars = gate.getLong(1)
     if (nWords <= localVocabThreshold &&
-        vocabChars <= LocalVocabCharBudget) {
-      val localRows = vocab.collect()
-      vocab.unpersist()
-      return localBpeMerges(spark,
-        localRows.map(r => (r.getString(0), r.getLong(1))), nMerges)
-    }
-    var words = vocab
-    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var done = false
-    while (r <= nMerges && !done) {
-      val best = words
-        .select(col("cnt"), split(trim(col("s")), "  ").as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(0, size(t)-2), i -> named_struct('l', t[i], 'r', t[i+1]))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1).as[(String, String, Long)].collect()
-      if (best.isEmpty) done = true
-      else {
-        val (l, rr, c) = best.head
-        merges += ((r, l, rr, c))
-        val pat = " " + java.util.regex.Pattern.quote(l) + "  " +
-          java.util.regex.Pattern.quote(rr) + " "
-        val rep = java.util.regex.Matcher.quoteReplacement(s" $l$rr ")
-        val next = words
-          .select(regexp_replace(col("s"), pat, rep).as("s"), col("cnt"))
-          .persist()
-        next.count() // materialize before releasing the parent
-        words.unpersist()
-        words = next
+        vocabChars <= LocalVocabCharBudget)
+      localBpeMerges(spark,
+        vocab.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
+    else {
+      var words = vocab
+      val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+      var r = 1
+      var done = false
+      while (r <= nMerges && !done) {
+        val best = words
+          .select(col("cnt"), split(trim(col("s")), "  ").as("t"))
+          .filter(size(col("t")) >= 2)
+          .select(col("cnt"), explode(expr(
+            "transform(sequence(0, size(t)-2), i -> named_struct('l', t[i], 'r', t[i+1]))")).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("cnt")).as("c"))
+          .orderBy(col("c").desc, col("l").asc, col("r").asc)
+          .limit(1).as[(String, String, Long)].collect()
+        if (best.isEmpty) done = true
+        else {
+          val (l, rr, c) = best.head
+          merges += ((r, l, rr, c))
+          val pat = " " + java.util.regex.Pattern.quote(l) + "  " +
+            java.util.regex.Pattern.quote(rr) + " "
+          val rep = java.util.regex.Matcher.quoteReplacement(s" $l$rr ")
+          val next = words
+            .select(regexp_replace(col("s"), pat, rep).as("s"), col("cnt"))
+            .transform(Materialize.disk)
+          next.count() // materialize before releasing the parent
+          Materialize.free(words)
+          words = next
+        }
+        r += 1
       }
-      r += 1
+      merges.toSeq.toDF("round", "lhs", "rhs", "cnt")
     }
-    words.unpersist()
-    merges.toSeq.toDF("round", "lhs", "rhs", "cnt")
   }
 
   /** The driver-side merge loop behind [[bpeMerges]]'s size gate —

@@ -358,7 +358,7 @@ class ExtSpec extends SparkSpec {
 
   test("char shingles") {
     val sh = Seq("abcd").toDF("t")
-      .select(Dedup.charShingles($"t", 3)).as[Seq[String]].collect()
+      .select(SpecOnlyOps.charShingles($"t", 3)).as[Seq[String]].collect()
     assert(sh(0) == Seq("abc", "bcd"))
   }
 

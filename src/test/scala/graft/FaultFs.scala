@@ -48,6 +48,8 @@ object FaultFs {
   @volatile private var mode: Mode = Throw
   @volatile private var dead = false
   @volatile var fired = false
+  /** The paths of the step that failed, space-separated. */
+  @volatile var firedOn = ""
   private val seen = new AtomicInteger
 
   def arm(k: Int, m: Mode): Unit = {
@@ -63,6 +65,7 @@ object FaultFs {
     if (failAt > 0 && !paths.exists(_.toString.contains("/_temporary")) &&
         seen.incrementAndGet() == failAt) {
       fired = true
+      firedOn = paths.mkString(" ")
       mode match {
         case ReturnFalse => return false
         case Throw => throw new IOException(s"FaultFs: fault at step $failAt")

@@ -49,7 +49,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("exact media dups by content hash") {
-    val dups = Multimodal.exactMediaDups(items.toDF(), "mediaId", "content")
+    val dups = SpecOnlyOps.exactMediaDups(items.toDF(), "mediaId", "content")
     assert(dups.count() == 1)
     assert(dups.select("keep_id").as[Long].head() == 1L)
   }

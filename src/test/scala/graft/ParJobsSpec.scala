@@ -18,6 +18,31 @@ class ParJobsSpec extends SparkSpec {
     assert(got == Seq(10L, 3L, 7L))
   }
 
+  test("ParJobs runs more thunks than threads in argument order and " +
+      "attaches a later failure to the first as suppressed") {
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val got = ParJobs((0 until 12).map(i => () => {
+      val now = running.incrementAndGet()
+      peak.accumulateAndGet(now, (a, b) => math.max(a, b))
+      try { Thread.sleep((12 - i) * 5L); spark.range(i).count() }
+      finally running.decrementAndGet()
+    }): _*)
+    assert(got == (0 until 12).map(_.toLong))
+    assert(peak.get <= ParJobs.MaxThreads)
+    val first = new IllegalStateException("first")
+    val second = new IllegalArgumentException("second")
+    val e = intercept[IllegalStateException] {
+      ParJobs((0 until 12).map(i => () => {
+        if (i == 3) throw first
+        if (i == 9) throw second
+        i
+      }): _*)
+    }
+    assert(e eq first)
+    assert(e.getSuppressed.toSeq == Seq(second))
+  }
+
   test("a job submitted inside ParJobs carries the caller's job group " +
       "and local properties") {
     val sc = spark.sparkContext

@@ -37,6 +37,48 @@ class PipelineFaultSpec extends FaultFsSpec {
     tables.map(t => t -> Warehouse.read(spark, d, t).collect()
       .map(_.toString).sorted.toSeq).toMap
 
+  /** Persisted RDDs `body` left behind that were not there before. */
+  private def leftBy(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    sc.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  test("a successful ingest, base or incremental, leaves no persisted RDD") {
+    val d = freshDir()
+    assert(leftBy(Pipeline.ingest(spark, pages + "/page1.jsonl", d)).isEmpty)
+    assert(leftBy(Pipeline.ingest(spark, pages + "/page2.jsonl", d)).isEmpty)
+  }
+
+  test("an ingest that fails on a dimension swap leaves no persisted RDD") {
+    val base = freshDir()
+    Pipeline.ingest(spark, pages + "/page1.jsonl", base)
+    // fail the k-th rename or delete, k = 1, 2, ..., until the failing
+    // step is one of phase 2's dimension swaps; every failed ingest on
+    // the way must release its pins too
+    var k = 1
+    var onDimension = false
+    while (!onDimension) {
+      val d = copyOf(base)
+      FaultFs.arm(k, FaultFs.Throw)
+      var failed = false
+      val left = leftBy {
+        failed = Try(Pipeline.ingest(spark, pages + "/page2.jsonl", d))
+          .isFailure
+      }
+      val fired = FaultFs.fired
+      val on = FaultFs.firedOn
+      FaultFs.disarm()
+      assert(fired, s"step $k: no dimension swap failed before the " +
+        "ingest ran out of renames and deletes")
+      assert(left.isEmpty, s"Throw at step $k ($on) left $left")
+      onDimension = failed &&
+        Seq("/autores", "/afiliaciones").exists(on.contains)
+      k += 1
+    }
+  }
+
   test("a failed or crashed incremental ingest, re-run, equals the " +
       "ingest that never failed") {
     val page2 = pages + "/page2.jsonl"

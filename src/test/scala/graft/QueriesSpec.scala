@@ -2,7 +2,8 @@ package graft
 
 /** Smoke coverage: every graded query runs at sf0.001 and produces a
   * well-formed result (schema non-empty; rows > 0 except the queries whose
-  * correct result is legitimately empty on this synthetic data).
+  * correct result is legitimately empty on this synthetic data), and a
+  * query run inside a `Materialize.scope` leaves no persisted RDD behind.
   */
 class QueriesSpec extends SparkSpec {
 
@@ -19,10 +20,16 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
-      val df = fn(spark, sf0001)
-      assert(df.schema.fields.nonEmpty)
-      val n = df.count()
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val n = graft.ext.Materialize.scope {
+        val df = fn(spark, sf0001)
+        assert(df.schema.fields.nonEmpty)
+        df.count()
+      }
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name left persisted RDDs $left")
     }
   }
 

@@ -3,14 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-10 regression pins: reliable-checkpoint mode for the
-  * iterative operators (Pin), and the kmvJaccard all-pairs guard.
+  * iterative operators (Materialize.cut), and the kmvJaccard all-pairs
+  * guard.
   */
 class Round10Spec extends SparkSpec {
   import spark.implicits._
 
   /** Run `body` with a reliable checkpoint dir set on the shared
-    * session, restoring the unset state after — Pin switches every
-    * iterative operator to `Dataset.checkpoint()` for the duration.
+    * session, restoring the unset state after — Materialize.cut
+    * switches every iterative operator to `Dataset.checkpoint()` for
+    * the duration.
     * Returns (result, number of checkpoint files written) so callers
     * can assert the reliable path actually engaged.
     */
@@ -30,7 +32,7 @@ class Round10Spec extends SparkSpec {
     }
   }
 
-  // ---- Pin: reliable-checkpoint mode, results identical ----
+  // ---- Materialize.cut: reliable-checkpoint mode, results identical ----
 
   test("pageRank under a session checkpoint dir writes reliable " +
       "checkpoint files and ranks byte-identically to local mode") {
@@ -938,15 +940,15 @@ class Round10Spec extends SparkSpec {
     val big = rows ++ Seq((7L, "a"), (7L, "b"), (7L, "c"))
     // r16: the guard fires inside the set aggregation (wrapped in
     // Spark's task-failure chain), no longer as a pre-job require
+    // the scope frees the cache of the failed basket aggregation
     val err = intercept[Exception] {
-      graft.ext.Mining.assocRules(big.toDF("b", "i"), "b", "i",
-        minSupport = 1, maxBasketSize = 2)
+      graft.ext.Materialize.scope(graft.ext.Mining.assocRules(
+        big.toDF("b", "i"), "b", "i", minSupport = 1, maxBasketSize = 2))
     }
     val errMsgs = Iterator.iterate(err: Throwable)(_.getCause)
       .takeWhile(_ != null).take(10)
       .flatMap(t => Option(t.getMessage)).mkString("\n")
     assert(errMsgs.contains("maxBasketSize"))
-    graft.ext.OpCaches.release()
     // empty input: no rows, no guard trip
     assert(graft.ext.Mining.assocRules(
       Seq.empty[(Long, String)].toDF("b", "i"), "b", "i",

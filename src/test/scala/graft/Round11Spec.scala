@@ -195,37 +195,34 @@ class Round11Spec extends SparkSpec {
       queryId = 0L, k = 2, poolSize = 4).count() === 2L)
   }
 
-  // ---- OpCaches: deterministic release of operator caches ----
+  // ---- Materialize.scope: deterministic release of operator caches ----
 
   test("numericDrift/ksDrift/paretoFrontier/dictBuild register their " +
-      "internal caches; OpCaches.release() drops every cached block " +
+      "internal caches; Materialize.scope drops every cached block " +
       "after the results are consumed") {
-    // settle: release anything earlier tests (or suite ordering) left
-    graft.ext.OpCaches.release()
     spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val a = (0 until 400).map(i => ("a", (i % 50).toLong)).toDF("g", "x")
     val b = (0 until 400).map(i => ("b", (i % 60).toLong)).toDF("g", "x")
-    // consume each operator's result fully (the lazy frames read the
-    // operator-internal caches — release is only safe-by-design, not
-    // required, before this point)
-    graft.ext.Stats.numericDrift(a, b, col("x")).collect()
-    graft.ext.Stats.ksDrift(a, b, col("x")).collect()
-    graft.ext.Stats.paretoFrontier(
-      (0 until 200).map(i => (i.toLong, (i * 7 % 101).toLong,
-        (i * 13 % 97).toLong)).toDF("id", "x", "y"), "x", "y").collect()
-    graft.ext.Layout.dictBuild(
-      (0 until 300).map(i => s"v${i % 120}").toDF("c"), "c").collect()
-    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.nonEmpty, "operators registered no cache at all — " +
-      "either the single-agg guarantee is gone or pin() is bypassed")
-    val released = graft.ext.OpCaches.release()
-    assert(released >= 4, s"released only $released of >= 4 op caches")
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // consume each operator's result fully inside the scope (the lazy
+    // frames read the operator-internal caches)
+    val during = graft.ext.Materialize.scope {
+      graft.ext.Stats.numericDrift(a, b, col("x")).collect()
+      graft.ext.Stats.ksDrift(a, b, col("x")).collect()
+      graft.ext.Stats.paretoFrontier(
+        (0 until 200).map(i => (i.toLong, (i * 7 % 101).toLong,
+          (i * 13 % 97).toLong)).toDF("id", "x", "y"), "x", "y").collect()
+      graft.ext.Layout.dictBuild(
+        (0 until 300).map(i => s"v${i % 120}").toDF("c"), "c").collect()
+      sc.getPersistentRDDs.keySet -- before
+    }
+    assert(during.size >= 4, s"registered only ${during.size} of >= 4 " +
+      "op caches — either the single-agg guarantee is gone or " +
+      "Materialize.memory is bypassed")
+    val leftover = sc.getPersistentRDDs.keySet -- before
     assert(leftover.isEmpty,
-      s"cached blocks survived release(): $leftover")
-    // idempotent: nothing left to release
-    assert(graft.ext.OpCaches.release() === 0)
+      s"cached blocks survived the scope: $leftover")
   }
 
   // ---- fleissKappa: bounded contract-check collect ----

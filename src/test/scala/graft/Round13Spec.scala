@@ -37,7 +37,7 @@ class Round13Spec extends SparkSpec {
       val a = graft.ext.Dedup
         .embeddingDedupGroups(df, "id", "vec", thr, bits)
         .orderBy("id").collect().toSeq
-      val b = graft.ext.Dedup
+      val b = SpecOnlyOps
         .embeddingDedupGroupsWindowed(df, "id", "vec", thr, bits)
         .orderBy("id").collect().toSeq
       assert(a == b, s"thr=$thr bits=$bits")

@@ -609,13 +609,12 @@ class Round15Spec extends SparkSpec {
     // is measuring), so it surfaces from the n_baskets job wrapped in
     // Spark's task-failure chain rather than as a pre-job require
     val e = intercept[Exception] {
-      graft.ext.Mining.assocRules(df, "b", "i", minSupport = 1,
-        maxBasketSize = 5)
+      graft.ext.Materialize.scope(graft.ext.Mining.assocRules(df, "b", "i",
+        minSupport = 1, maxBasketSize = 5))
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).take(10)
       .flatMap(t => Option(t.getMessage)).mkString("\n")
     assert(msgs.contains("maxBasketSize"))
-    graft.ext.OpCaches.release()
   }
 }

@@ -90,8 +90,9 @@ class Round16Spec extends SparkSpec {
       (i.toLong, s)
     }
     val df = rows.toDF("id", "s")
-    val got = graft.ext.Dedup.editDistanceJoin(df, "id", "s", d = 2)
-      .orderBy("id_a", "id_b").collect()
+    val got = graft.ext.Materialize.scope(
+      graft.ext.Dedup.editDistanceJoin(df, "id", "s", d = 2)
+        .orderBy("id_a", "id_b").collect())
     // reference: brute-force cross join with the built-in levenshtein
     val ref = df.as("a").join(df.as("b"),
         $"a.id" < $"b.id" &&
@@ -101,7 +102,6 @@ class Round16Spec extends SparkSpec {
       .filter($"dist" >= 0)
       .orderBy("id_a", "id_b").collect()
     assert(got.toSeq === ref.toSeq)
-    graft.ext.OpCaches.release()
   }
 
   // ---- bounded collects: hot-key guards that never materialize ------
@@ -190,22 +190,20 @@ class Round16Spec extends SparkSpec {
     import spark.implicits._
     val legal = (0 until 50).flatMap(b =>
       (0 until 5).map(i => (b.toLong, s"i${(b + i) % 12}")))
-    val out = graft.ext.Mining.assocRules(
+    val out = graft.ext.Materialize.scope(graft.ext.Mining.assocRules(
       legal.toDF("b", "i"), "b", "i", minSupport = 1, maxBasketSize = 5)
-      .orderBy("antecedent", "consequent").collect()
+      .orderBy("antecedent", "consequent").collect())
     assert(out.nonEmpty)
-    graft.ext.OpCaches.release()
     val over = (0 until 20).map(i => (1L, s"x$i"))
     val ex = intercept[Exception] {
-      graft.ext.Mining.assocRules(
+      graft.ext.Materialize.scope(graft.ext.Mining.assocRules(
         over.toDF("b", "i"), "b", "i", minSupport = 1,
-        maxBasketSize = 10).collect()
+        maxBasketSize = 10).collect())
     }
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
     assert(chain(ex).exists(c =>
       Option(c.getMessage).exists(_.contains("maxBasketSize"))))
-    graft.ext.OpCaches.release()
   }
 
   // ---- fastMd5 ≡ builtin md5 -----------------------------------------

@@ -25,7 +25,7 @@ class SkewSpec extends SparkSpec {
     val plain = big.join(dim, Seq("k"))
       .select("row_id", "k", "v", "label")
       .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(big, dim, Seq("k"),
+    val salted = SpecOnlyOps.saltedJoin(big, dim, Seq("k"),
       saltFrom = col("row_id"), salt = 8)
       .select("row_id", "k", "v", "label")
       .collect().map(_.toSeq).toSet

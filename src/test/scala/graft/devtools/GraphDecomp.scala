@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Dev (r15): per-stage decomposition of the graded iterative-graph
   * queries at sf0.1 — where do q146/q131/q136's ~2-3 s go? Edge build +
-  * symmetrize + Pin vs the per-round join/agg/Pin jobs vs the final
+  * symmetrize + cut vs the per-round join/agg/cut jobs vs the final
   * sort. `Test/runMain graft.GraphDecomp`. Session config = EntryKit's.
   */
 object GraphDecomp {
@@ -33,7 +33,7 @@ object GraphDecomp {
           datediff(col("l_shipdate"), lit("1970-01-01")).as("t"))
       val dir = e.filter(col("u") =!= col("v"))
       val sym = t("sym distinct+pin") {
-        graft.ext.Pin(dir.union(dir.select(col("v").as("u"),
+        graft.ext.Materialize.cut(dir.union(dir.select(col("v").as("u"),
           col("u").as("v"), col("t"))).distinct())
       }
       println(s"  sym parts=${sym.rdd.getNumPartitions}")
@@ -41,7 +41,7 @@ object GraphDecomp {
         .filter(col("c_custkey") <= 5)
         .select((col("c_custkey") * 2).as("node"))
       var arr = t("sources pin") {
-        graft.ext.Pin(sources.distinct().withColumn("arr", lit(0L)))
+        graft.ext.Materialize.cut(sources.distinct().withColumn("arr", lit(0L)))
       }
       for (r <- 1 to 4) {
         arr = t(s"round $r join+agg+pin") {
@@ -49,7 +49,7 @@ object GraphDecomp {
             .join(arr.withColumnRenamed("node", "u"), "u")
             .filter(col("t") >= col("arr"))
             .select(col("v").as("node"), col("t").as("arr"))
-          graft.ext.Pin(arr.union(cand)
+          graft.ext.Materialize.cut(arr.union(cand)
             .groupBy("node").agg(min(col("arr")).as("arr")))
         }
         println(s"  arr parts=${arr.rdd.getNumPartitions}")

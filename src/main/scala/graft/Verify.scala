@@ -14,9 +14,11 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.isEmpty || only(name) || only(name.takeWhile(_ != '_'))
     }
+    // each query in its own scope: what one query pins is freed before
+    // the next runs, also when it throws
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.ext.Materialize.scope(fn(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -24,9 +24,8 @@ import graft.functions.DigestFunctions.fastMd5
   *    pairs are hamming-verified and emitted exactly once (first
   *    agreeing table) inside the bucket.
   *
-  * Two hash families are provided: `md5`-based (engine-portable, used by
-  * the DuckDB-checked graded queries) and `xxhash64`-based (the fast path
-  * for production — stays in codegen, no hex strings).
+  * Every signature hash is `md5`-based, so any engine can replay it: the
+  * DuckDB oracle grades each output end to end, banding included.
   */
 object Dedup {
 
@@ -72,38 +71,25 @@ object Dedup {
     s"substr($digest, ${(k % 4) * 8 + 1}, 8)"
   }
 
-  /** Fast MinHash component: numeric min of xxhash64(shingle, seed=k) —
-    * codegen'd, no hex materialization. Production path.
-    */
-  def minhashFast(sh: Column, k: Int): Column =
-    array_min(transform(sh, s => xxhash64(lit(k), s)))
-
   /** MinHash signatures `mh0..mh{k-1}` via explode + partial-aggregated
     * min — every operator codegen'd (no interpreted higher-order lambdas),
     * map-side combine shrinks the shuffle to one row per (doc, k).
-    * `portable=true` uses the md5 family (DuckDB-replayable); false uses
-    * xxhash64 (fast path). Values are identical to a per-row
-    * `array_min(transform(...))` formulation, ~20× cheaper.
+    * Values are identical to the per-row [[minhashMd5]] formulation,
+    * ~20× cheaper.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, portable: Boolean): DataFrame = {
+      n: Int, k: Int): DataFrame = {
     val exploded = df.select(col(idCol),
       explode(shingles(col(textCol), n)).as("s"))
-    if (portable) {
-      // materialize each shared digest once per shingle row, then take
-      // component mins over its slices — ceil(k/4) md5 calls, not k
-      val nDigests = (k + 3) / 4
-      val withDigests = exploded.select(col(idCol) +: (0 until nDigests)
-        .map(j => fastMd5(if (j == 0) col("s")
-                      else concat(lit(j.toString), col("s"))).as(s"md$j")): _*)
-      val aggs = (0 until k).map(i =>
-        min(substring(col(s"md${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"mh$i"))
-      withDigests.groupBy(idCol).agg(aggs.head, aggs.tail: _*)
-    } else {
-      val aggs = (0 until k).map(i =>
-        min(xxhash64(lit(i), col("s"))).as(s"mh$i"))
-      exploded.groupBy(idCol).agg(aggs.head, aggs.tail: _*)
-    }
+    // materialize each shared digest once per shingle row, then take
+    // component mins over its slices — ceil(k/4) md5 calls, not k
+    val nDigests = (k + 3) / 4
+    val withDigests = exploded.select(col(idCol) +: (0 until nDigests)
+      .map(j => fastMd5(if (j == 0) col("s")
+                    else concat(lit(j.toString), col("s"))).as(s"md$j")): _*)
+    val aggs = (0 until k).map(i =>
+      min(substring(col(s"md${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"mh$i"))
+    withDigests.groupBy(idCol).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Unordered within-bucket pairs from a collected member array:
@@ -126,6 +112,52 @@ object Dedup {
         transform(slice(ids, i + lit(2), size(ids)),
           y => struct(least(x, y).as("id_a"), greatest(x, y).as("id_b")))))
 
+  /** Band key columns from per-row minhash component columns — THE
+    * key scheme; the batch index (`bandRows`) and the streaming probe
+    * (`StreamingJobs.nearDupStream`) both call this, so they cannot
+    * silently diverge (a mismatched key would make the stream-static
+    * join return zero candidates, not fail). The key is the literal
+    * `band|mh_i|mh_j` concatenation — collision-free and byte-replayable
+    * by any engine (the DuckDB oracle joins on the same string).
+    */
+  def bandKeyCols(k: Int, bands: Int, mh: Int => Column): Seq[Column] = {
+    // bands > k makes every band key an EMPTY slice — all docs land in
+    // one bucket per band, the exact O(n^2) blow-up banding prevents;
+    // bands not dividing k silently drops the trailing minhash
+    // components from every key, changing recall from the configured k
+    require(bands >= 1 && bands <= k && k % bands == 0,
+      s"bandKeyCols: need 1 <= bands <= k with bands dividing k, " +
+        s"got k=$k bands=$bands")
+    val rowsPerBand = k / bands
+    (0 until bands).map { b =>
+      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh)
+      concat_ws("|", lit(b.toString) +: slice: _*)
+    }
+  }
+
+  /** The at-rest index directory of a band key — THE layout hash;
+    * the index writer, the batch probe and the streaming probe all call
+    * this, so a probe cannot silently look in the wrong directories
+    * (that would return zero matches, not fail).
+    */
+  private[graft] def indexDir(bkey: Column, nDirs: Int): Column =
+    pmod(hash(bkey), lit(nDirs))
+
+  /** One row per (id, band, band-key): the LSH index rows that
+    * `lshCandidatePairs` buckets on, exposed so the same keys can also
+    * be materialized at rest (`writeLshIndex`) and probed incrementally
+    * (`incrementalNearDups`).
+    */
+  def bandRows(df: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, bands: Int): DataFrame = {
+    val sigs = minhashSignatures(
+      df.select(idCol, textCol), idCol, textCol, n, k)
+    val bandKeys = bandKeyCols(k, bands, i => col(s"mh$i"))
+    sigs.select(
+      col(idCol),
+      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+  }
+
   /** LSH candidate pairs: signatures split into `bands` bands of
     * `k/bands` rows; docs agreeing on any full band meet in a shuffle
     * bucket. Output: (id_a, id_b) with id_a < id_b, distinct.
@@ -137,55 +169,10 @@ object Dedup {
     * the differently-aliased sides — measured, not assumed) or force an
     * unmanaged `.cache()` pinned past the query's lifetime; this shape
     * needs neither.
-    *
-    * `portable=true` uses the md5 signature family and a band key that is
-    * the literal `band|mh_i|mh_j` concatenation — collision-free and
-    * byte-replayable by any engine (the DuckDB oracle joins on the same
-    * string). The default fast path hashes the band slice to a 32-bit
-    * Murmur3 key (smaller shuffle; engine-specific).
     */
-  /** One row per (id, band, band-key): the LSH index rows that
-    * `lshCandidatePairs` buckets on, exposed so the same keys can also
-    * be materialized at rest (`writeLshIndex`) and probed incrementally
-    * (`incrementalNearDups`).
-    */
-  /** Band key columns from per-row minhash component columns — THE
-    * key scheme; the batch index (`bandRows`) and the streaming probe
-    * (`StreamingJobs.nearDupStream`) both call this, so they cannot
-    * silently diverge (a mismatched key would make the stream-static
-    * join return zero candidates, not fail).
-    */
-  def bandKeyCols(k: Int, bands: Int, portable: Boolean,
-      mh: Int => Column): Seq[Column] = {
-    // bands > k makes every band key an EMPTY slice — all docs land in
-    // one bucket per band, the exact O(n^2) blow-up banding prevents;
-    // bands not dividing k silently drops the trailing minhash
-    // components from every key, changing recall from the configured k
-    require(bands >= 1 && bands <= k && k % bands == 0,
-      s"bandKeyCols: need 1 <= bands <= k with bands dividing k, " +
-        s"got k=$k bands=$bands")
-    val rowsPerBand = k / bands
-    (0 until bands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh)
-      if (portable) concat_ws("|", lit(b.toString) +: slice: _*)
-      else hash(slice :+ lit(b): _*)
-    }
-  }
-
-  def bandRows(df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, portable: Boolean): DataFrame = {
-    val sigs = minhashSignatures(
-      df.select(idCol, textCol), idCol, textCol, n, k, portable)
-    val bandKeys = bandKeyCols(k, bands, portable, i => col(s"mh$i"))
-    sigs.select(
-      col(idCol),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-  }
-
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 8, bands: Int = 4,
-      portable: Boolean = false): DataFrame = {
-    bandRows(df, idCol, textCol, n, k, bands, portable)
+      n: Int = 3, k: Int = 8, bands: Int = 4): DataFrame = {
+    bandRows(df, idCol, textCol, n, k, bands)
       .groupBy("band", "bkey")
       .agg(collect_list(col(idCol)).as("ids"))
       .select(explode(bucketPairs(col("ids"),
@@ -232,11 +219,10 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4,
-      tauNum: Int = 3, tauDen: Int = 4,
-      portable: Boolean = false): DataFrame = {
+      tauNum: Int = 3, tauDen: Int = 4): DataFrame = {
     require(tauNum >= 0 && tauDen > 0,
       "containmentPairs: tau must be a non-negative rational")
-    val pairs = lshCandidatePairs(df, idCol, textCol, n, k, bands, portable)
+    val pairs = lshCandidatePairs(df, idCol, textCol, n, k, bands)
     val sh = df.select(col(idCol),
       array_distinct(shingles(col(textCol), n)).as("sh"))
     pairs
@@ -270,12 +256,12 @@ object Dedup {
       n: Int = 3, k: Int = 8, bands: Int = 4,
       posNum: Int = 1, posDen: Int = 2,
       negNum: Int = 1, negDen: Int = 5,
-      negKeepPct: Int = 10, portable: Boolean = false): DataFrame = {
+      negKeepPct: Int = 10): DataFrame = {
     require(negKeepPct >= 0 && negKeepPct <= 100,
       "trainingPairs: negKeepPct must be in [0, 100]")
     require(posNum * negDen > negNum * posDen,
       "trainingPairs: positive threshold must exceed negative threshold")
-    val pairs = lshCandidatePairs(df, idCol, textCol, n, k, bands, portable)
+    val pairs = lshCandidatePairs(df, idCol, textCol, n, k, bands)
     val sh = df.select(col(idCol),
       array_distinct(shingles(col(textCol), n)).as("sh"))
     // Single-pass labeling: the pos/neg thresholds are disjoint by the
@@ -306,19 +292,18 @@ object Dedup {
 
   /** Full fuzzy-dedup pipeline: shingle → minhash → LSH bucket join →
     * Jaccard verify. One narrow scan, one band shuffle, one candidate
-    * join — scales to billions of documents. `portable=true` grades the
-    * whole pipeline against a DuckDB replay (md5 family, literal band
-    * keys); the default xxhash64 path is the production fast path.
+    * join — scales to billions of documents. A DuckDB replay grades the
+    * whole pipeline (md5 family, literal band keys).
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4,
-      threshold: Double = 0.7, portable: Boolean = false): DataFrame =
+      threshold: Double = 0.7): DataFrame =
     verifyJaccard(df,
-      lshCandidatePairs(df, idCol, textCol, n, k, bands, portable),
+      lshCandidatePairs(df, idCol, textCol, n, k, bands),
       idCol, textCol, n, threshold)
 
   /** Materialize a corpus's fuzzy-dedup index at rest: the LSH band
-    * rows, directory-partitioned by `pdir = pmod(hash(bkey), nDirs)`,
+    * rows, directory-partitioned by `pdir = indexDir(bkey, nDirs)`,
     * plus the per-doc distinct shingle sets the verify stage needs.
     * Build cost is one pass over the corpus — paid ONCE; after that
     * every new batch dedups against the corpus without recomputing or
@@ -327,12 +312,12 @@ object Dedup {
     * small-files discipline as `Similarity.writeBucketed`.
     */
   def writeLshIndex(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 8, bands: Int = 4, portable: Boolean = false,
+      n: Int = 3, k: Int = 8, bands: Int = 4,
       path: String, nDirs: Int = 64): Unit = {
     // a dead append would otherwise be rolled forward into the rebuild
     recoverAppend(new Path(path).getFileSystem(
       df.sparkSession.sessionState.newHadoopConf()), path)
-    writeIndexAs(df, idCol, textCol, n, k, bands, portable, path, nDirs)
+    writeIndexAs(df, idCol, textCol, n, k, bands, path, nDirs)
   }
 
   /** The ONE copy of the index-layout contract (pdir hashing,
@@ -342,15 +327,15 @@ object Dedup {
     * grades on.
     */
   private def writeIndexAs(df: DataFrame, idCol: String,
-      textCol: String, n: Int, k: Int, bands: Int, portable: Boolean,
+      textCol: String, n: Int, k: Int, bands: Int,
       path: String, nDirs: Int): Unit =
     // the two table writes are independent (distinct dirs, both pure
     // functions of df) — overlapped per guide §2.6 so the shingle
     // write back-fills the band write's shuffle/commit tail (r15:
     // corpus write 2.40 -> ~1.6 s at sf0.1, content byte-identical)
     ParJobs(
-      () => bandRows(df, idCol, textCol, n, k, bands, portable)
-        .withColumn("pdir", pmod(hash(col("bkey")), lit(nDirs)))
+      () => bandRows(df, idCol, textCol, n, k, bands)
+        .withColumn("pdir", indexDir(col("bkey"), nDirs))
         .repartition(col("pdir"))
         .write.mode("overwrite").partitionBy("pdir")
         .parquet(s"$path/bands"),
@@ -386,7 +371,7 @@ object Dedup {
     */
   def lshRecallAudit(df: DataFrame, idCol: String, textCol: String,
       maxId: Long, n: Int = 3, k: Int = 8, bands: Int = 4,
-      threshold: Double = 0.5, portable: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     import graft.functions.PairFunctions.stringIntersectSize
     val sample = df.filter(col(idCol) < maxId)
       .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
@@ -402,8 +387,7 @@ object Dedup {
       .filter(col("j") >= threshold)
       .select("ia", "ib")
     val found = lshCandidatePairs(
-      sample.withColumnRenamed("t", "text"), "id", "text", n, k,
-      bands, portable)
+      sample.withColumnRenamed("t", "text"), "id", "text", n, k, bands)
       .select(col("id_a").as("ia"), col("id_b").as("ib"))
       .withColumn("__hit", lit(1L))
     // ONE action over the expensive pairwise truth join: left-join the
@@ -445,7 +429,7 @@ object Dedup {
     * belongs upstream where the id set is already known.
     */
   def appendLshIndex(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 8, bands: Int = 4, portable: Boolean = false,
+      n: Int = 3, k: Int = 8, bands: Int = 4,
       path: String, nDirs: Int = 64): Unit = {
     val fs = new Path(path).getFileSystem(
       df.sparkSession.sessionState.newHadoopConf())
@@ -453,7 +437,7 @@ object Dedup {
     // both tables stage under ParJobs as the rebuild writes them, then
     // publish as ONE group: no failure leaves shingles without bands
     Swap.stage(fs, appendStage(path))(writeIndexAs(df, idCol, textCol, n, k,
-      bands, portable, appendStage(path).toString, nDirs))
+      bands, appendStage(path).toString, nDirs))
     Swap.swap(fs, appendAside(path), appendMoves(fs, path),
       Some(appendStage(path)))
   }
@@ -476,9 +460,9 @@ object Dedup {
   def incrementalNearDups(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, batch: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4, threshold: Double = 0.7,
-      portable: Boolean = false, nDirs: Int = 64): DataFrame = {
-    val bRows = bandRows(batch, idCol, textCol, n, k, bands, portable)
-      .withColumn("pdir", pmod(hash(col("bkey")), lit(nDirs)))
+      nDirs: Int = 64): DataFrame = {
+    val bRows = bandRows(batch, idCol, textCol, n, k, bands)
+      .withColumn("pdir", indexDir(col("bkey"), nDirs))
       .withColumnRenamed(idCol, "batch_id")
     val cands = spark.read.parquet(s"$indexPath/bands")
       .join(broadcast(bRows), Seq("pdir", "band", "bkey"))
@@ -510,14 +494,14 @@ object Dedup {
   /** Near-dup REMOVAL: keep one canonical row (the min-id cluster
     * member) per near-dup cluster, pass every unclustered row through —
     * the curation step that actually shrinks a corpus once pairs are
-    * known. Clusters come from the skew-safe star contraction; the
-    * delete set (`id != cluster` members) is tiny relative to the
-    * corpus, so the final anti-join broadcasts it and the corpus itself
-    * is never shuffled.
+    * known. Clusters come from [[dedupClusters]]; the delete set
+    * (`id != cluster` members) is tiny relative to the corpus, so the
+    * final anti-join broadcasts it and the corpus itself is never
+    * shuffled.
     */
   def keepCanonical(df: DataFrame, idCol: String,
       pairs: DataFrame): DataFrame = {
-    val losers = dedupClustersStar(pairs)
+    val losers = dedupClusters(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     df.join(broadcast(losers), Seq(idCol), "left_anti")
@@ -527,47 +511,37 @@ object Dedup {
   // SimHash
   // ------------------------------------------------------------------
 
-  /** 64-bit SimHash over whitespace tokens: per-bit majority vote of
-    * xxhash64(token). Computed as one fold with a 64-long accumulator
-    * array — a pure projection, no shuffle.
-    */
-  def simhash64(text: Column): Column = {
-    val toks = array_distinct(split(trim(text), "\\s+"))
-    val bitIdx = sequence(lit(0), lit(63))
-    val votes = aggregate(
-      toks,
-      transform(bitIdx, _ => lit(0L)),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, bitIdx, (a, i) =>
-          a + when(call_function("shiftright", h, i.cast("int"))
-            .bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      })
-    aggregate(
-      zip_with(votes, bitIdx, (v, i) =>
-        when(v > 0, call_function("shiftleft", lit(1L), i.cast("int")))
-          .otherwise(0L)),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** Shared lane-packed majority-vote aggregation for both SimHash
-    * families. `toks` is one row per (doc, distinct token) with whatever
-    * hash columns the family needs; `bitOf(g, l)` yields bit `4g+l` of
-    * the token hash as a 0/1 long Column.
+  /** 64-bit SimHash signatures over whitespace tokens, via explode +
+    * lane-packed bit-count aggregates — fully codegen'd with map-side
+    * combine. Bit `4g+l` of a token is bit `l` of hex digit `g` of
+    * md5(token) — any engine can replay it from the md5 hex string (the
+    * DuckDB oracle does). Bit b is set in the signature iff 2·count_b > n
+    * over the doc's n distinct tokens (strict majority).
+    *
+    * That bit layout (digit g at bits 4g..4g+3) is exactly a
+    * LITTLE-endian parse of the first 16 hex digits, so the whole
+    * 64-bit token hash is one `conv(reverse(hex), 16, -10)` (signed
+    * radix: top-bit digits must not overflow the long) instead of 64
+    * per-digit conv+substring calls — same bits, ~64x less string work
+    * per token.
     *
     * Instead of 64 separate conditional sums, the per-bit set-counts are
     * packed 4 to a long (16 bits per lane, 16 packed sums): group g
-    * accumulates Σ_l bitOf(g, l) << (16l). The running sum's top lane
+    * accumulates Σ_l bit(4g+l) << (16l). The running sum's top lane
     * stays below 2^63 while a document has < 2^15 distinct tokens
     * (ANSI-mode long sums throw on overflow, so the bound matters;
-    * assert-guarded). Bit b is set in the signature iff 2·count_b > n
-    * (strict majority — matching the `votes > 0` rule of `simhash64`).
+    * assert-guarded).
     */
-  private def simhashPacked(toks: DataFrame, idCol: String,
-      bitOf: (Int, Int) => Column): DataFrame = {
+  def simhashSignatures(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val toks = df.select(col(idCol),
+      explode(array_distinct(split(trim(col(textCol)), "\\s+"))).as("t"))
+      .withColumn("h",
+        conv(reverse(substring(fastMd5(col("t")), 1, 16)), 16, -10)
+          .cast("long"))
     val packed = (0 until 16).map { g =>
       sum((0 until 4).map { l =>
-        bitOf(g, l) * lit(1L << (16 * l))
+        shiftright(col("h"), g * 4 + l).bitwiseAND(1) * lit(1L << (16 * l))
       }.reduce(_ + _)).as(s"p$g")
     }
     val counted = toks.groupBy(idCol)
@@ -581,42 +555,6 @@ object Dedup {
     // top lane's running sum — fail loudly instead (widen if ever hit)
     counted.select(col(idCol),
       when(assert_true(col("n") < 32768).isNull, sig).as("sig"))
-  }
-
-  /** SimHash signatures via explode + lane-packed bit-count aggregates —
-    * fully codegen'd with map-side combine (same values as the
-    * `simhash64` Column form). xxhash64 token hashes — the fast path.
-    */
-  def simhashSignatures(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val toks = df.select(col(idCol),
-      explode(array_distinct(split(trim(col(textCol)), "\\s+"))).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    simhashPacked(toks, idCol,
-      (g, l) => shiftright(col("h"), g * 4 + l).bitwiseAND(1))
-  }
-
-  /** Portable SimHash signatures: bit `4g+l` of a token is bit `l` of
-    * hex digit `g` of md5(token) — any engine can replay it from the md5
-    * hex string (the DuckDB oracle does). Same packed aggregation and
-    * majority rule as the fast path.
-    *
-    * That bit layout (digit g at bits 4g..4g+3) is exactly a
-    * LITTLE-endian parse of the first 16 hex digits, so the whole
-    * 64-bit token hash is one `conv(reverse(hex), 16, -10)` (signed
-    * radix: top-bit digits must not overflow the long) instead of 64
-    * per-digit conv+substring calls — same bits, ~64x less string work
-    * per token.
-    */
-  def simhashSignaturesPortable(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val toks = df.select(col(idCol),
-      explode(array_distinct(split(trim(col(textCol)), "\\s+"))).as("t"))
-      .withColumn("h",
-        conv(reverse(substring(fastMd5(col("t")), 1, 16)), 16, -10)
-          .cast("long"))
-    simhashPacked(toks, idCol,
-      (g, l) => shiftright(col("h"), g * 4 + l).bitwiseAND(1))
   }
 
   /** SimHash near-dup pairs with hamming distance <= maxHamming.
@@ -635,12 +573,9 @@ object Dedup {
     * brute force (the pigeonhole is lossless, ExtSpec asserts equality).
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, portable: Boolean = false): DataFrame = {
-    val sigs =
-      if (portable) simhashSignaturesPortable(df, idCol, textCol)
-      else simhashSignatures(df, idCol, textCol)
-    simhashPairsFromSigs(sigs, idCol, maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    simhashPairsFromSigs(simhashSignatures(df, idCol, textCol), idCol,
+      maxHamming)
 
   /** The Manku block join over an (id, sig) table — shared by the
     * all-pairs surface ([[simhashNearDups]]) and the distinct-signature
@@ -735,11 +670,9 @@ object Dedup {
     * entire degenerate cluster in ONE task — exactly the case this
     * operator exists for — so the second scan is the right price.
     */
-  def simhashGroups(df: DataFrame, idCol: String, textCol: String,
-      portable: Boolean = false): DataFrame = {
-    val sigs =
-      if (portable) simhashSignaturesPortable(df, idCol, textCol)
-      else simhashSignatures(df, idCol, textCol)
+  def simhashGroups(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val sigs = simhashSignatures(df, idCol, textCol)
     // NULL-text docs produce no signature row (explode of a null token
     // array) — but this surface owes one row PER DOC, and silently
     // losing them would turn a downstream "keep id == group_id" pass
@@ -779,12 +712,9 @@ object Dedup {
     * reproduces it exactly).
     */
   def simhashGroupEdges(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, portable: Boolean = false): DataFrame = {
-    val sigs =
-      if (portable) simhashSignaturesPortable(df, idCol, textCol)
-      else simhashSignatures(df, idCol, textCol)
-    simhashGroupEdgesFromSigs(sigs, idCol, maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    simhashGroupEdgesFromSigs(simhashSignatures(df, idCol, textCol),
+      idCol, maxHamming)
 
   /** [[simhashGroupEdges]] over a precomputed (id, sig) table — see
     * [[simhashGroupsFromSigs]] for the compute-sigs-once pattern.
@@ -801,22 +731,6 @@ object Dedup {
   // Cluster assignment (pairs -> dedup groups)
   // ------------------------------------------------------------------
 
-  /** Connected components over an undirected near-dup pair set: every
-    * node gets `cluster` = the minimum id reachable from it, so "keep
-    * one per cluster" is `filter(id === cluster)`. Each round does
-    * (1) min-label propagation along edges and (2) pointer jumping
-    * (cluster := cluster of the cluster node) — the shortcutting step
-    * halves label-chain depth, giving O(log n) rounds on any topology
-    * (a bare neighbor-propagation loop is O(diameter) and dies on long
-    * chains). Every round is two equi-joins + one min-aggregate;
-    * lineage is truncated each round via [[Materialize.cut]]
-    * (executor-local by default; set a session checkpoint dir for the
-    * fault-tolerant reliable form) so the plan does not grow with the
-    * iteration count. For adversarial billion-edge graphs
-    * the same fixpoint can be computed with alternating large-star /
-    * small-star rounds (Kiveris et al., "Connected Components in
-    * MapReduce", SoCC'14) with fewer skewed shuffles.
-    */
   /** Min-rooted union-find over a collected edge list — the local fast
     * path for cluster assignment. Near-dup pair graphs are TINY relative
     * to the corpus (edges ≈ duplicate pairs, not documents), so the
@@ -862,7 +776,20 @@ object Dedup {
     else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
   }
 
-  /** `localEdgeThreshold`: pair graphs at or below this many edges (and
+  /** Connected components over an undirected near-dup pair set: every
+    * node gets `cluster` = the minimum id reachable from it, so "keep
+    * one per cluster" is `filter(id === cluster)`. Each round does
+    * (1) min-label propagation along edges and (2) pointer jumping
+    * (cluster := cluster of the cluster node) — the shortcutting step
+    * halves label-chain depth, giving O(log n) rounds on any topology
+    * (a bare neighbor-propagation loop is O(diameter) and dies on long
+    * chains). Every round is two equi-joins + one min-aggregate;
+    * lineage is truncated each round via [[Materialize.cut]]
+    * (executor-local by default; set a session checkpoint dir for the
+    * fault-tolerant reliable form) so the plan does not grow with the
+    * iteration count.
+    *
+    * `localEdgeThreshold`: pair graphs at or below this many edges (and
     * with long ids) are solved with driver-side union-find — a near-dup
     * graph is edges ≈ duplicate pairs, so even a billion-document corpus
     * with 2M duplicate pairs resolves locally in milliseconds instead of
@@ -938,89 +865,6 @@ object Dedup {
         s"dedupClusters: not converged after $maxIter rounds — raise maxIter")
     Materialize.free(edges)
     labels
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the adversarial-graph escape hatch behind the
-    * same (id, cluster) contract as `dedupClusters`. Where min-label
-    * propagation re-ships every component's full frontier each round,
-    * star contraction rewires each edge toward its neighborhood minimum,
-    * shrinking hot vertices geometrically: O(log n) rounds with per-round
-    * work proportional to the CURRENT edge set (which collapses toward
-    * one edge per node), no per-component skew pileup.
-    *
-    * Edges are kept in (u > v) canonical form between rounds.
-    *  - large-star (on the symmetrized set): every neighbor v > u is
-    *    re-pointed at m = min(N(u) ∪ u);
-    *  - small-star (on the canonical set, so N(u) < u): u and all its
-    *    smaller neighbors re-point at m = min(N(u)).
-    * The fixpoint is a forest of min-rooted stars, read out as
-    * (child → root) plus (root → root). Convergence = the canonical
-    * edge set is unchanged by a full round, checked exactly (anti-join
-    * + count) on the same geometric probe schedule as `dedupClusters`;
-    * maxIter exhaustion throws.
-    */
-  def dedupClustersStar(pairs: DataFrame, maxIter: Int = 50,
-      localEdgeThreshold: Int = 2000000): DataFrame = {
-    tryCollectEdges(pairs, localEdgeThreshold) match {
-      case Some(es) =>
-        return localClusters(pairs.sparkSession, es.filter(p => p._1 != p._2))
-      case None => ()
-    }
-    val init = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .filter(col("u") =!= col("v"))
-    var edges = init
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct().transform(Materialize.cut)
-
-    def round(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mLarge = sym.groupBy("u")
-        .agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val afterLarge = sym.join(mLarge, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // afterLarge is already (u > v): m <= anchor < re-pointed v
-      val mSmall = afterLarge.groupBy("u").agg(min("v").as("m"))
-      val children = afterLarge.join(mSmall, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(mSmall.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-      children.transform(Materialize.cut)
-    }
-
-    var iter = 0
-    var nextProbe = 2
-    var converged = edges.isEmpty
-    while (!converged && iter < maxIter) {
-      val next = round(edges)
-      iter += 1
-      if (iter == nextProbe || iter == maxIter) {
-        // exact set equality: next ⊆ edges (anti-join empty) and equal
-        // distinct cardinality
-        converged =
-          next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() == 0 &&
-            next.count() == edges.count()
-        nextProbe *= 2
-      }
-      Materialize.free(edges)
-      edges = next
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedupClustersStar: not converged after $maxIter rounds — raise maxIter")
-    val labels = edges.groupBy("u").agg(min("v").as("cluster"))
-      .select(col("u").as("id"), col("cluster"))
-      .unionByName(edges.select(col("v").as("cluster")).distinct()
-        .select(col("cluster").as("id"), col("cluster")))
-    // materialize before freeing the edge blocks the plan reads
-    val out = labels.transform(Materialize.cut)
-    Materialize.free(edges)
-    out
   }
 
   // ------------------------------------------------------------------

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge lists. Companion to the
-  * connected-components operators in [[Dedup]] (label propagation +
-  * pointer jumping, large-star/small-star): those answer "which rows are
-  * the same entity"; PageRank answers "which entities matter" — the
-  * standard importance prior for source/domain weighting in a
-  * training-data pipeline (e.g. Common-Crawl-style host ranking).
+  * connected-components operator in [[Dedup]] (min-label propagation +
+  * pointer jumping): that answers "which rows are the same entity";
+  * PageRank answers "which entities matter" — the standard importance
+  * prior for source/domain weighting in a training-data pipeline
+  * (e.g. Common-Crawl-style host ranking).
   *
   * All arithmetic is INTEGER (scaled fixed-point with explicit floor
   * division), so the ranks replay bit-for-bit in any engine — the usual
@@ -24,6 +24,34 @@ object Graph {
   val RankScale = 1000000000L
   /** Fixed-point scale of the per-edge transition probabilities. */
   val ProbScale = 1000000L
+
+  /** The cut (src, dst, p) edge list of [[pageRank]] and
+    * [[personalizedPageRank]]: p(u→v) = w(u,v) * ProbScale div outw(u).
+    */
+  private def transitions(edges: DataFrame, srcCol: String,
+      dstCol: String, wCol: String): DataFrame = {
+    val outw = edges.groupBy(col(srcCol).as("__src"))
+      .agg(sum(col(wCol)).as("__outw"))
+    edges
+      .join(outw, col(srcCol) === col("__src"))
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        expr(s"$wCol * ${ProbScale}L div __outw").as("p"))
+      .transform(Materialize.cut)
+  }
+
+  /** The cut symmetrized simple edge list (u, v) of [[kcore]],
+    * [[bfsHops]] and [[labelPropagation]]: self-loops dropped, each
+    * undirected edge once per direction.
+    */
+  private def symmetrized(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    val und = edges.filter(col(srcCol) =!= col(dstCol))
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .distinct()
+    und.union(und.select(col("v"), col("u")))
+      .transform(Materialize.cut)
+  }
 
   /** Weighted PageRank with damping 17/20 (= 0.85 exactly), `iters`
     * synchronous iterations, dangling mass NOT redistributed (nodes
@@ -46,13 +74,7 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, iters: Int = 8): DataFrame = {
     require(iters >= 1, "pageRank: iters must be >= 1")
-    val outw = edges.groupBy(col(srcCol).as("__src"))
-      .agg(sum(col(wCol)).as("__outw"))
-    val e = edges
-      .join(outw, col(srcCol) === col("__src"))
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        expr(s"$wCol * ${ProbScale}L div __outw").as("p"))
-      .transform(Materialize.cut)
+    val e = transitions(edges, srcCol, dstCol, wCol)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct().transform(Materialize.cut)
     val n = nodes.count()
@@ -91,13 +113,7 @@ object Graph {
       dstCol: String, wCol: String, sources: DataFrame,
       iters: Int = 8): DataFrame = {
     require(iters >= 1, "personalizedPageRank: iters must be >= 1")
-    val outw = edges.groupBy(col(srcCol).as("__src"))
-      .agg(sum(col(wCol)).as("__outw"))
-    val e = edges
-      .join(outw, col(srcCol) === col("__src"))
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        expr(s"$wCol * ${ProbScale}L div __outw").as("p"))
-      .transform(Materialize.cut)
+    val e = transitions(edges, srcCol, dstCol, wCol)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
     // seeds restricted to graph nodes: restart mass must stay in the
@@ -161,7 +177,9 @@ object Graph {
     * per half-step and recompute the base joins 4^iters times; the
     * raw tables are therefore cut every round (2·iters bounded
     * materializations, the same per-round lineage discipline as
-    * [[kcore]]/[[bfs]]). Scores stay distributed; zero/negative-
+    * [[kcore]]/[[bfs]]). A raw table is freed as soon as the next
+    * half-step's cut has read it (the last round's two stay: the
+    * output reads them). Scores stay distributed; zero/negative-
     * weight edges are dropped at entry (they contribute nothing and
     * would let the max degenerate).
     *
@@ -182,10 +200,12 @@ object Graph {
       "hits: empty edge list — no nodes to score")
     var hub = nodes.select(col("node"), lit(ProbScale).as("h"))
     var auth: DataFrame = null
-    for (_ <- 1 to iters) {
+    var prevH: Option[DataFrame] = None
+    for (i <- 1 to iters) {
       val rawA = e.join(hub, e("src") === hub("node"))
         .groupBy(col("dst")).agg(sum(d(col("w")) * col("h")).as("__raw"))
         .transform(Materialize.cut)
+      prevH.foreach(Materialize.free)
       val mA = rawA.agg(max(col("__raw")).as("__mx"))
       auth = rawA.crossJoin(broadcast(mA))
         .select(col("dst").as("node"),
@@ -193,6 +213,8 @@ object Graph {
       val rawH = e.join(auth, e("dst") === auth("node"))
         .groupBy(col("src")).agg(sum(d(col("w")) * col("a")).as("__raw"))
         .transform(Materialize.cut)
+      if (i < iters) Materialize.free(rawA)
+      prevH = Some(rawH)
       val mH = rawH.agg(max(col("__raw")).as("__mx"))
       hub = rawH.crossJoin(broadcast(mH))
         .select(col("src").as("node"),
@@ -229,12 +251,7 @@ object Graph {
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1, "kcore: need k >= 1, rounds >= 1")
-    val und = edges.filter(col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-    val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Materialize.cut)
+    val sym = symmetrized(edges, srcCol, dstCol)
     def degrees(alive: DataFrame): DataFrame =
       sym.join(alive.select(col("node").as("u")), "u")
         .join(alive.select(col("node").as("v")), "v")
@@ -247,15 +264,19 @@ object Graph {
     // monotone, so a round that drops NOBODY is the fixpoint — every
     // later round is identical and can be skipped (the checkpoint
     // makes the count a free read, and the early exit returns exactly
-    // the `rounds`-peel answer).
+    // the `rounds`-peel answer). Nothing reads a superseded survivor
+    // list once the next one is cut, so it is freed then: the pinned
+    // blocks stay two lists, not one per round.
     var alive = sym.select(col("u").as("node")).distinct()
       .transform(Materialize.cut)
     var n = alive.count()
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
-      alive = degrees(alive).filter(col("deg") >= k).select("node")
+      val next = degrees(alive).filter(col("deg") >= k).select("node")
         .transform(Materialize.cut)
+      Materialize.free(alive)
+      alive = next
       val n2 = alive.count()
       converged = n2 == n
       n = n2
@@ -281,12 +302,7 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, "bfsHops: rounds must be >= 1")
-    val und = edges.filter(col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-    val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Materialize.cut)
+    val sym = symmetrized(edges, srcCol, dstCol)
     var dist = sources.select(col(sources.columns.head).as("node"))
       .distinct().withColumn("dist", lit(0L)).transform(Materialize.cut)
     var frontier = dist.select("node")
@@ -336,12 +352,7 @@ object Graph {
       rounds: Int = 4, packedArgmax: Boolean = false): DataFrame = {
     require(rounds >= 1, "labelPropagation: rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val und = edges.filter(col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-    val sym = und.union(und.select(col("v"), col("u")))
-      .transform(Materialize.cut)
+    val sym = symmetrized(edges, srcCol, dstCol)
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("label", col("node")).transform(Materialize.cut)
     val w = Window.partitionBy("node")
@@ -422,7 +433,9 @@ object Graph {
     * bfsHops]] already had it); at 100 TB the late rounds of the old
     * shape re-aggregated nearly the whole relaxed edge set each round.
     * The frontier itself derives from two pinned tables and is
-    * consumed once, so it needs no pin of its own.
+    * consumed once, so it needs no pin of its own; it reads the
+    * previous arrival table, so two generations stay pinned and the
+    * older one is freed once the next round's cut has read the frontier.
     */
   def earliestArrival(edges: DataFrame, srcCol: String, dstCol: String,
       tCol: String, sources: DataFrame, rounds: Int = 4): DataFrame = {
@@ -435,6 +448,7 @@ object Graph {
     var arr = sources.select(col(sources.columns.head).as("node"))
       .distinct().withColumn("arr", lit(0L)).transform(Materialize.cut)
     var frontier = arr
+    var prev: Option[DataFrame] = None
     for (_ <- 1 to rounds) {
       val cand = sym
         .join(frontier.withColumnRenamed("node", "u")
@@ -444,12 +458,15 @@ object Graph {
       val next = arr.union(cand)
         .groupBy("node").agg(min(col("arr")).as("arr"))
         .transform(Materialize.cut)
+      prev.foreach(Materialize.free)
       frontier = next
         .join(arr.withColumnRenamed("arr", "__prev"), Seq("node"), "left")
         .filter(col("__prev").isNull || col("arr") < col("__prev"))
         .select("node", "arr")
+      prev = Some(arr)
       arr = next
     }
+    prev.foreach(Materialize.free) // the last frontier is never read
     arr
   }
 

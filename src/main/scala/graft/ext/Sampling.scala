@@ -493,23 +493,13 @@ object Sampling {
     * language/domain/source before unioning a training mix.
     */
   def quotaPerGroup(df: DataFrame, groupCols: Seq[String],
-      orderBy: Seq[Column], quota: Int,
-      distributed: Boolean = false): DataFrame = {
+      orderBy: Seq[Column], quota: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(quota > 0, "quota must be positive")
-    // `distributed` swaps the window for [[groupedRowNumber]] — the
-    // per-language/domain quota is exactly the giant-group case (a
-    // mostly-English corpus funnels through ONE task's sort under the
-    // window); identical kept set, spec-pinned.
-    if (distributed)
-      groupedRowNumber(df, groupCols, orderBy, "__rank")
-        .filter(col("__rank") <= quota)
-        .select(df.columns.map(col): _*)
-    else
-      df.withColumn("__rank", row_number().over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy(orderBy: _*)))
-        .filter(col("__rank") <= quota)
-        .drop("__rank")
+    df.withColumn("__rank", row_number().over(
+      Window.partitionBy(groupCols.map(col): _*).orderBy(orderBy: _*)))
+      .filter(col("__rank") <= quota)
+      .drop("__rank")
   }
 
   private def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
@@ -710,16 +700,12 @@ object Sampling {
     * a long; violations fail loudly per-row (`raise_error`), not
     * silently. Ties differ from [[mixOrder]] only where that function
     * used the caller's listing order: here the tie order is the source
-    * NAME (no listing exists with table-valued weights).
-    *
-    * `distributedPos = false` (default) ranks within each source with
-    * one window — fine while every source fits a task's sort budget.
-    * `true` switches to [[groupedRowNumber]] (identical positions,
-    * spec-pinned), which survives a single source of ANY size.
+    * NAME (no listing exists with table-valued weights). Positions
+    * within each source come from one window, so each source must fit
+    * a task's sort budget.
     */
   def mixOrderByTable(df: DataFrame, idCol: String, groupCol: String,
-      weightsDf: DataFrame, weightCol: String = "weight",
-      distributedPos: Boolean = false): DataFrame = {
+      weightsDf: DataFrame, weightCol: String = "weight"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val maxW = 1L << 20
     // aggregate-first so a DUPLICATED source row in weightsDf fails
@@ -743,13 +729,9 @@ object Sampling {
                 col(groupCol).cast("string"))))).as("__w"))
     val hashed = df.join(wDim, groupCol)
       .withColumn("__h", fastMd5(col(idCol).cast("string")))
-    val posed =
-      if (distributedPos)
-        groupedRowNumber(hashed, groupCol,
-          Seq(col("__h").asc, col(idCol).asc), "pos")
-      else hashed.withColumn("pos", row_number().over(
-        Window.partitionBy(groupCol)
-          .orderBy(col("__h").asc, col(idCol).asc)).cast("long"))
+    val posed = hashed.withColumn("pos", row_number().over(
+      Window.partitionBy(groupCol)
+        .orderBy(col("__h").asc, col(idCol).asc)).cast("long"))
     val keyed = posed
       .withColumn("__vq", expr("pos div __w"))
       .withColumn("__vf", expr(s"((pos % __w) * ${1L << 40}L) div __w"))
@@ -775,14 +757,10 @@ object Sampling {
     * truncated to `total`. Output matches `epochMixOrder`:
     * (global_pos, source, id, epoch, pos). Ties at equal virtual time
     * order by source NAME (no listing order exists).
-    * `distributedPos` as in [[mixOrderByTable]]: positions and counts
-    * via [[groupedRowNumber]] + a count join instead of per-source
-    * windows, for sources bigger than a task's sort budget.
     */
   def epochMixOrderByTable(df: DataFrame, idCol: String, groupCol: String,
       weightsDf: DataFrame, total: Long,
-      weightCol: String = "weight",
-      distributedPos: Boolean = false): DataFrame = {
+      weightCol: String = "weight"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(total > 0, "epochMixOrderByTable: total must be positive")
     val maxW = 1L << 20
@@ -813,21 +791,12 @@ object Sampling {
     val totals = joined.groupBy(groupCol).agg(first(col("__w")).as("__w"))
       .agg(sum("__w").as("__wSum"), count(lit(1)).as("__nSrc"))
     val hashed = joined.withColumn("__h", fastMd5(col(idCol).cast("string")))
-    val based =
-      if (distributedPos) {
-        val counts = joined.groupBy(groupCol)
-          .agg(count(lit(1)).cast("long").as("__n"))
-        groupedRowNumber(hashed, groupCol,
-          Seq(col("__h").asc, col(idCol).asc), "__p0")
-          .join(counts, groupCol)
-      } else {
-        val byHash = Window.partitionBy(groupCol)
-          .orderBy(col("__h").asc, col(idCol).asc)
-        val perSrc = Window.partitionBy(groupCol)
-        hashed
-          .withColumn("__p0", row_number().over(byHash).cast("long"))
-          .withColumn("__n", count(lit(1)).over(perSrc).cast("long"))
-      }
+    val byHash = Window.partitionBy(groupCol)
+      .orderBy(col("__h").asc, col(idCol).asc)
+    val perSrc = Window.partitionBy(groupCol)
+    val based = hashed
+      .withColumn("__p0", row_number().over(byHash).cast("long"))
+      .withColumn("__n", count(lit(1)).over(perSrc).cast("long"))
     val expanded = based
       .crossJoin(broadcast(totals))
       .withColumn("__epochs",

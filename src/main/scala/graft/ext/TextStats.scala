@@ -188,30 +188,21 @@ object TextStats {
     * token explode is recomputed rather than cached — persist `toks`
     * upstream if the source scan dominates.
     *
-    * The df-table join strategy is size-gated, not hard-coded:
-    * `broadcastDf = None` (default) leaves the join unhinted so AQE
-    * picks broadcast vs shuffle from the ACTUAL runtime size of the
-    * aggregated vocabulary — a natural-corpus vocab broadcasts, a
-    * web-scale one shuffle-joins, and no upfront count job is spent
-    * deciding (a row-count gate would have to re-aggregate the whole
-    * vocab just to count it). `Some(true)`/`Some(false)` force a branch
-    * (both produce identical results; ExtSpec asserts it).
+    * The df-table join is left unhinted, so AQE picks broadcast vs
+    * shuffle from the ACTUAL runtime size of the aggregated vocabulary —
+    * a natural-corpus vocab broadcasts, a web-scale one shuffle-joins,
+    * and no upfront count job is spent deciding (a row-count gate would
+    * have to re-aggregate the whole vocab just to count it).
     */
   def tfIdfTopK(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, k: Int,
-      broadcastDf: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
+      textCol: String, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("t"))
     val tf = toks.groupBy(idCol, "t").agg(count(lit(1)).as("tf"))
     val docFreq = toks.groupBy("t")
       .agg(count_distinct(col(idCol)).as("df"))
-    val dfSide = broadcastDf match {
-      case Some(true)  => broadcast(docFreq)
-      case Some(false) => docFreq.hint("shuffle_merge")
-      case None        => docFreq
-    }
     val n = df.select(count(lit(1)).as("n_docs"))
-    val scored = tf.join(dfSide, "t")
+    val scored = tf.join(docFreq, "t")
       .crossJoin(broadcast(n))
       .withColumn("weight",
         (col("tf") * col("n_docs")).cast("double") / col("df"))
@@ -239,12 +230,11 @@ object TextStats {
     * token slices — interpreted per element, but volume = output
     * bigrams, like the bucket-pair kernels); one shuffle each for the
     * bigram and unigram counts; the marginal joins broadcast the
-    * unigram side (vocabulary-sized — for a web-scale vocab flip
-    * `broadcastUnigrams=false` and they become shuffle joins on w1/w2);
-    * TakeOrderedAndProject caps the result at `k`.
+    * unigram side (vocabulary-sized); TakeOrderedAndProject caps the
+    * result at `k`.
     */
   def collocations(df: DataFrame, textCol: Column, k: Int,
-      minCount: Long = 2, broadcastUnigrams: Boolean = true): DataFrame = {
+      minCount: Long = 2): DataFrame = {
     val toks = tokens(textCol)
     val nb = size(toks) - 1
     val bigrams = df
@@ -254,16 +244,15 @@ object TextStats {
         (x, y) => struct(x.as("w1"), y.as("w2")))).as("bg"))
       .select(col("bg.w1"), col("bg.w2"))
     val unigrams = df.select(explode(tokens(textCol)).as("term"))
-    val uc = unigrams.groupBy("term").agg(count(lit(1)).as("c"))
-    val ucSide = if (broadcastUnigrams) broadcast(uc) else uc
+    val uc = broadcast(unigrams.groupBy("term").agg(count(lit(1)).as("c")))
     // one cheap agg for both totals (documents-table scan, two longs out)
     val totals = df.select(
       sum(size(toks)).as("nu"), sum(greatest(nb, lit(0))).as("nbg")).head()
     val (nU, nB) = (totals.getLong(0), totals.getLong(1))
     bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      .join(ucSide.withColumnRenamed("term", "w1").withColumnRenamed("c", "cx"), "w1")
-      .join(ucSide.withColumnRenamed("term", "w2").withColumnRenamed("c", "cy"), "w2")
+      .join(uc.withColumnRenamed("term", "w1").withColumnRenamed("c", "cx"), "w1")
+      .join(uc.withColumnRenamed("term", "w2").withColumnRenamed("c", "cy"), "w2")
       .withColumn("lift6", Similarity.trunc(
         col("cnt").cast("double") * lit(nU.toDouble) * lit(nU.toDouble) /
           (lit(nB.toDouble) * col("cx").cast("double") * col("cy").cast("double")),

@@ -36,7 +36,7 @@ private[queries] object ExtDedupQueries {
     // computed explode-side with partial-aggregated min (codegen'd).
     "q26_minhash_sig" -> ((s, d) => {
       Dedup.minhashSignatures(documents(s, d), "doc_id", "text",
-        n = 3, k = 4, portable = true)
+        n = 3, k = 4)
         .orderBy("doc_id")
     }),
 
@@ -48,7 +48,7 @@ private[queries] object ExtDedupQueries {
     // emission — not a self-join that would compute signatures twice.
     "q27_minhash_bands" -> ((s, d) => {
       Dedup.minhashSignatures(documents(s, d), "doc_id", "text",
-        n = 3, k = 4, portable = true)
+        n = 3, k = 4)
         .select(col("doc_id"), explode(array(
           struct(col("mh0").as("k1"), col("mh1").as("k2")),
           struct(col("mh2").as("k1"), col("mh3").as("k2")))).as("b"))
@@ -93,22 +93,20 @@ private[queries] object ExtDedupQueries {
     // End-to-end fuzzy dedup — the flagship LLM-pipeline operator:
     // shingle → minhash → LSH band join → Jaccard verify, graded with
     // the portable md5 family + literal band keys so DuckDB replays the
-    // ENTIRE pipeline (banding included). The xxhash64 fast path keeps
-    // identical plan shape and is covered by ExtSpec.
+    // ENTIRE pipeline (banding included).
     "q36_minhash_neardup" -> ((s, d) => {
       Dedup.minhashNearDups(documents(s, d), "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+        n = 3, k = 8, bands = 4, threshold = 0.5)
         .orderBy("id_a", "id_b")
     }),
 
     // SimHash near-dups, portable md5 bit family: the 2-of-5 block join
-    // is lossless for hamming<=3, so the DuckDB oracle replays the
-    // semantics as a brute-force per-bit-majority + hamming filter.
-    // The xxhash64 fast path shares every operator except the token
-    // hash and is asserted pair-set-equal to brute force in ExtSpec.
+    // is lossless for hamming<=3 (ExtSpec asserts pair-set equality with
+    // brute force), so the DuckDB oracle replays the semantics as a
+    // brute-force per-bit-majority + hamming filter.
     "q37_simhash" -> ((s, d) => {
       Dedup.simhashNearDups(documents(s, d), "doc_id", "text",
-        maxHamming = 3, portable = true)
+        maxHamming = 3)
         .orderBy("id_a", "id_b")
     }),
 
@@ -116,8 +114,7 @@ private[queries] object ExtDedupQueries {
     // mass of q37's pair output, measured at 10x in BUILD_NOTES round
     // 7, collapsed to one row per doc) ...
     "q187_simhash_groups" -> ((s, d) =>
-      Dedup.simhashGroups(documents(s, d), "doc_id", "text",
-        portable = true)
+      Dedup.simhashGroups(documents(s, d), "doc_id", "text")
         .orderBy("doc_id")),
 
     // ... plus near-dup edges between DISTINCT signatures only — the
@@ -125,7 +122,7 @@ private[queries] object ExtDedupQueries {
     // the exact q37 pair set; DedupScaleSpec asserts it).
     "q188_simhash_group_edges" -> ((s, d) =>
       Dedup.simhashGroupEdges(documents(s, d), "doc_id", "text",
-        maxHamming = 3, portable = true)
+        maxHamming = 3)
         .orderBy("rep_a", "rep_b")),
 
     // Multimodal plumbing: synthetic media table → mapPartitions decode
@@ -146,30 +143,33 @@ private[queries] object ExtDedupQueries {
     // recursive transitive closure.
     "q49_dedup_clusters" -> ((s, d) => {
       val pairs = Dedup.minhashNearDups(documents(s, d), "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+        n = 3, k = 8, bands = 4, threshold = 0.5)
       Dedup.dedupClusters(pairs.select("id_a", "id_b"))
         .orderBy("id")
     }),
 
-    // Same cluster assignment via alternating large-star/small-star
-    // contraction (Kiveris SoCC'14) — the skew-safe CC variant; must
-    // reach the identical fixpoint, so it shares q49's recursive oracle.
+    // q49's clusters through the DISTRIBUTED min-label loop
+    // (localEdgeThreshold = 0): q49's pair graph is small enough for the
+    // driver-side union-find, so this is the query that grades the loop
+    // large graphs take. Same fixpoint, so it shares q49's recursive
+    // oracle.
     "q54_dedup_clusters_star" -> ((s, d) => {
       val pairs = Dedup.minhashNearDups(documents(s, d), "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
-      Dedup.dedupClustersStar(pairs.select("id_a", "id_b"))
+        n = 3, k = 8, bands = 4, threshold = 0.5)
+      Dedup.dedupClusters(pairs.select("id_a", "id_b"),
+        localEdgeThreshold = 0)
         .orderBy("id")
     }),
 
-    // Fuzzy-dedup REMOVAL, end to end: minhash near-dup pairs → star
-    // contraction clusters → keep the canonical (min-id) member per
+    // Fuzzy-dedup REMOVAL, end to end: minhash near-dup pairs →
+    // dedupClusters → keep the canonical (min-id) member per
     // cluster, every unclustered doc passes through. The composition a
     // corpus curator actually runs; the delete set is tiny so the final
     // anti-join broadcasts — the corpus is never shuffled.
     "q71_fuzzy_curation" -> ((s, d) => {
       val docs = documents(s, d)
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+        n = 3, k = 8, bands = 4, threshold = 0.5)
       Dedup.keepCanonical(docs, "doc_id", pairs.select("id_a", "id_b"))
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy("doc_id")
@@ -187,10 +187,9 @@ private[queries] object ExtDedupQueries {
       // per-invocation unique dir (q167 pattern, see q53)
       val path = tempDir("graft_q69_") + "/idx"
       Dedup.writeLshIndex(docs.filter(col("doc_id") >= 50), "doc_id",
-        "text", n = 3, k = 8, bands = 4, portable = true, path = path)
+        "text", n = 3, k = 8, bands = 4, path = path)
       Dedup.incrementalNearDups(s, path, docs.filter(col("doc_id") < 50),
-        "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5,
-        portable = true)
+        "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5)
         .orderBy("batch_id", "corpus_id")
     }),
 
@@ -396,8 +395,7 @@ private[queries] object ExtDedupQueries {
     // |A∩B|/min(|A|,|B|) >= 2/3 verify in pure integers.
     "q159_containment" -> ((s, d) => {
       Dedup.containmentPairs(documents(s, d), "doc_id", "text",
-        n = 3, k = 8, bands = 4, tauNum = 2, tauDen = 3,
-        portable = true)
+        n = 3, k = 8, bands = 4, tauNum = 2, tauDen = 3)
         .orderBy("id_a", "id_b")
     }),
 
@@ -426,14 +424,13 @@ private[queries] object ExtDedupQueries {
       // between concurrent bench + verify invocations.
       val path = tempDir("graft_q183_") + "/idx"
       Dedup.writeLshIndex(docs.filter(col("doc_id") >= 100), "doc_id",
-        "text", n = 3, k = 8, bands = 4, portable = true, path = path)
+        "text", n = 3, k = 8, bands = 4, path = path)
       Dedup.appendLshIndex(
         docs.filter(col("doc_id") >= 50 && col("doc_id") < 100),
-        "doc_id", "text", n = 3, k = 8, bands = 4, portable = true,
+        "doc_id", "text", n = 3, k = 8, bands = 4,
         path = path)
       Dedup.incrementalNearDups(s, path, docs.filter(col("doc_id") < 50),
-        "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5,
-        portable = true)
+        "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5)
         .orderBy("batch_id", "corpus_id")
     }),
 
@@ -442,8 +439,7 @@ private[queries] object ExtDedupQueries {
     // twin of q182's ANN recall, one summary row.
     "q185_lsh_recall" -> ((s, d) =>
       Dedup.lshRecallAudit(documents(s, d), "doc_id", "text",
-        maxId = 300L, n = 3, k = 8, bands = 4, threshold = 0.5,
-        portable = true)
+        maxId = 300L, n = 3, k = 8, bands = 4, threshold = 0.5)
         .orderBy("n_true")),
 
     // Content-defined chunking dedup: md5-window boundaries (~64-char

@@ -645,7 +645,7 @@ private[queries] object ExtInfraQueries {
     "q100_leakage_safe_split" -> ((s, d) => {
       val docs = documents(s, d)
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+        n = 3, k = 8, bands = 4, threshold = 0.5)
       val clusters = Dedup.dedupClusters(pairs.select("id_a", "id_b"))
       val withCluster = docs.select(col("doc_id"))
         .join(clusters, docs("doc_id") === clusters("id"), "left")

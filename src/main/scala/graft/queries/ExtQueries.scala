@@ -11,8 +11,7 @@ import graft.streaming.EventsOps
   * (BASELINE.json north star): dedup, similarity search, text analysis,
   * event windows. Each delegates to the library module and keeps the
   * deterministic-output discipline of CoreQueries. Hash functions in
-  * oracle-checked queries are md5-based (portable); the xxhash64 fast
-  * paths are covered by unit tests and rows-only checks.
+  * oracle-checked queries are md5-based (portable).
   */
 object ExtQueries {
   val defs: Map[String, ExtHarness.Q] =

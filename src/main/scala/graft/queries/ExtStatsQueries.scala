@@ -488,7 +488,7 @@ private[queries] object ExtStatsQueries {
     "q169_pair_mining" -> ((s, d) =>
       Dedup.trainingPairs(documents(s, d), "doc_id", "text",
         n = 3, k = 8, bands = 4, posNum = 1, posDen = 2,
-        negNum = 1, negDen = 5, negKeepPct = 10, portable = true)
+        negNum = 1, negDen = 5, negKeepPct = 10)
         .orderBy(col("label").desc, col("id_a"), col("id_b"))),
 
     // Deterministic A/B bucketing (md5(experiment|unit) % 2) + exact

@@ -392,7 +392,7 @@ private[queries] object ExtStreamQueries {
       val root = tempDir("graft_q226_")
       val path = root + "/idx"
       Dedup.writeLshIndex(docs.filter(col("doc_id") >= 50), "doc_id",
-        "text", n = 3, k = 8, bands = 4, portable = true, path = path)
+        "text", n = 3, k = 8, bands = 4, path = path)
       val batchDocs = docs.filter(col("doc_id") < 50)
         .select(col("doc_id"), col("text"),
           // offset the synthetic event times a year past the epoch:
@@ -405,7 +405,7 @@ private[queries] object ExtStreamQueries {
       streamReplaySrc(s, root, batchDocs,
         in => graft.streaming.StreamingJobs.nearDupStream(s, path,
           in.withWatermark("ts", "1 hour"), "doc_id", "text",
-          n = 3, k = 8, bands = 4, threshold = 0.5, portable = true),
+          n = 3, k = 8, bands = 4, threshold = 0.5),
         "append", cacheKey = Some(s"docs50|$d"))
         .select("batch_id", "corpus_id", "jaccard")
         .orderBy("batch_id", "corpus_id")
@@ -433,7 +433,7 @@ private[queries] object ExtStreamQueries {
       val appendedRange = col("doc_id") >= 200 && col("doc_id") < 300
       Dedup.writeLshIndex(
         docs.filter(col("doc_id") >= 50 && !appendedRange), "doc_id",
-        "text", n = 3, k = 8, bands = 4, portable = true, path = path)
+        "text", n = 3, k = 8, bands = 4, path = path)
       val batchDocs = docs.filter(col("doc_id") < 50)
         .select(col("doc_id"), col("text"),
           // offset the synthetic event times a year past the epoch:
@@ -446,16 +446,15 @@ private[queries] object ExtStreamQueries {
       streamReplayWriter(s, root, batchDocs, 0 until 2,
         cacheKey = Some(s"docs50|$d")) { in =>
         graft.streaming.StreamingJobs.nearDupRefreshing(path, "doc_id",
-          "text", n = 3, k = 8, bands = 4, threshold = 0.5,
-          portable = true)(in) { (res, batchId) =>
+          "text", n = 3, k = 8, bands = 4,
+          threshold = 0.5)(in) { (res, batchId) =>
           // materialize THIS batch's probe results before mutating the
           // index — the append must be invisible to the batch that
           // triggered it and visible to the next one
           res.write.mode("append").parquet(root + "/out")
           if (batchId == 0L)
             Dedup.appendLshIndex(docs.filter(appendedRange),
-              "doc_id", "text", n = 3, k = 8, bands = 4,
-              portable = true, path = path)
+              "doc_id", "text", n = 3, k = 8, bands = 4, path = path)
         }
       }
         .orderBy("batch_id", "corpus_id")

@@ -955,7 +955,5 @@ private[queries] object ExtTextQueries {
         |  FROM tf)
         |SELECT term, df, doc_id, tf, rank FROM r
         |WHERE rank <= 5 ORDER BY term, rank""".stripMargin,
-    // q36/q37: xxhash64 fast paths — not oracle-expressible; driver
-    // records rows-only, semantics covered by specs.,
   )
 }

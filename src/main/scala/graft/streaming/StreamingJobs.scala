@@ -82,7 +82,7 @@ object StreamingJobs {
   def nearDupStream(spark: SparkSession, indexPath: String,
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4, threshold: Double = 0.7,
-      portable: Boolean = false, nDirs: Int = 64): DataFrame = {
+      nDirs: Int = 64): DataFrame = {
     import graft.ext.Dedup
     // The batch `bandRows` computes signatures with explode + groupBy —
     // a streaming AGGREGATION, illegal in an append pipeline. MinHash
@@ -90,21 +90,17 @@ object StreamingJobs {
     // projection array_min(transform(...)) — spec-pinned identical to
     // the batch signatures (StreamingSpec).
     val shRaw = Dedup.shingles(col(textCol), n)
-    val sigs = (0 until k).map { i =>
-      (if (portable) Dedup.minhashMd5(shRaw, i)
-      else Dedup.minhashFast(shRaw, i))
-        .as(s"mh$i")
-    }
-    // the SAME key scheme as the at-rest index — shared helper, so a
-    // batch-side change cannot silently zero out the stream's matches
-    val bandKeys = Dedup.bandKeyCols(k, bands, portable,
-      i => col(s"mh$i"))
+    val sigs = (0 until k).map(i => Dedup.minhashMd5(shRaw, i).as(s"mh$i"))
+    // the SAME key scheme and directory hash as the at-rest index —
+    // shared helpers, so a batch-side change cannot silently zero out
+    // the stream's matches
+    val bandKeys = Dedup.bandKeyCols(k, bands, i => col(s"mh$i"))
     val banded = docs
       .select(col(idCol).as("batch_id") +: col("ts") +:
         array_distinct(shRaw).as("sh_b") +: sigs: _*)
       .select(col("batch_id"), col("ts"), col("sh_b"),
         posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-      .withColumn("pdir", pmod(hash(col("bkey")), lit(nDirs)))
+      .withColumn("pdir", Dedup.indexDir(col("bkey"), nDirs))
     val bandIdx = spark.read.parquet(s"$indexPath/bands")
     val cSh = spark.read.parquet(s"$indexPath/shingles")
       .select(col(idCol).as("corpus_id"), col("sh").as("sh_a"))
@@ -140,15 +136,14 @@ object StreamingJobs {
     */
   def nearDupRefreshing(indexPath: String, idCol: String,
       textCol: String, n: Int = 3, k: Int = 8, bands: Int = 4,
-      threshold: Double = 0.7, portable: Boolean = false,
-      nDirs: Int = 64)(docs: DataFrame)(
+      threshold: Double = 0.7, nDirs: Int = 64)(docs: DataFrame)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
           org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(graft.ext.Dedup.incrementalNearDups(batch.sparkSession,
-        indexPath, batch, idCol, textCol, n, k, bands, threshold,
-        portable, nDirs), batchId)
+        indexPath, batch, idCol, textCol, n, k, bands, threshold, nDirs),
+        batchId)
     }
 
   /** Streaming daily distinct active users: watermark-bounded dedup of

@@ -14,14 +14,13 @@ class DedupScaleSpec extends SparkSpec {
   test("simhash groups + group edges expand to the exact q37 pair set") {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val pairs = Dedup.simhashNearDups(docs, "doc_id", "text",
-      maxHamming = 3, portable = true)
+      maxHamming = 3)
       .selectExpr("id_a", "id_b", "cast(hamming as int)")
       .as[(Long, Long, Int)].collect().toSet
-    val groups = Dedup.simhashGroups(docs, "doc_id", "text",
-      portable = true)
+    val groups = Dedup.simhashGroups(docs, "doc_id", "text")
       .selectExpr("doc_id", "group_id").as[(Long, Long)].collect()
     val edges = Dedup.simhashGroupEdges(docs, "doc_id", "text",
-      maxHamming = 3, portable = true)
+      maxHamming = 3)
       .selectExpr("rep_a", "rep_b", "cast(hamming as int)")
       .as[(Long, Long, Int)].collect()
     assert(pairs.nonEmpty, "corpus produced no near-dup pairs")
@@ -52,7 +51,7 @@ class DedupScaleSpec extends SparkSpec {
     val d = Seq((1L, Some("a b c a b c")), (2L, None),
       (3L, Some("a b c a b c")), (4L, None))
       .toDF("doc_id", "text")
-    val got = Dedup.simhashGroups(d, "doc_id", "text", portable = true)
+    val got = Dedup.simhashGroups(d, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
     // identical texts group together; each null-text doc is its OWN
     // singleton (no content evidence to merge on)

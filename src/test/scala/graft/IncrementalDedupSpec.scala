@@ -19,17 +19,16 @@ class IncrementalDedupSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft_inc").toString + "/idx"
     Dedup.writeLshIndex(corpus, "doc_id", "text",
-      n = 3, k = 8, bands = 4, portable = true, path = path)
+      n = 3, k = 8, bands = 4, path = path)
     val inc = Dedup.incrementalNearDups(spark, path, batch,
-      "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5,
-      portable = true)
+      "doc_id", "text", n = 3, k = 8, bands = 4, threshold = 0.5)
     val got = inc.select($"batch_id", $"corpus_id", $"jaccard")
       .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
     // reference: full recompute over corpus+batch, sliced to cross pairs
     // (ids are ordered id_a < id_b and batch ids < corpus ids, so the
     // cross slice is exactly id_a < split <= id_b)
     val full = Dedup.minhashNearDups(docs, "doc_id", "text",
-      n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+      n = 3, k = 8, bands = 4, threshold = 0.5)
       .filter($"id_a" < split && $"id_b" >= split)
       .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
     assert(got == full)
@@ -59,7 +58,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_appimm")
     val path = root.toString + "/idx"
     Dedup.writeLshIndex(docs.filter($"doc_id" >= 100), "doc_id", "text",
-      n = 3, k = 8, bands = 4, portable = true, path = path)
+      n = 3, k = 8, bands = 4, path = path)
     def snapshot(): Map[String, (Long, String)] =
       Files.walk(root).iterator().asScala
         .filter(p => Files.isRegularFile(p) &&
@@ -74,7 +73,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(before.nonEmpty, "index write produced no parquet files")
     Dedup.appendLshIndex(
       docs.filter($"doc_id" >= 50 && $"doc_id" < 100), "doc_id", "text",
-      n = 3, k = 8, bands = 4, portable = true, path = path)
+      n = 3, k = 8, bands = 4, path = path)
     val after = snapshot()
     before.foreach { case (f, sig) =>
       assert(after.get(f).contains(sig),

@@ -522,12 +522,12 @@ class Round15Spec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft_r15_paridx").toString + "/idx"
     graft.ext.Dedup.writeLshIndex(docs, "doc_id", "text", n = 3, k = 8,
-      bands = 4, portable = true, path = path)
+      bands = 4, path = path)
     val bandsGot = spark.read.parquet(s"$path/bands")
       .select("pdir", "band", "bkey", "doc_id")
       .collect().map(_.toSeq).toSet
     val bandsWant = graft.ext.Dedup
-      .bandRows(docs, "doc_id", "text", 3, 8, 4, portable = true)
+      .bandRows(docs, "doc_id", "text", 3, 8, 4)
       .withColumn("pdir", pmod(hash(col("bkey")), lit(64)))
       .select("pdir", "band", "bkey", "doc_id")
       .collect().map(_.toSeq).toSet

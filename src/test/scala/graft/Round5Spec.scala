@@ -345,7 +345,7 @@ class Round5Spec extends SparkSpec {
       // and therefore no near-dup PAIR crosses splits
       val pairs = Dedup.minhashNearDups(
         graft.Tables.documents(spark, sf0001), "doc_id", "text",
-        n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+        n = 3, k = 8, bands = 4, threshold = 0.5)
       val s = out.select(col("doc_id"), col("split"))
       val crossing = pairs
         .join(s.select(col("doc_id").as("id_a"), col("split").as("sa")),

@@ -127,31 +127,6 @@ class Round8Spec extends SparkSpec {
       got.except(expected).count() === 0)
   }
 
-  test("quotaPerGroup: distributed path keeps the identical set") {
-    val d = (1 to 300).map(i => (i.toLong, s"g${i % 2}", (i * 53) % 97))
-      .toDF("id", "g", "v")
-    val ord = Seq(col("v").asc, col("id").asc)
-    val a = Sampling.quotaPerGroup(d, Seq("g"), ord, quota = 20)
-    val b = Sampling.quotaPerGroup(d, Seq("g"), ord, quota = 20,
-      distributed = true)
-    assert(a.count() === 40)
-    assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-  }
-
-  test("mixOrderByTable/epochMixOrderByTable: distributedPos identical") {
-    val d = docs4()
-    val w = d.groupBy("source")
-      .agg((count(lit(1)) % 7 + 1).cast("long").as("weight"))
-    val a = Sampling.mixOrderByTable(d, "doc_id", "source", w)
-    val b = Sampling.mixOrderByTable(d, "doc_id", "source", w,
-      distributedPos = true)
-    assert(a.except(b).count() === 0 && b.except(a).count() === 0)
-    val ea = Sampling.epochMixOrderByTable(d, "doc_id", "source", w, 200L)
-    val eb = Sampling.epochMixOrderByTable(d, "doc_id", "source", w, 200L,
-      distributedPos = true)
-    assert(ea.except(eb).count() === 0 && eb.except(ea).count() === 0)
-  }
-
   test("epochMixOrderByTable: docless weight row cannot starve output") {
     // a weight entry for a source with NO docs must not shrink the
     // epoch bound — the live source still fills all `total` slots
@@ -673,7 +648,7 @@ class Round8Spec extends SparkSpec {
     assert(perfect.getLong(2) === 1000000L)
     // real corpus: recall in [0, 1e6], exact ppm arithmetic
     val r = Dedup.lshRecallAudit(Tables.documents(spark, sf0001),
-      "doc_id", "text", maxId = 150L, portable = true).head()
+      "doc_id", "text", maxId = 150L).head()
     val (t, f, ppm) = (r.getLong(0), r.getLong(1),
       if (r.isNullAt(2)) -1L else r.getLong(2))
     assert(f <= t)

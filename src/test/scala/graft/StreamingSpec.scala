@@ -438,12 +438,12 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val idx = Files.createTempDirectory("graft_ndr").toString + "/idx"
     graft.ext.Dedup.writeLshIndex(docs.filter(col("doc_id") >= 100),
-      "doc_id", "text", path = idx, portable = true)
+      "doc_id", "text", path = idx)
     val fileA = docs.filter(col("doc_id") >= 25 && col("doc_id") < 50)
     val fileB = docs.filter(col("doc_id") < 25)
     // expectations computed with the batch operator at each index state
     val want0 = graft.ext.Dedup.incrementalNearDups(spark, idx, fileA,
-      "doc_id", "text", portable = true)
+      "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     val dir = Files.createTempDirectory("graft_ndr_in").toString
     fileA.coalesce(1).write.parquet(s"$dir/in")
@@ -454,8 +454,7 @@ class StreamingSpec extends SparkSpec {
     val got = scala.collection.mutable.Map
       .empty[Long, Set[(Long, Long, Double)]]
     var want1 = Set.empty[(Long, Long, Double)]
-    val q = StreamingJobs.nearDupRefreshing(idx, "doc_id", "text",
-      portable = true)(
+    val q = StreamingJobs.nearDupRefreshing(idx, "doc_id", "text")(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")) {
       (res, batchId) =>
@@ -466,9 +465,9 @@ class StreamingSpec extends SparkSpec {
           // the daily-ingest append, mid-stream: 50..99 join the corpus
           graft.ext.Dedup.appendLshIndex(
             docs.filter(col("doc_id") >= 50 && col("doc_id") < 100),
-            "doc_id", "text", path = idx, portable = true)
+            "doc_id", "text", path = idx)
           want1 = graft.ext.Dedup.incrementalNearDups(spark, idx, fileB,
-            "doc_id", "text", portable = true)
+            "doc_id", "text")
             .as[(Long, Long, Double)].collect().toSet
         }
     }.trigger(Trigger.AvailableNow()).start()

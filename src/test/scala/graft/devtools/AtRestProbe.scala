@@ -84,17 +84,15 @@ object AtRestProbe {
       val nCorpus = corpus.count()
       val idx = s"$work/lsh_x$m/idx"
       val (_, tBuild) = time(graft.ext.Dedup.writeLshIndex(
-        corpus, "doc_id", "text", n = 3, k = 8, bands = 4,
-        portable = true, path = idx))
+        corpus, "doc_id", "text", n = 3, k = 8, bands = 4, path = idx))
       val idxRows = spark.read.parquet(s"$idx/bands").count()
       println(f"| ${m}x | lsh_build | $nCorpus | $idxRows | - | $tBuild%.2f |")
       val (_, tApp) = time(graft.ext.Dedup.appendLshIndex(
-        delta, "doc_id", "text", n = 3, k = 8, bands = 4,
-        portable = true, path = idx))
+        delta, "doc_id", "text", n = 3, k = 8, bands = 4, path = idx))
       println(f"| ${m}x | lsh_append(50) | $nCorpus | - | - | $tApp%.2f |")
       val (pairs, tProbe) = time(graft.ext.Dedup.incrementalNearDups(
         spark, idx, batch, "doc_id", "text", n = 3, k = 8, bands = 4,
-        threshold = 0.5, portable = true).count())
+        threshold = 0.5).count())
       println(f"| ${m}x | lsh_probe(50) | $nCorpus | - | $pairs | $tProbe%.2f |")
 
       // ---- IVF index (q73/q77 shape): centroids from the base table

@@ -24,19 +24,19 @@ object IndexDecomp {
         .createTempDirectory("graft_idxdecomp").toString + "/idx"
       t("write corpus") {
         graft.ext.Dedup.writeLshIndex(docs.filter(col("doc_id") >= 100),
-          "doc_id", "text", n = 3, k = 8, bands = 4, portable = true,
+          "doc_id", "text", n = 3, k = 8, bands = 4,
           path = path)
       }
       t("append batch") {
         graft.ext.Dedup.appendLshIndex(
           docs.filter(col("doc_id") >= 50 && col("doc_id") < 100),
-          "doc_id", "text", n = 3, k = 8, bands = 4, portable = true,
+          "doc_id", "text", n = 3, k = 8, bands = 4,
           path = path)
       }
       t("probe") {
         graft.ext.Dedup.incrementalNearDups(spark, path,
           docs.filter(col("doc_id") < 50), "doc_id", "text",
-          n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+          n = 3, k = 8, bands = 4, threshold = 0.5)
           .orderBy("batch_id", "corpus_id").count()
       }
     }

@@ -40,7 +40,7 @@ object Q183Decomp {
       // compute-only: band rows and shingle projection through noop
       spark.sparkContext.setJobDescription("bands noop")
       t("bandRows corpus (noop)") {
-        Dedup.bandRows(corpus, "doc_id", "text", 3, 8, 4, portable = true)
+        Dedup.bandRows(corpus, "doc_id", "text", 3, 8, 4)
           .withColumn("pdir", pmod(hash(col("bkey")), lit(64)))
           .write.format("noop").mode("overwrite").save()
       }
@@ -53,14 +53,14 @@ object Q183Decomp {
       spark.sparkContext.setJobDescription("q183 writeLshIndex")
       t("writeLshIndex corpus") {
         Dedup.writeLshIndex(corpus, "doc_id", "text", n = 3, k = 8,
-          bands = 4, portable = true, path = path)
+          bands = 4, path = path)
       }
       println(s"  files: bands=${files(s"$path/bands")}" +
         s" shingles=${files(s"$path/shingles")}")
       spark.sparkContext.setJobDescription("q183 appendLshIndex")
       t("appendLshIndex batch") {
         Dedup.appendLshIndex(batch, "doc_id", "text", n = 3, k = 8,
-          bands = 4, portable = true, path = path)
+          bands = 4, path = path)
       }
       println(s"  files: bands=${files(s"$path/bands")}" +
         s" shingles=${files(s"$path/shingles")}")
@@ -68,7 +68,7 @@ object Q183Decomp {
       val n = t("incrementalNearDups+count") {
         Dedup.incrementalNearDups(spark, path,
           docs.filter(col("doc_id") < 50), "doc_id", "text",
-          n = 3, k = 8, bands = 4, threshold = 0.5, portable = true)
+          n = 3, k = 8, bands = 4, threshold = 0.5)
           .orderBy("batch_id", "corpus_id").count()
       }
       println(s"  probe rows: $n")

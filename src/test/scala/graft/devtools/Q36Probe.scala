@@ -66,21 +66,21 @@ object Q36Probe {
       val docs = spark.read.parquet(replicateDocs(m))
       val nDocs = docs.count()
       val sigs = graft.ext.Dedup.minhashSignatures(
-        docs, "doc_id", "text", n, k, portable = true)
+        docs, "doc_id", "text", n, k)
       val tA = time(() => {
         sigs.agg(sum(length(col("mh0"))), sum(length(col("mh7"))))
           .collect(); ()
       })
       val cand = graft.ext.Dedup.lshCandidatePairs(
-        docs, "doc_id", "text", n, k, bands, portable = true)
+        docs, "doc_id", "text", n, k, bands)
       var nCand = 0L
       val tB = time(() => { nCand = cand.count() })
       val full = graft.ext.Dedup.minhashNearDups(
-        docs, "doc_id", "text", n, k, bands, thr, portable = true)
+        docs, "doc_id", "text", n, k, bands, thr)
       var nOut = 0L
       val tC = time(() => { nOut = full.count() })
       val nBuckets = graft.ext.Dedup
-        .bandRows(docs, "doc_id", "text", n, k, bands, portable = true)
+        .bandRows(docs, "doc_id", "text", n, k, bands)
         .groupBy("band", "bkey").agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2).count()
       println(f"| ${m}x | $nDocs | $nBuckets | $nCand | $nOut | " +

@@ -11,7 +11,7 @@ object ReuseCheck {
     // lshCandidatePairs WITHOUT the cache: does the banded self-join reuse
     // the signature aggregation exchange?
     val sigs = graft.ext.Dedup.minhashSignatures(
-      docs.select("doc_id", "text"), "doc_id", "text", 3, 8, portable = true)
+      docs.select("doc_id", "text"), "doc_id", "text", 3, 8)
     import org.apache.spark.sql.functions._
     val bandKeys = (0 until 4).map { b =>
       val slice = (b * 2 until (b + 1) * 2).map(i => col(s"mh$i"))

@@ -82,15 +82,15 @@ object ScaleProbe {
 
       {
         val (cands, _) = time(graft.ext.Dedup.lshCandidatePairs(
-          docs, "doc_id", "text", 3, 8, 4, portable = true).count())
+          docs, "doc_id", "text", 3, 8, 4).count())
         val (out, s) = time(graft.ext.Dedup.minhashNearDups(
           docs, "doc_id", "text", n = 3, k = 8, bands = 4,
-          threshold = 0.5, portable = true).count())
+          threshold = 0.5).count())
         println(f"| ${m}x | q36_minhash | $nd | $cands | $out | $s%.2f |")
       }
       {
         val (out, s) = time(graft.ext.Dedup.simhashNearDups(
-          docs, "doc_id", "text", maxHamming = 3, portable = true)
+          docs, "doc_id", "text", maxHamming = 3)
           .count())
         println(f"| ${m}x | q37_simhash | $nd | - | $out | $s%.2f |")
       }

@@ -22,7 +22,7 @@ object SimhashDiag {
         regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"))
     }.reduce(_ unionByName _)
     val pairs = graft.ext.Dedup.simhashNearDups(rep, "doc_id", "text",
-      maxHamming = 3, portable = true)
+      maxHamming = 3)
     val split = pairs
       .withColumn("cross",
         (expr("id_a div 10000000") =!= expr("id_b div 10000000")))
@@ -35,7 +35,7 @@ object SimhashDiag {
       .agg(count(lit(1)).as("n")).orderBy("rep").collect()
       .foreach(r => println(s"DIAG replica ${r.get(0)} pairs=${r.get(1)}"))
     // hamming histogram of a sample of cross pairs
-    val sigs = graft.ext.Dedup.simhashSignaturesPortable(rep, "doc_id", "text")
+    val sigs = graft.ext.Dedup.simhashSignatures(rep, "doc_id", "text")
     sigs.groupBy("sig").agg(count(lit(1)).as("c"))
       .orderBy(desc("c")).limit(5).collect()
       .foreach(r => println(s"DIAG topsig ${r.get(0)} count=${r.get(1)}"))

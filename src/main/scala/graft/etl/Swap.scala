@@ -5,10 +5,11 @@ import java.io.IOException
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** All-or-nothing promote of staged paths over their live paths: the
-  * one at-rest replace the warehouse, zone-map, segment-index and
-  * LSH-index writers commit through.
+  * one at-rest commit every writer goes through, for replaces and
+  * appends alike. No job writes into a live directory.
   *
   * A group is a list of [[Move]]s plus one `aside` path. The caller
   * stages every staged path completely; then the aside comes into
@@ -23,6 +24,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * aside exists leaves the live paths as they were and at most a
   * partial staging, which the writer's next stage overwrites. One
   * writer per group: a live writer's group looks like a dead one's.
+  *
+  * An [[append]] is one such group: the batch is staged at
+  * `<live>__append`, each of its `part-*` files goes to the same
+  * relative path under `<live>`, and `<live>__append_old` is the aside.
   */
 private[graft] object Swap {
 
@@ -32,14 +37,19 @@ private[graft] object Swap {
   final case class Move(staged: Option[Path], live: Path, stash: Path)
 
   /** One move per entry under `stage` that `leaf` accepts (descending
-    * into the directories it rejects), to the same relative path under
-    * `live`, stashed at that path under `aside`. Nil without a stage.
+    * into the directories it rejects, but for `_`/`.` ones), to the
+    * same relative path under `live`, stashed at that path under
+    * `aside`. Nil without a stage.
     */
   def under(fs: FileSystem, stage: Path, live: Path, aside: Path)(
       leaf: FileStatus => Boolean): Seq[Move] = {
+    // `_`/`.` directories are a job's scratch (`_temporary`) or a
+    // writer's own staging (`_zones`), never batch data
     def walk(p: Path): Seq[Path] = fs.listStatus(p).toSeq.flatMap(st =>
       if (leaf(st)) Seq(st.getPath)
-      else if (st.isDirectory) walk(st.getPath) else Nil)
+      else if (st.isDirectory && !"_.".contains(st.getPath.getName.head))
+        walk(st.getPath)
+      else Nil)
     // listStatus returns qualified paths: strip the qualified stage
     val prefix = fs.makeQualified(stage).toString + "/"
     if (!fs.exists(stage)) Nil
@@ -104,9 +114,10 @@ private[graft] object Swap {
   }
 
   /** Finish a group a dead writer left committed: promote each staged
-    * path still there (stashing a live path not yet stashed), then
-    * delete as [[swap]] does; a live path left with no copy at all gets
-    * its stash back. Idempotent; one `exists` when nothing is pending.
+    * path still there (stashing a live path not yet stashed), stash
+    * each live path a retire-only move still finds, then delete as
+    * [[swap]] does; a live path left with no copy at all gets its
+    * stash back. Idempotent; one `exists` when nothing is pending.
     * `moves`, read from disk, is evaluated only when the aside exists.
     */
   def recover(fs: FileSystem, aside: Path, staging: Option[Path] = None)(
@@ -118,8 +129,10 @@ private[graft] object Swap {
           case Some(s) =>
             if (fs.exists(m.live)) rename(fs, m.live, m.stash)
             rename(fs, s, m.live)
+          case None if m.staged.isEmpty =>
+            if (fs.exists(m.live)) rename(fs, m.live, m.stash)
           case None =>
-            if (m.staged.nonEmpty && !fs.exists(m.live) && fs.exists(m.stash))
+            if (!fs.exists(m.live) && fs.exists(m.stash))
               rename(fs, m.stash, m.live)
         }
       }
@@ -127,14 +140,79 @@ private[graft] object Swap {
     }
 
   /** Where a reader finds each move's current data, mutating nothing
-    * (a reader must not race the writer's renames): the live paths
-    * when no aside exists; inside a committed group the staged copy
-    * while it exists, else the live path, else the stash.
+    * (a reader must not race the writer's renames): the live paths,
+    * but for a committed group some of whose `moves` are still staged,
+    * where it is the old state — each move's stash once stashed, else
+    * its live path. A group that promotes its data before the moves a
+    * reader resolves (the zone sidecar after its part files) so reads
+    * old data until the new data is all in place.
     */
   def resolve(fs: FileSystem, aside: Path, moves: Seq[Move]): Seq[Path] =
-    if (!fs.exists(aside)) moves.map(_.live)
-    else moves.map(m =>
-      (m.staged.toSeq :+ m.live).find(fs.exists).getOrElse(m.stash))
+    if (fs.exists(aside) && moves.exists(_.staged.exists(fs.exists)))
+      moves.map(m => if (fs.exists(m.stash)) m.stash else m.live)
+    else moves.map(_.live)
+
+  private val Appended = "__append"
+
+  /** [[append]]'s group for `live`: `(staging, aside)`, both beside it. */
+  def appendPaths(live: Path): (Path, Path) = (new Path(s"$live$Appended"),
+    new Path(s"$live${Appended}_old"))
+
+  /** A file [[append]] staged, named as `input_file_name()` reports
+    * it, under the name it gets once promoted.
+    */
+  def promotedName(staged: String): String = {
+    val i = staged.lastIndexOf('/')
+    staged.substring(0, i).stripSuffix(Appended) + staged.substring(i)
+  }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The staging's part files, each to its path under `live`; a first
+    * write moves the whole staging in one rename, so it leaves no
+    * half-filled `live` behind.
+    */
+  private def appendMoves(fs: FileSystem, live: Path): Seq[Move] = {
+    val (stage, aside) = appendPaths(live)
+    if (!fs.exists(live) && fs.exists(stage))
+      Seq(Move(Some(stage), live, aside))
+    else under(fs, stage, live, aside)(
+      st => st.isFile && st.getPath.getName.startsWith("part-"))
+  }
+
+  /** Finish the [[append]] to `live` a dead writer left committed: its
+    * staged part files, then `extra` (read from disk; evaluated only
+    * when the aside exists).
+    */
+  def recoverAppend(spark: SparkSession, live: String,
+      extra: => Seq[Move] = Nil): Unit = {
+    val p = new Path(live)
+    val fs = fsOf(spark, p)
+    val (stage, aside) = appendPaths(p)
+    recover(fs, aside, Some(stage))(appendMoves(fs, p) ++ extra)
+  }
+
+  /** Append a batch to `live` as one group. `write` writes the batch
+    * with mode overwrite to the staging path it is given, and may
+    * stage `extra`'s sources in it under `_`-prefixed names; then every
+    * staged `part-*` file, and after them `extra`, are promoted, and
+    * cached reads of `live` are refreshed. A committed append a dead
+    * writer left is finished first.
+    */
+  def append(spark: SparkSession, live: String,
+      extra: => Seq[Move] = Nil)(write: String => Unit): Unit = {
+    recoverAppend(spark, live)
+    val p = new Path(live)
+    val fs = fsOf(spark, p)
+    val (stage, aside) = appendPaths(p)
+    fs.delete(stage, true) // a dead writer's partial staging
+    Swap.stage(fs, stage)(write(stage.toString))
+    swap(fs, aside, appendMoves(fs, p) ++ extra, Some(stage))
+    // Spark refreshes cached reads of the path it writes, which is the
+    // staging here: refresh the live path's
+    spark.catalog.refreshByPath(live)
+  }
 
   private def finish(fs: FileSystem, aside: Path, moves: Seq[Move],
       staging: Option[Path]): Unit = {

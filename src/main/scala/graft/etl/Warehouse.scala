@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet warehouse with idempotent keyed appends (reference K1:
-  * `INSERT OR IGNORE`, PIPE:675-706) and full-replace writes (K2).
+  * `INSERT OR IGNORE`, PIPE:675-706) and full-replace writes (K2),
+  * each committed as one [[Swap]] group (the reference's per-page
+  * transaction, PIPE:708, at job granularity).
   *
   * K1 semantics set-at-a-time: dedup the batch on its key, anti-join
   * against the existing table, append only the novel keys — re-running
@@ -45,11 +47,11 @@ object Warehouse {
        else lit(null).cast(f.dataType)).as(f.name)
     }: _*)
 
-  /** K2 — full replace. */
-  def overwrite(df: DataFrame, dir: String, table: String): Unit = {
-    recover(df.sparkSession, dir, table)
-    df.write.mode(SaveMode.Overwrite).parquet(path(dir, table))
-  }
+  /** K2 — full replace, staged and swapped in as [[overwriteSwap]]
+    * does: a crash never leaves a torn table behind.
+    */
+  def overwrite(df: DataFrame, dir: String, table: String): Unit =
+    overwriteSwap(df.sparkSession, df, dir, table)
 
   /** The warehouse's file system, resolved from its path: the default
     * file system (`FileSystem.get(conf)`) throws "Wrong FS" for an
@@ -77,31 +79,30 @@ object Warehouse {
       st => st.isDirectory && fs.listStatus(st.getPath).forall(!_.isDirectory))
 
   /** Finish whatever swap of `table` a dead writer left committed —
-    * [[overwriteSwap]]'s, [[mergeByKey]]'s or [[expirePartitions]]' —
-    * so the table is whole again ([[Swap.recover]]): one `exists` per
-    * kind when nothing is pending. Every writer here calls it before it
-    * reads its table; a pipeline calls it before it probes [[exists]],
-    * or a stashed table would look missing. Each kind keeps its own
-    * aside: an expiry marked under the merge's aside would roll a
-    * failed merge's leftover `__delta` forward. It also deletes a dead
-    * append's `_temporary`: Hadoop's job commit merges every committed
-    * task directory it finds there, so the next append into the table
-    * would publish the dead job's rows beside its own.
+    * [[overwriteSwap]]'s, [[mergeByKey]]'s, [[expirePartitions]]' or
+    * an append's ([[Swap.append]]) — so the table is whole again
+    * ([[Swap.recover]]): one `exists` per kind when nothing is pending.
+    * Every writer here calls it before it reads its table; a pipeline
+    * calls it before it probes [[exists]], or a stashed table would
+    * look missing. Each kind keeps its own aside: an expiry marked
+    * under the merge's aside would roll a failed merge's leftover
+    * `__delta` forward.
     */
   def recover(spark: SparkSession, dir: String, table: String): Unit = {
     val fs = fsOf(spark, dir)
-    fs.delete(new Path(path(dir, table), "_temporary"), true)
     val m = swapMove(dir, table)
     Swap.recover(fs, m.stash)(Seq(m))
     Swap.recover(fs, new Path(path(dir, table + "__mergeold")),
       Some(new Path(path(dir, table + "__delta"))))(
       mergeMoves(fs, dir, table))
     Swap.recover(fs, new Path(path(dir, table + "__expired")))(Nil)
+    Swap.recoverAppend(spark, path(dir, table))
   }
 
-  /** Full replace of a table the plan also READS: write to a side
-    * directory first, then swap — a lazy plan reading `table` while
-    * overwriting `table` would otherwise truncate its own input.
+  /** Full replace: write to a side directory first, then swap — so a
+    * plan may read the `table` it replaces (a lazy plan overwriting its
+    * own input in place would truncate it), and a crash leaves the old
+    * or the new table, never a torn one.
     */
   def overwriteSwap(spark: SparkSession, df: DataFrame, dir: String,
       table: String): Unit = {
@@ -112,7 +113,17 @@ object Warehouse {
     Swap.stage(fs, tmp)(
       df.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
     Swap.swap(fs, m.stash, Seq(m))
+    spark.catalog.refreshByPath(path(dir, table)) // as Spark's own write
   }
+
+  /** Add `rows` to `table` as one staged [[Swap.append]]. */
+  private def append(spark: SparkSession, rows: DataFrame, dir: String,
+      table: String, partitionCols: Seq[String]): Unit =
+    Swap.append(spark, path(dir, table)) { stage =>
+      val w = rows.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(stage)
+    }
 
   /** K1 — keyed idempotent append. `partitionCols` (e.g. `anio` on obras)
     * lay the table out for partition pruning of the dashboard's year
@@ -123,14 +134,7 @@ object Warehouse {
       partitionCols: Seq[String] = Nil): Unit = {
     recover(spark, dir, table)
     val deduped = df.dropDuplicates(keys)
-    def writer(d: DataFrame, mode: SaveMode) = {
-      val w = d.write.mode(mode)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path(dir, table))
-    }
-    if (!exists(spark, dir, table)) {
-      writer(deduped, SaveMode.Overwrite)
-    } else {
+    append(spark, if (!exists(spark, dir, table)) deduped else {
       val existing = read(spark, dir, table).select(keys.map(col): _*)
       // null-safe anti-join: dropDuplicates treats null keys as equal,
       // and the existence probe must agree — a null-rejecting equi-join
@@ -138,8 +142,8 @@ object Warehouse {
       // the re-run-is-a-no-op contract for exactly those rows
       val cond = keys.map(k => deduped(k) <=> existing(k))
         .reduce(_ && _)
-      writer(deduped.join(existing, cond, "left_anti"), SaveMode.Append)
-    }
+      deduped.join(existing, cond, "left_anti")
+    }, dir, table, partitionCols)
   }
 
   /** MERGE-semantics keyed upsert, copy-on-write (the reference's
@@ -175,9 +179,7 @@ object Warehouse {
         existing.join(deduped.select(keys.map(col): _*), keys, "left_anti"),
         allowMissingColumns = true)
     if (!exists(spark, dir, table)) {
-      val w = deduped.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path(dir, table))
+      append(spark, deduped, dir, table, partitionCols)
     } else if (partitionCols.isEmpty) {
       overwriteSwap(spark, antiMerged(read(spark, dir, table)), dir, table)
     } else {
@@ -341,14 +343,13 @@ object Warehouse {
     import spark.implicits._
     import org.apache.spark.sql.functions.{to_json, struct, lit, col}
     recover(spark, dir, "runs")
-    Seq((runId, phase, query, rowsIngested,
+    append(spark, Seq((runId, phase, query, rowsIngested,
       java.time.Instant.now().toString))
       .toDF("runId", "phase", "source", "rowsIngested", "at")
       .withColumn("query", to_json(struct(col("source"),
         lit(500).as("rows"), lit("2022-01-01").as("from"),
         lit("2025-11-30").as("until"))))
-      .drop("source")
-      .write.mode(SaveMode.Append).parquet(path(dir, "runs"))
+      .drop("source"), dir, "runs", Nil)
   }
 
   /** Per-key aggregate-view state: (n, s, mn, mx) over `value`. The sum

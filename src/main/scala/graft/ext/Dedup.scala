@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.etl.Swap
@@ -315,8 +314,7 @@ object Dedup {
       n: Int = 3, k: Int = 8, bands: Int = 4,
       path: String, nDirs: Int = 64): Unit = {
     // a dead append would otherwise be rolled forward into the rebuild
-    recoverAppend(new Path(path).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf()), path)
+    Swap.recoverAppend(df.sparkSession, path)
     writeIndexAs(df, idCol, textCol, n, k, bands, path, nDirs)
   }
 
@@ -342,19 +340,6 @@ object Dedup {
       () => df.select(col(idCol),
           array_distinct(shingles(col(textCol), n)).as("sh"))
         .write.mode("overwrite").parquet(s"$path/shingles"))
-
-  /** [[appendLshIndex]]'s group: each part file staged under
-    * `__append` goes to the same relative path in the index. New files
-    * replace nothing, so the aside `__append_old` only marks the commit.
-    */
-  private def appendStage(path: String) = new Path(s"$path/__append")
-  private def appendAside(path: String) = new Path(s"$path/__append_old")
-  private def recoverAppend(fs: FileSystem, path: String): Unit =
-    Swap.recover(fs, appendAside(path), Some(appendStage(path)))(
-      appendMoves(fs, path))
-  private def appendMoves(fs: FileSystem, path: String) =
-    Swap.under(fs, appendStage(path), new Path(path), appendAside(path))(
-      st => st.isFile && st.getPath.getName.startsWith("part-"))
 
   /** LSH-banding recall audit: on a BOUNDED id-range sample, compare
     * the banding's candidate pairs against brute-force ground truth
@@ -411,8 +396,8 @@ object Dedup {
     * the survivors, then append them so tomorrow's batch dedups
     * against today's too. Band rows land in the same `pdir`
     * directories as new files (existing ones are immutable); shingle
-    * rows land flat. Both tables stage under `__append` first and
-    * publish as one [[Swap]] group. After an append the index
+    * rows land flat. Both tables stage beside the index first and
+    * publish as one [[Swap.append]] group. After an append the index
     * is EXACTLY the index a full rebuild over corpus ∪ batch would
     * produce, row-for-row — band keys and shingles are pure per-doc
     * functions, so index content is a union (spec-pinned).
@@ -430,17 +415,11 @@ object Dedup {
     */
   def appendLshIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 8, bands: Int = 4,
-      path: String, nDirs: Int = 64): Unit = {
-    val fs = new Path(path).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    recoverAppend(fs, path)
+      path: String, nDirs: Int = 64): Unit =
     // both tables stage under ParJobs as the rebuild writes them, then
     // publish as ONE group: no failure leaves shingles without bands
-    Swap.stage(fs, appendStage(path))(writeIndexAs(df, idCol, textCol, n, k,
-      bands, appendStage(path).toString, nDirs))
-    Swap.swap(fs, appendAside(path), appendMoves(fs, path),
-      Some(appendStage(path)))
-  }
+    Swap.append(df.sparkSession, path)(
+      writeIndexAs(df, idCol, textCol, n, k, bands, _, nDirs))
 
   /** Incremental fuzzy dedup: near-dups of a (small) new batch against
     * a `writeLshIndex` corpus — the daily-ingest shape at 100 TB, where

@@ -179,25 +179,27 @@ object Index {
   // per-doc sidecar every LSM index keeps; a posting row is live iff its
   // segment is its document's latest.
 
-  /** Append one batch as segment `seg`: bucket-partitioned postings under
-    * `postings/seg=N/bucket=B`, plus the batch's doc manifest under
-    * `docs/seg=N`. One pass over the batch; the corpus is not touched.
+  /** Append one batch as the new segment `seg`: bucket-partitioned
+    * postings under `postings/seg=N/bucket=B`, plus the batch's doc
+    * manifest under `docs/seg=N`, published as one [[Swap.append]] —
+    * a manifest seg without its postings would make the lookup drop
+    * those docs' older postings as stale. One pass over the batch; the
+    * corpus is not touched.
     */
   def writeSegment(df: DataFrame, idCol: String, textCol: String,
       path: String, seg: Int, nBuckets: Int = 16): Unit = {
     recoverSegments(df.sparkSession, path)
     // postings and manifest are independent writes to distinct dirs,
     // both pure functions of the batch — overlapped (guide §2.6, the
-    // writeIndexAs pattern). Note this is WITHIN one segment: the
-    // compaction path's postings+manifest pair is one Swap group.
-    ParJobs(
+    // writeIndexAs pattern) into the one staging
+    Swap.append(df.sparkSession, path)(stage => ParJobs(
       () => postingsOf(df, idCol, textCol, nBuckets)
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/postings/seg=$seg"),
+        .parquet(s"$stage/postings/seg=$seg"),
       () => df.select(col(idCol).as("doc_id")).distinct()
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/docs/seg=$seg"))
+        .write.mode("overwrite").parquet(s"$stage/docs/seg=$seg")))
   }
 
   /** Term lookup over a segmented index: bucket pruning applies inside
@@ -257,11 +259,14 @@ object Index {
   private def segmentFs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Finish a compaction a dead writer left committed. */
+  /** Finish a compaction or a segment append a dead writer left
+    * committed.
+    */
   private def recoverSegments(spark: SparkSession, path: String): Unit = {
     val ms = segmentMoves(path)
     Swap.recover(segmentFs(spark, path), ms.head.stash,
       Some(new Path(s"$path/__compact")))(ms)
+    Swap.recoverAppend(spark, path)
   }
 
   /** Fold all segments into a fresh seg=0 (live rows only) and drop the

@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.etl.Swap
 
@@ -185,8 +186,7 @@ object Layout {
       xLo: Long, xHi: Long, yLo: Long, yHi: Long): Seq[String] = {
     val iv = hilbertBoxIntervals(bits, xLo, xHi, yLo, yHi)
     if (iv.isEmpty) return Seq.empty
-    spark.read.parquet(sidecarPath(new Path(path).getFileSystem(
-        spark.sessionState.newHadoopConf()), path))
+    spark.read.parquet(sidecarPath(spark, path))
       .select("file", "mn", "mx").collect()
       .filter { r =>
         val (mn, mx) = (r.getLong(1), r.getLong(2))
@@ -240,10 +240,9 @@ object Layout {
     */
   def zoneWrite(df: DataFrame, zoneCol: String, nFiles: Int,
       path: String): Unit = {
-    // a dead sidecar swap would otherwise be rolled forward over the
-    // sidecar written here
-    recoverZones(new Path(path).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf()), path)
+    // a dead maintenance op would otherwise be rolled forward over the
+    // table written here
+    recoverZones(df.sparkSession, path)
     df.repartitionByRange(nFiles, col(zoneCol))
       .sortWithinPartitions(zoneCol)
       .write.mode("overwrite").parquet(path)
@@ -277,8 +276,7 @@ object Layout {
     */
   def zoneFiles(spark: SparkSession, path: String, lo: Column,
       hi: Column): Seq[String] =
-    spark.read.parquet(sidecarPath(new Path(path).getFileSystem(
-        spark.sessionState.newHadoopConf()), path))
+    spark.read.parquet(sidecarPath(spark, path))
       .where(!(col("mx") < lo || col("mn") > hi))
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -289,55 +287,28 @@ object Layout {
     * sidecar is exact per file) but pruning degrades as overlaps
     * accumulate. [[zoneCompact]] is the repair.
     *
-    * SINGLE-WRITER contract (append + compact both): one maintenance
-    * operation at a time per table. The crash-recovery design depends
-    * on it — an `.append.inprogress` marker brackets the window where
-    * data files exist but the sidecar doesn't reference them yet, and
-    * the next maintenance op — [[zoneCompact]], or [[zoneAppend]]
-    * itself at entry — treats any leftover marker as "that append
-    * died: its unreferenced files are garbage" and sweeps them. A
-    * CONCURRENT in-flight append would be indistinguishable from a
-    * crashed one and would lose its uncommitted files to that sweep.
+    * The batch and its extended sidecar commit as one [[zoneGroup]]
+    * append: no crash leaves data files the sidecar does not list, or
+    * a sidecar listing files not in place. SINGLE-WRITER contract
+    * (append + compact both): one maintenance operation at a time per
+    * table — a concurrent writer's committed group would look like a
+    * dead one's to the next op's recovery.
     */
   def zoneAppend(df: DataFrame, zoneCol: String, nFiles: Int,
       path: String): Unit = {
     val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // a sidecar swap that died half done: roll it forward first
-    recoverZones(fs, path)
+    recoverZones(spark, path)
     val prior = spark.read.parquet(path + ".zones")
-      .select("file", "mn", "mx", "rows").collect()
-    def listing: Set[String] = fs.listStatus(new Path(path)).toSeq
-      .map(_.getPath.toString).filter(_.contains("part-")).toSet
-    // crash marker: created before the first data file can land,
-    // removed only after the sidecar references everything — a
-    // leftover marker tells the next maintenance op that unreferenced
-    // part files from a dead append may exist and a sweep is due.
-    // A PRE-EXISTING marker means a prior append died in that window;
-    // run the sweep NOW (the sidecar just read is the whole truth
-    // under the single-writer contract) — overwriting and later
-    // deleting the marker without it would erase the only evidence of
-    // the dead run and leave its orphans double-counting direct
-    // directory reads forever.
-    val marker = new Path(path + ".append.inprogress")
-    if (fs.exists(marker))
-      sweepUnreferenced(fs, path, prior.map(_.getString(0)).toSet)
-    val existing = listing
-    fs.create(marker, true).close()
-    df.repartitionByRange(nFiles, col(zoneCol))
-      .sortWithinPartitions(zoneCol)
-      .write.mode("append").parquet(path)
-    val added = (listing -- existing).toSeq
-    // stats scan touches ONLY the appended files — append cost is
-    // delta-sized, never table-sized
-    val fresh = spark.read.parquet(added: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
-        count(lit(1)).as("rows"))
-    stageZones(fs, path)(fresh.unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(prior.toSeq, 1), fresh.schema)))
-    swapZones(fs, path)
-    fs.delete(marker, false)
+      .select("file", "mn", "mx", "rows")
+    val rows = prior.collect().toSeq
+    Swap.append(spark, path, Seq(sidecarMove(path))) { stage =>
+      df.repartitionByRange(nFiles, col(zoneCol))
+        .sortWithinPartitions(zoneCol)
+        .write.mode("overwrite").parquet(stage)
+      // stats scan touches ONLY the staged batch — append cost is
+      // delta-sized, never table-sized
+      stageZones(spark, stage, zoneCol, rows, prior.schema)
+    }
   }
 
   /** Connected overlap components of inclusive [mn, mx] intervals, by
@@ -386,39 +357,16 @@ object Layout {
     * into `ceil(rows / rowsPerFile)` files so file size stays stable as
     * the table grows.
     *
-    * SINGLE-WRITER contract: one maintenance operation (append or
-    * compact) at a time per table — see [[zoneAppend]]. Crash recovery
-    * is marker-gated: every window in which part files can exist
-    * unreferenced leaves a detectable marker (`<path>.compact` tmp dir
-    * here, `.append.inprogress` from [[zoneAppend]], a stale
-    * `.zones.next`/`.zones.old` from a death inside the sidecar swap),
-    * so the HAPPY path deletes exactly the victim files it already
-    * knows by name — no directory listing — and the full
-    * listing-and-sweep of unreferenced files runs only when a marker
-    * says a prior run died. A concurrent writer's uncommitted files
-    * would look exactly like a dead run's garbage to that sweep —
-    * hence the contract.
+    * The rewritten files, the new sidecar and the retired victims
+    * commit as one [[zoneGroup]] append; the victims are retired by the
+    * names the sidecar gives, so the happy path lists no directory.
+    * SINGLE-WRITER contract, as [[zoneAppend]].
     */
   def zoneCompact(spark: SparkSession, path: String, zoneCol: String,
       rowsPerFile: Long): Unit = {
-    val fsEarly = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    // crash markers, captured BEFORE this run creates/clears any of
-    // them — and BEFORE recoverZones consumes .zones.next/.zones.old,
-    // which are themselves evidence a prior run died (its victims may
-    // be unreferenced): a leftover means some prior append/compact
-    // died inside a window where promoted or appended part files may
-    // be unreferenced by the sidecar — only then is the listing sweep
-    // due
-    val staleMarkers = Seq(path + ".compact", path + ".append.inprogress",
-      path + ".zones.next", path + ".zones.old")
-      .map(new Path(_)).filter(fsEarly.exists)
-    // roll a crashed mid-swap sidecar forward before reading it (see
-    // recoverZones — single-writer, so no rename race)
-    recoverZones(fsEarly, path)
+    recoverZones(spark, path)
     val zonesDf = spark.read.parquet(path + ".zones")
       .select("file", "mn", "mx", "rows")
-    val zSchema = zonesDf.schema
     val zones = zonesDf.collect()
     // connected overlap COMPONENTS (driver sweep, #files-scale):
     // range-partitioning the union of ALL victims could emit a file
@@ -429,147 +377,84 @@ object Layout {
     val comps = overlapComponents(
       zones.toIndexedSeq.map(z => (z.get(1), z.get(2))))
     if (comps.nonEmpty) {
-      val fs = new Path(path).getFileSystem(
-        spark.sessionState.newHadoopConf())
-      val victimSet = comps.flatten.map(i => zones(i).getString(0)).toSet
-      val keep = zones.filterNot(z => victimSet.contains(z.getString(0)))
-      val tmp = path + ".compact"
-      if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
-      // Independent component rewrites run CONCURRENTLY: their value
-      // ranges are disjoint by construction, each writes its own ctmp
-      // dir and promotes by per-file rename, and every read here is an
-      // explicit file list (never a directory listing), so the jobs
-      // cannot observe each other. The r7 serial loop paid one
-      // scheduler-floor latency per component, which tripled
-      // q125_zone_maintain; concurrency makes wall-clock ~= the
-      // largest component instead of the sum. Each job also computes
-      // its OWN promoted-file stats (a per-component collect of
-      // listing-sized rows) so the stats collects overlap with other
-      // components' rewrites instead of running as one trailing job,
-      // and the sidecar is assembled on the driver with no extra scan.
-      // ParJobs settles every rewrite before it rethrows the first
-      // failure (the others attached as suppressed), so no component is
-      // still writing when control returns or a retry deletes the
-      // .compact tmp dir.
-      val freshRows = ParJobs(comps.zipWithIndex.map { case (comp, ci) =>
-        () => {
-          val files = comp.map(i => zones(i).getString(0))
+      val victims = comps.flatten.map(i => zones(i).getString(0))
+      val keep = zones.filterNot(z => victims.contains(z.getString(0)))
+      Swap.append(spark, path, sidecarMove(path) +: victims.map(v =>
+          retire(path, new Path(new java.net.URI(v))))) { stage =>
+        val ranged = comps.map { comp =>
           val rows = comp.map(i => zones(i).getLong(3)).sum
-          val nOut =
-            math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
-          val ctmp = s"$tmp/c$ci"
-          spark.read.parquet(files: _*)
-            .repartitionByRange(nOut, col(zoneCol))
+          spark.read.parquet(comp.map(i => zones(i).getString(0)): _*)
+            .repartitionByRange(
+              math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt,
+              col(zoneCol))
             .sortWithinPartitions(zoneCol)
-            .write.mode("overwrite").parquet(ctmp)
-          val moved = fs.listStatus(new Path(ctmp)).toSeq
-            .filter(_.getPath.getName.startsWith("part-"))
-            .map { st =>
-              val dst = new Path(path, st.getPath.getName)
-              if (!fs.rename(st.getPath, dst))
-                throw new java.io.IOException(
-                  s"zoneCompact: promote ${st.getPath} failed")
-              dst.toString
-            }
-          spark.read.parquet(moved: _*)
-            .groupBy(input_file_name().as("file"))
-            .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
-              count(lit(1)).as("rows"))
-            .collect().toSeq
         }
-      }: _*).flatten
-      // ORDER OF COMMIT: the rewritten files are invisible until the
-      // sidecar lists them, so the new sidecar commits FIRST and the
-      // victim data files are deleted only after — a crash anywhere in
-      // this window leaves a consistent sidecar (old or new) whose
-      // files all still exist; the worst case is orphaned part files,
-      // never a sidecar pointing at deleted data.
-      stageZones(fs, path)(spark.createDataFrame(
-        spark.sparkContext.parallelize(freshRows ++ keep.toSeq, 1), zSchema))
-      swapZones(fs, path)
-      // Victim delete, by the NAMES the sidecar already gave us — the
-      // happy path pays zero directory listings. The new sidecar
-      // committed first, so a crash mid-delete leaves only
-      // unreferenced files (never a sidecar pointing at deleted
-      // data); the still-present `.compact` tmp dir marks that crash
-      // for the next run's sweep.
-      victimSet.foreach(f =>
-        fs.delete(new Path(new java.net.URI(f)), false))
-      // Listing sweep ONLY when a marker says a prior run died: a
-      // failed earlier compact may have promoted files (or a failed
-      // append landed files) its sidecar commit never referenced —
-      // reads through the manifest stay exact, but a direct directory
-      // read would double-count their rows and the dead bytes
-      // accumulate forever. After this run's successful commit the
-      // new sidecar is the whole truth, so every data file it does
-      // not reference is deletable.
-      if (staleMarkers.nonEmpty)
-        sweepUnreferenced(fs, path,
-          (freshRows.iterator ++ keep.iterator)
-            .map(r => r.getString(0)).toSet)
-      fs.delete(new Path(tmp), true)
-      fs.delete(new Path(path + ".append.inprogress"), false)
-    } else if (staleMarkers.nonEmpty) {
-      // Nothing overlaps, but a prior run died (e.g. after its sidecar
-      // commit and before its victim delete, leaving no overlaps to
-      // trigger the branch above): the committed sidecar is already
-      // the whole truth — sweep unreferenced files and clear the
-      // markers so the next compact is back on the zero-listing path.
-      sweepUnreferenced(fsEarly, path,
-        zones.iterator.map(_.getString(0)).toSet)
-      staleMarkers.foreach { m =>
-        // a stale .zones.next/.zones.old is swap debris only when the
-        // live sidecar exists; .zones is never in staleMarkers
-        fs2Delete(fsEarly, m)
+        // one write of every component's range partitions, one file
+        // each. A Dataset union would merge the partitions of equally
+        // partitioned components (Spark's partition-aware union) into
+        // files spanning the gap between them; the RDD union keeps them
+        // apart. ParJobs runs the components' range exchanges at once.
+        spark.createDataFrame(spark.sparkContext.union(
+            ParJobs(ranged.map(r => () => r.rdd): _*)), ranged.head.schema)
+          .write.mode("overwrite").parquet(stage)
+        stageZones(spark, stage, zoneCol, keep.toSeq, zonesDf.schema)
       }
     }
   }
 
-  /** Delete every `part-*` file under `path` the sidecar does not
-    * reference. Matching is by basename — part file names embed a
-    * write-UUID, so basenames are unique — which sidesteps
-    * qualified-vs-raw URI mismatches between `input_file_name()` and
-    * `listStatus`. Callers gate this on a crash marker: under the
-    * single-writer contract an unreferenced part file can only be a
-    * dead run's garbage.
+  /** Zone maintenance's one [[Swap.append]] group. The part files
+    * staged at `<path>__append` land in `path` first; then the sidecar
+    * staged at `<path>__append/_zones` replaces `<path>.zones` (stashed
+    * in the aside `<path>__append_old`); then, for a compaction, each
+    * victim retires into the aside. A reader resolves the old sidecar
+    * until the new one is promoted, and every file either one lists is
+    * in place meanwhile.
     */
-  private def sweepUnreferenced(fs: FileSystem,
-      path: String, liveUris: Set[String]): Unit = {
-    val live =
-      liveUris.map(f => new Path(new java.net.URI(f)).getName)
-    fs.listStatus(new Path(path)).toSeq
-      .filter(st => st.getPath.getName.startsWith("part-") &&
-        !live.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, false))
+  private def zoneGroup(path: String): (Path, Path) =
+    Swap.appendPaths(new Path(path))
+  private def sidecarMove(path: String): Swap.Move = {
+    val (stage, aside) = zoneGroup(path)
+    Swap.Move(Some(new Path(stage, "_zones")), new Path(path + ".zones"),
+      new Path(aside, "_zones"))
+  }
+  private def retire(path: String, file: Path): Swap.Move =
+    Swap.Move(None, file, new Path(zoneGroup(path)._2, file.getName))
+  private def sidecarPath(spark: SparkSession, path: String): String =
+    Swap.resolve(new Path(path).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), zoneGroup(path)._2,
+      Seq(sidecarMove(path))).head.toString
+
+  /** Stage the sidecar of `prior` plus the per-file (min, max, rows) of
+    * the part files staged at `stage`, each named as once promoted.
+    */
+  private def stageZones(spark: SparkSession, stage: String,
+      zoneCol: String, prior: Seq[Row], schema: StructType): Unit = {
+    val fresh = spark.read.parquet(stage)
+      .groupBy(input_file_name().as("file"))
+      .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
+        count(lit(1)).as("rows"))
+      .collect().toSeq
+      .map(r => Row(Swap.promotedName(r.getString(0)), r(1), r(2), r(3)))
+    spark.createDataFrame(spark.sparkContext.parallelize(fresh ++ prior, 1),
+      schema).write.mode("overwrite").parquet(s"$stage/_zones")
   }
 
-  /** Recursive-if-directory delete (tmp dirs vs marker files). */
-  private def fs2Delete(fs: FileSystem,
-      p: Path): Unit =
-    if (fs.exists(p)) fs.delete(p, fs.getFileStatus(p).isDirectory)
-
-  /** The sidecar's [[Swap]] group: `.zones.next` replaces `.zones`,
-    * stashed at `.zones.old`, the group's aside, so a reader never sees
-    * a missing or half-written sidecar. Readers resolve it without
-    * mutating anything (they must not race a writer's renames); the
-    * maintenance ops recover it first, under the single-writer contract.
+  /** Finish a maintenance op a dead writer committed. Its victims not
+    * yet retired are the data files the new sidecar does not list: the
+    * one directory listing, run only while such a group is pending.
     */
-  private def zonesAside(path: String) = new Path(path + ".zones.old")
-  private def sidecarMoves(path: String) = Seq(Swap.Move(
-    Some(new Path(path + ".zones.next")), new Path(path + ".zones"),
-    zonesAside(path)))
-  private def sidecarPath(fs: FileSystem, path: String): String =
-    Swap.resolve(fs, zonesAside(path), sidecarMoves(path)).head.toString
-  private def recoverZones(fs: FileSystem, path: String): Unit =
-    Swap.recover(fs, zonesAside(path))(sidecarMoves(path))
-  private def stageZones(fs: FileSystem, path: String)(
-      zones: DataFrame): Unit = {
-    val next = sidecarMoves(path).head.staged.get
-    Swap.stage(fs, next)(
-      zones.coalesce(1).write.mode("overwrite").parquet(next.toString))
-  }
-  private def swapZones(fs: FileSystem, path: String): Unit =
-    Swap.swap(fs, zonesAside(path), sidecarMoves(path))
+  private def recoverZones(spark: SparkSession, path: String): Unit =
+    Swap.recoverAppend(spark, path, {
+      val m = sidecarMove(path)
+      val fs = m.live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val listed = spark.read
+        .parquet((m.staged.toSeq :+ m.live).find(fs.exists).get.toString)
+        .select("file").collect()
+        .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSet
+      m +: fs.listStatus(new Path(path)).toSeq.map(_.getPath)
+        .filter(f => f.getName.startsWith("part-") && !listed(f.getName))
+        .map(retire(path, _))
+    })
 
   /** Bucketed catalog-table write: hash-bucket on `key` into `nBuckets`
     * file groups, sorted within each bucket, registered so the planner

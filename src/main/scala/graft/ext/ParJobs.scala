@@ -22,8 +22,8 @@ package graft.ext
   * register with the caller's [[Materialize.scope]].
   *
   * Callers: `Dedup.writeIndexAs` (bands ∥ shingles), `Index.writeSegment`
-  * (postings ∥ manifest), `Layout.zoneCompact` (one rewrite per overlap
-  * component), and `Pipeline.ingest`/`integrateCatalog`/
+  * (postings ∥ manifest), `Layout.zoneCompact` (one range exchange per
+  * overlap component), and `Pipeline.ingest`/`integrateCatalog`/
   * `buildFlatView`, whose per-stage phases are listed in `Pipeline`.
   */
 private[graft] object ParJobs {

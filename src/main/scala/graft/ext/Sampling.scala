@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.etl.Swap
 import graft.functions.DigestFunctions.fastMd5
 
 /** Dataset-curation sampling operators for a training-data pipeline:
@@ -236,20 +237,23 @@ object Sampling {
 
   /** Priority-sample sketch at rest (the weighted-sample member of the
     * maintain-without-rebuild family — q167 counts, q176 quantiles):
-    * shards append their top-(n+1) priority rows; the read unions the
-    * shard tops, re-takes n+1, and finalizes with the SAME τ logic —
-    * provably equal to `priorityTake` over the union (see
-    * [[priorityTop]]). Merge work is shards × (n+1) sketch rows.
+    * shards append their top-(n+1) priority rows (one [[Swap.append]]
+    * each); the read unions the shard tops, re-takes n+1, and finalizes
+    * with the SAME τ logic — provably equal to `priorityTake` over the
+    * union (see [[priorityTop]]). Merge work is shards × (n+1) sketch
+    * rows.
     */
   def prioritySampleWrite(df: DataFrame, keyCol: String,
-      weightCol: String, n: Int, path: String): Unit =
+      weightCol: String, n: Int, path: String): Unit = {
+    Swap.recoverAppend(df.sparkSession, path)
     priorityTop(df, keyCol, weightCol, n)
       .coalesce(1).write.mode("overwrite").parquet(path)
+  }
 
   def prioritySampleAppend(df: DataFrame, keyCol: String,
       weightCol: String, n: Int, path: String): Unit =
-    priorityTop(df, keyCol, weightCol, n)
-      .coalesce(1).write.mode("append").parquet(path)
+    Swap.append(df.sparkSession, path)(priorityTop(df, keyCol, weightCol, n)
+      .coalesce(1).write.mode("overwrite").parquet(_))
 
   def prioritySampleRead(spark: org.apache.spark.sql.SparkSession,
       path: String, keyCol: String, weightCol: String,

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.etl.Swap
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -819,19 +820,20 @@ object Similarity {
     * (≤ nlist ints), never a per-row second argmin.
     */
   def writeIvfHier(df: DataFrame, idCol: String, vecCol: String,
-      path: String, centroids: Seq[Array[Float]]): Unit =
-    writeIvfHierAs(df, vecCol, path, centroids,
-      org.apache.spark.sql.SaveMode.Overwrite)
+      path: String, centroids: Seq[Array[Float]]): Unit = {
+    Swap.recoverAppend(df.sparkSession, path)
+    writeIvfHierAs(df, vecCol, path, centroids)
+  }
 
   /** The ONE copy of the hier-layout contract (two-level cell
     * assignment, sup-over-cell partition nesting, pre-write
-    * repartition) — write and append differ only in SaveMode, so a
-    * layout change can't silently break the append == rebuild
-    * invariant q237 grades on (the q183 `writeIndexAs` discipline).
+    * repartition) — write and append differ only in where it writes
+    * (the index, or the append's staging), so a layout change can't
+    * silently break the append == rebuild invariant q237 grades on
+    * (the q183 `writeIndexAs` discipline).
     */
   private def writeIvfHierAs(df: DataFrame, vecCol: String, path: String,
-      centroids: Seq[Array[Float]],
-      mode: org.apache.spark.sql.SaveMode): Unit = {
+      centroids: Seq[Array[Float]]): Unit = {
     val kern = graft.functions.IvfFunctions.kernel(centroids)
     // cellOf(hier = true) prepares the two-level tables driver-side
     val cell = graft.functions.IvfFunctions.cellOf(col(vecCol), kern,
@@ -840,7 +842,7 @@ object Similarity {
     df.withColumn("cell", cell)
       .withColumn("sup", element_at(lit(supOfCell), col("cell") + 1))
       .repartition(col("cell"))
-      .write.mode(mode).partitionBy("sup", "cell").parquet(path)
+      .write.mode("overwrite").partitionBy("sup", "cell").parquet(path)
   }
 
   /** Append a new vector shard INTO an existing [[writeIvfHier]]
@@ -849,7 +851,7 @@ object Similarity {
     * an index rewrite. Cell and super assignment are pure per-row
     * functions of (centroids, vector) — the same deterministic kernel
     * tables every time — so new rows land in the existing `sup=/cell=`
-    * directories (append mode adds files; existing ones are
+    * directories (the [[Swap.append]] adds files; existing ones are
     * immutable), and after an append the index holds EXACTLY the rows
     * a full rebuild over corpus ∪ shard would produce (q237 grades
     * the search over build+append against the full-build oracle).
@@ -863,8 +865,8 @@ object Similarity {
     */
   def appendIvfHier(df: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Array[Float]]): Unit =
-    writeIvfHierAs(df, vecCol, path, centroids,
-      org.apache.spark.sql.SaveMode.Append)
+    Swap.append(df.sparkSession, path)(writeIvfHierAs(df, vecCol, _,
+      centroids))
 
   /** Hier ANN top-k over a [[writeIvfHier]] table: the probe cells come
     * from the KERNEL's own `probesHier` on the query vector (driver-
@@ -1010,23 +1012,23 @@ object Similarity {
     */
   def writeIvfPq(df: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Array[Float]],
-      codebooks: Seq[Seq[Array[Float]]]): Unit =
-    writeIvfPqAs(df, idCol, vecCol, path, centroids, codebooks,
-      org.apache.spark.sql.SaveMode.Overwrite)
+      codebooks: Seq[Seq[Array[Float]]]): Unit = {
+    Swap.recoverAppend(df.sparkSession, path)
+    writeIvfPqAs(df, idCol, vecCol, path, centroids, codebooks)
+  }
 
   /** The ONE copy of the PQ-layout contract (code projection, cell
     * partitioning, pre-write repartition) — write and append differ
-    * only in SaveMode (the q183/q237 `writeIndexAs` discipline).
+    * only in where it writes (the q183/q237 `writeIndexAs` discipline).
     */
   private def writeIvfPqAs(df: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Array[Float]],
-      codebooks: Seq[Seq[Array[Float]]],
-      mode: org.apache.spark.sql.SaveMode): Unit =
+      codebooks: Seq[Seq[Array[Float]]]): Unit =
     df.withColumn("codes", pqEncode(col(vecCol), codebooks))
       .withColumn("cell", ivfCell(col(vecCol), centroids))
       .select(col(idCol), col("codes"), col("cell"))
       .repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(path)
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Append a new vector shard INTO an existing [[writeIvfPq]] index
     * — [[appendIvfHier]]'s contract for the PQ layout: codes and cell
@@ -1041,8 +1043,8 @@ object Similarity {
   def appendIvfPq(df: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Array[Float]],
       codebooks: Seq[Seq[Array[Float]]]): Unit =
-    writeIvfPqAs(df, idCol, vecCol, path, centroids, codebooks,
-      org.apache.spark.sql.SaveMode.Append)
+    Swap.append(df.sparkSession, path)(writeIvfPqAs(df, idCol, vecCol, _,
+      centroids, codebooks))
 
   /** IVF-PQ ANN top-k over a [[writeIvfPq]] table: probe selection is
     * driver-side over the literal centroids (the `cell IN (probes)`

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, RelationalGro
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.etl.Swap
 import graft.functions.DigestFunctions.fastMd5
 
 /** Engine-portable approximate sketches.
@@ -413,20 +414,22 @@ object Sketches {
 
   /** At-rest count-min lifecycle: the matrix is parquet, a new batch
     * APPENDS its own partial matrix (no read-modify-write of the
-    * base — cell-sum merge is associative, so writers never
-    * coordinate), and readers sum cells on read. Same maintain-
+    * base — cell-sum merge is associative), staged and promoted as one
+    * [[Swap.append]], and readers sum cells on read. Same maintain-
     * without-rebuild contract as the zone-map (q125) and agg-view
     * (q121) lifecycles, for the approximate-counts sketch.
     */
   def cmWrite(df: DataFrame, term: Column, depth: Int, width: Int,
-      path: String): Unit =
+      path: String): Unit = {
+    Swap.recoverAppend(df.sparkSession, path)
     cmSketch(df, term, depth, width)
       .coalesce(1).write.mode("overwrite").parquet(path)
+  }
 
   def cmAppend(df: DataFrame, term: Column, depth: Int, width: Int,
       path: String): Unit =
-    cmSketch(df, term, depth, width)
-      .coalesce(1).write.mode("append").parquet(path)
+    Swap.append(df.sparkSession, path)(cmSketch(df, term, depth, width)
+      .coalesce(1).write.mode("overwrite").parquet(_))
 
   def cmRead(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
@@ -529,21 +532,23 @@ object Sketches {
   }
 
   /** Quantile-sample sketch at rest (the q125/q167
-    * maintain-without-rebuild contract for `sampleQuantiles`): writers
-    * append one (group, n_part, pairs) row per group per shard — a new
-    * batch NEVER reads or rewrites the base table — and readers merge
+    * append one (group, n_part, pairs) row per group per shard, as one
+    * [[Swap.append]] — a new batch NEVER reads or rewrites the base
+    * table — and readers merge
     * by exact count addition + min-k re-take, which reproduces the
     * single-pass sample bit-for-bit (see [[MinKPairsAggregator]]).
     */
   def sampleWrite(df: DataFrame, groupCol: String, keyCol: String,
-      value: Column, k: Int, path: String): Unit =
+      value: Column, k: Int, path: String): Unit = {
+    Swap.recoverAppend(df.sparkSession, path)
     sampleShard(df, groupCol, keyCol, value, k)
       .coalesce(1).write.mode("overwrite").parquet(path)
+  }
 
   def sampleAppend(df: DataFrame, groupCol: String, keyCol: String,
       value: Column, k: Int, path: String): Unit =
-    sampleShard(df, groupCol, keyCol, value, k)
-      .coalesce(1).write.mode("append").parquet(path)
+    Swap.append(df.sparkSession, path)(sampleShard(df, groupCol, keyCol,
+      value, k).coalesce(1).write.mode("overwrite").parquet(_))
 
   /** Merge the shard samples at `path` and answer the same rational
     * rank reads as [[sampleQuantiles]] — output identical to running

@@ -72,7 +72,7 @@ class ExtSpec extends SparkSpec {
     assert(sh(docsDf.repartition(1)) == sh(docsDf.repartition(7)))
   }
 
-  test("blocked simhash LSH pair set equals brute force (both families)") {
+  test("blocked simhash LSH pair set equals brute force") {
     // 2-of-(m+2) block pigeonholing is lossless for hamming <= m: the
     // candidate join must yield EXACTLY the brute-force pair set.
     val docsDf = Tables.documents(spark, sf0001).limit(200)
@@ -182,11 +182,16 @@ class ExtSpec extends SparkSpec {
       val clusters = Dedup.dedupClusters(path, localEdgeThreshold = 0)
       assert(clusters.select("cluster").distinct().as[Long]
         .collect().toSeq == Seq(1L))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      // the bus delivers job starts asynchronously: count them all
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
     assert(jobs <= 60, s"dedupClusters scheduled $jobs jobs on a 40-node path")
   }
 
-  test("star-contraction CC equals min-label propagation on random graphs") {
+  test("dedup clusters: distributed loop equals the driver-side " +
+      "union-find on random graphs") {
     // seeded randomized property check: dedupClusters' two paths must
     // produce the identical (id -> component-min) map on arbitrary
     // topologies
@@ -210,7 +215,7 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("star-contraction CC: skewed long-chain graph, bounded rounds") {
+  test("dedup clusters: skewed long-chain graph, bounded rounds") {
     // one 60-node chain + a 30-spoke hub — the skew shape that punishes
     // frontier-based propagation. The distributed min-label loop must
     // converge (no maxIter throw) with bounded driver chatter, and label
@@ -227,7 +232,10 @@ class ExtSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     val got = try Dedup.dedupClusters(df, localEdgeThreshold = 0)
       .as[(Long, Long)].collect().toMap
-    finally spark.sparkContext.removeSparkListener(listener)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
     assert((1L to 60L).forall(got(_) == 1L))
     assert((100L to 130L).forall(got(_) == 100L))
     // the bound guards against gross regressions (per-round probing,

@@ -94,4 +94,29 @@ trait FaultFsSpec extends SparkSpec {
   }
 
   def exists(p: String): Boolean = new File(new URI(p).getPath).exists()
+
+  /** A `faulty://` path as a local file. */
+  def localFile(p: String): File = new File(new URI(p).getPath)
+
+  /** `op` on a fresh `setup` fixture, crashed at its k-th rename or
+    * delete, for k = 1, 2, ... until a run ends before its k-th step;
+    * `after` then checks each fixture, given the paths the crash hit
+    * ("" for the run that did not crash). Returns the crash count.
+    */
+  def crashAtEachStep(setup: String => Unit, op: String => Unit)(
+      after: (String, String) => Unit): Int = {
+    var k = 0
+    var crashed = true
+    while (crashed) {
+      k += 1
+      val d = freshDir()
+      setup(d)
+      FaultFs.arm(k, FaultFs.Crash)
+      scala.util.Try(op(d))
+      crashed = FaultFs.fired
+      FaultFs.disarm()
+      after(d, if (crashed) FaultFs.firedOn else "")
+    }
+    k - 1
+  }
 }

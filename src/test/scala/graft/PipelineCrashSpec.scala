@@ -93,4 +93,23 @@ class PipelineCrashSpec extends SparkSpec {
       .as[(Int, String)].collect().toSeq ==
       Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")))
   }
+
+  test("an append after a dead append's committed task output in its " +
+      "staging adds each row once") {
+    val dir = Files.createTempDirectory("graft_crash").toString
+    val base = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    val batch = Seq((2, "b"), (3, "c"), (4, "d")).toDF("id", "v")
+    Warehouse.idempotentAppend(spark, base, dir, "t", Seq("id"))
+    // the same dead job, now writing where an append stages its batch:
+    // complete part files and uncommitted task output beside them
+    val novel = batch.join(base, Seq("id"), "left_anti")
+    novel.write.parquet(s"$dir/t__append")
+    novel.write
+      .parquet(s"$dir/t__append/_temporary/0/task_202601010000_0001_m_000000")
+    Warehouse.idempotentAppend(spark, batch, dir, "t", Seq("id"))
+    assert(Warehouse.read(spark, dir, "t").orderBy("id")
+      .as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")))
+    assert(!new File(s"$dir/t__append").exists())
+  }
 }

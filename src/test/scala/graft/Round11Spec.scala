@@ -2,57 +2,47 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-11 pins: the four r10 ADVICE fixes — zoneAppend reclaims a
-  * dead prior append's orphans at entry instead of erasing its marker,
-  * fleissKappa bounds its contract-check collect, ppsTake fails loudly
+/** Round-11 pins: the four r10 ADVICE fixes — zoneAppend finishes a
+  * dead prior append at entry, so no orphan outlives it, fleissKappa
+  * bounds its contract-check collect, ppsTake fails loudly
   * on fractional weights instead of silently truncating them to zero,
   * and kmvJaccard's guard message survives huge group counts.
   */
-class Round11Spec extends SparkSpec {
+class Round11Spec extends FaultFsSpec {
   import spark.implicits._
 
-  private def plantOrphan(path: String): java.io.File = {
-    val d = new java.io.File(path)
-    val src = d.listFiles().filter(_.getName.startsWith("part-")).head
-    val orphan = new java.io.File(d,
-      s"part-99999-orphan${d.listFiles().length}.snappy.parquet")
-    java.nio.file.Files.copy(src.toPath, orphan.toPath)
-    assert(orphan.exists())
-    orphan
-  }
-
-  // ---- zoneAppend: entry sweep of a dead prior append ----
+  // ---- zoneAppend: entry recovery of a dead prior append ----
 
   test("zoneAppend with a pre-existing crash marker sweeps the dead " +
       "run's orphans at entry; direct directory reads stay exact") {
-    val dir = java.nio.file.Files.createTempDirectory("zones11").toString
-    val path = s"$dir/t"
-    graft.ext.Layout.zoneWrite(
-      (1L to 100L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4, path)
-    // what a zoneAppend that died between its data write and its
-    // sidecar commit leaves behind: unreferenced part files + marker
-    val orphan = plantOrphan(path)
-    val marker = new java.io.File(path + ".append.inprogress")
-    assert(marker.createNewFile())
-    graft.ext.Layout.zoneAppend(
-      (101L to 140L).map(i => (i, i * 10L)).toDF("id", "x"),
-      "x", 2, path)
-    assert(!orphan.exists(),
-      "dead append's orphan survived the entry sweep — a direct " +
-        "directory read would double-count it forever")
-    assert(!marker.exists(),
-      "marker not cleared after the successful append")
-    // direct directory read (no sidecar) must see exactly the live rows
-    assert(spark.read.parquet(path).count() === 140L)
-    // sidecar references every live file and its row counts are exact
-    val zones = spark.read.parquet(path + ".zones")
-    assert(zones.agg(sum("rows")).collect().head.getLong(0) === 140L)
-    val live = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("part-")).map(_.getName).toSet
-    val referenced = zones.select("file").collect()
-      .map(r => new java.io.File(
-        new java.net.URI(r.getString(0)).getPath).getName).toSet
-    assert(referenced === live)
+    // the crash marker is the dead append's aside: the next append
+    // rolls it forward at entry; a crash before the commit leaves only
+    // staging, which the next append overwrites
+    val crashes = crashAtEachStep(
+      setup = dir => graft.ext.Layout.zoneWrite(
+        (1L to 100L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4,
+        s"$dir/t"),
+      op = dir => graft.ext.Layout.zoneAppend(
+        (101L to 120L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 1,
+        s"$dir/t")) { (dir, at) =>
+      val path = s"$dir/t"
+      graft.ext.Layout.zoneAppend(
+        (121L to 140L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 2, path)
+      assert(!exists(s"${path}__append_old"),
+        s"$at: marker not cleared after the successful append")
+      // direct directory read (no sidecar) must see exactly the live rows
+      val direct = spark.read.parquet(path).count()
+      assert(direct === 120L || direct === 140L, at)
+      // sidecar references every live file and its row counts are exact
+      val zones = spark.read.parquet(path + ".zones")
+      assert(zones.agg(sum("rows")).collect().head.getLong(0) === direct, at)
+      val live = localFile(path).listFiles()
+        .filter(_.getName.startsWith("part-")).map(_.getName).toSet
+      val referenced = zones.select("file").collect()
+        .map(r => localFile(r.getString(0)).getName).toSet
+      assert(referenced === live, at)
+    }
+    assert(crashes > 3)
   }
 
   test("zoneAppend without a marker performs no sweep and no extra " +
@@ -77,31 +67,41 @@ class Round11Spec extends SparkSpec {
   test("a crash between swapZones' two renames (no live .zones) is " +
       "survivable: readers fall back non-mutating, the next " +
       "maintenance op rolls the committed .zones.next forward") {
-    val dir = java.nio.file.Files.createTempDirectory("zones11c").toString
-    val path = s"$dir/t"
-    graft.ext.Layout.zoneWrite(
-      (1L to 80L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 4, path)
-    // simulate the exact window: stash done (.zones -> .zones.old),
-    // promote not (.zones.next fully committed, no live .zones)
-    val zonesDir = new java.io.File(path + ".zones")
-    spark.read.parquet(path + ".zones").write
-      .parquet(path + ".zones.next")
-    assert(zonesDir.renameTo(new java.io.File(path + ".zones.old")))
-    assert(!zonesDir.exists())
-    // reader fallback: prune still works, and the reader MUTATES
-    // NOTHING (it could race a live writer's renames)
-    val files = graft.ext.Layout.zoneFiles(spark, path,
-      lit(0L), lit(100000L))
-    assert(files.nonEmpty)
-    assert(!zonesDir.exists(), "reader repaired the sidecar itself")
-    // maintenance rolls forward and proceeds
-    graft.ext.Layout.zoneAppend(
-      (81L to 90L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1, path)
-    assert(zonesDir.exists())
-    assert(!new java.io.File(path + ".zones.next").exists())
-    assert(spark.read.parquet(path).count() === 90L)
-    val zones = spark.read.parquet(path + ".zones")
-    assert(zones.agg(sum("rows")).collect().head.getLong(0) === 90L)
+    // the window: the append's data files are in place and its group is
+    // committed, the live sidecar is stashed in the aside, and the new
+    // one (`t__append/_zones`) is not promoted yet
+    var hit = 0
+    crashAtEachStep(
+      setup = dir => graft.ext.Layout.zoneWrite(
+        (1L to 80L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 4,
+        s"$dir/t"),
+      op = dir => graft.ext.Layout.zoneAppend(
+        (81L to 90L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1,
+        s"$dir/t")) { (dir, at) =>
+      val path = s"$dir/t"
+      if (at.split(" ").head.endsWith("/t__append/_zones")) {
+        hit += 1
+        val zonesDir = localFile(path + ".zones")
+        assert(!zonesDir.exists())
+        // reader fallback: prune still works, and the reader MUTATES
+        // NOTHING (it could race a live writer's renames)
+        val files = graft.ext.Layout.zoneFiles(spark, path,
+          lit(0L), lit(100000L))
+        assert(files.nonEmpty)
+        assert(graft.ext.Layout.zoneRead(spark, path, "x", lit(0L),
+          lit(100000L)).count() === 80L)
+        assert(!zonesDir.exists(), "reader repaired the sidecar itself")
+        // maintenance rolls forward and proceeds
+        graft.ext.Layout.zoneAppend(
+          (91L to 100L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1, path)
+        assert(zonesDir.exists())
+        assert(!exists(s"${path}__append"))
+        assert(spark.read.parquet(path).count() === 100L)
+        val zones = spark.read.parquet(path + ".zones")
+        assert(zones.agg(sum("rows")).collect().head.getLong(0) === 100L)
+      }
+    }
+    assert(hit == 1, "no crash hit the sidecar promote")
   }
 
   // ---- sign-RP hyperplane family: distinct AND balanced ----

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 /** Round-9 pins: the two 100×-scale fixes the round-8 verdict flagged
   * (sweep-line overlap components in zoneCompact, two-phase prefix sums
   * in numericDrift), the dictBuild cardinality guard, and the compact
-  * orphan sweep.
+  * orphan sweep (now the zone group's recovery, driven by crashes).
   */
-class Round9Spec extends SparkSpec {
+class Round9Spec extends FaultFsSpec {
   import spark.implicits._
 
   // ---- overlapComponents: sweep-line vs the quadratic oracle ----
@@ -78,7 +78,7 @@ class Round9Spec extends SparkSpec {
       Seq(Seq(0, 1, 3, 4)))
   }
 
-  // ---- zoneCompact: marker-gated orphan sweep ----
+  // ---- zoneCompact: the orphan sweep runs only in recovery ----
 
   private def plantOrphan(path: String): java.io.File = {
     // a copy of a real part file under a part- name no sidecar
@@ -95,36 +95,38 @@ class Round9Spec extends SparkSpec {
 
   test("zoneCompact sweeps unreferenced part files after the sidecar " +
       "commit when a crash marker shows a prior run died") {
-    val dir = java.nio.file.Files.createTempDirectory("zones9").toString
-    val path = s"$dir/t"
-    graft.ext.Layout.zoneWrite(
-      (1L to 200L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4, path)
-    val orphan = plantOrphan(path)
-    // the marker an aborted compact leaves: its tmp dir was never
-    // cleaned (cleanup is the last step of a successful run)
-    val markerDir = new java.io.File(path + ".compact")
-    assert(markerDir.mkdir())
-    // direct directory read now double-counts — the condition the
-    // sweep exists to repair
-    assert(spark.read.parquet(path).count() > 200L)
-    // create an overlap so the compact actually commits
-    graft.ext.Layout.zoneAppend(
-      (201L to 220L).map(i => (i, 1001L + (i - 201L) * 10L))
-        .toDF("id", "x"), "x", 1, path)
-    graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
-    assert(!orphan.exists(), "orphan part file survived the sweep")
-    assert(!markerDir.exists(), "crash marker survived the compact")
-    // directory read and sidecar agree again — no loss, no double count
-    assert(spark.read.parquet(path).count() === 220L)
-    val sidecarRows = spark.read.parquet(path + ".zones")
-      .agg(sum("rows")).collect().head.getLong(0)
-    assert(sidecarRows === 220L)
-    // and every sidecar-listed file still exists
-    val listed = spark.read.parquet(path + ".zones")
-      .select("file").collect().map(_.getString(0))
-    listed.foreach { f =>
-      assert(new java.io.File(new java.net.URI(f)).exists(), f)
+    // the crash marker is the maintenance group's aside: a compaction
+    // crashed after its sidecar commit leaves victims the new sidecar
+    // no longer lists, and the next op retires them
+    var doubleCounted = 0
+    val crashes = crashAtEachStep(
+      setup = { dir =>
+        graft.ext.Layout.zoneWrite(
+          (1L to 200L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4,
+          s"$dir/t")
+        // create an overlap so the compact actually commits
+        graft.ext.Layout.zoneAppend(
+          (201L to 220L).map(i => (i, 1001L + (i - 201L) * 10L))
+            .toDF("id", "x"), "x", 1, s"$dir/t")
+      },
+      op = dir => graft.ext.Layout.zoneCompact(spark, s"$dir/t", "x",
+        rowsPerFile = 100L)) { (dir, at) =>
+      val path = s"$dir/t"
+      // direct directory read double-counts — the condition the sweep
+      // exists to repair
+      if (spark.read.parquet(path).count() > 220L) doubleCounted += 1
+      graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
+      assert(!exists(s"${path}__append_old"), s"$at: aside survived")
+      // directory read and sidecar agree again — no loss, no double count
+      assert(spark.read.parquet(path).count() === 220L, at)
+      val sidecar = spark.read.parquet(path + ".zones")
+      assert(sidecar.agg(sum("rows")).collect().head.getLong(0) === 220L)
+      // and every sidecar-listed file still exists
+      sidecar.select("file").collect().map(_.getString(0)).foreach { f =>
+        assert(exists(f), s"$at: $f")
+      }
     }
+    assert(crashes > 3 && doubleCounted > 0, s"$crashes, $doubleCounted")
   }
 
   test("zoneCompact happy path pays no listing sweep (unreferenced " +
@@ -158,24 +160,29 @@ class Round9Spec extends SparkSpec {
 
   test("zoneCompact recovery branch: a leftover append marker with NO " +
       "overlaps still triggers the sweep and clears the marker") {
-    val dir = java.nio.file.Files.createTempDirectory("zones9r").toString
-    val path = s"$dir/t"
-    graft.ext.Layout.zoneWrite(
-      (1L to 200L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4, path)
-    val orphan = plantOrphan(path)
-    // what a zoneAppend that died between its data write and its
-    // sidecar commit leaves behind
-    val marker = new java.io.File(path + ".append.inprogress")
-    assert(marker.createNewFile())
-    graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
-    assert(!orphan.exists(), "orphan survived the recovery sweep")
-    assert(!marker.exists(), "append marker survived the recovery sweep")
-    assert(spark.read.parquet(path).count() === 200L)
-    // second compact: no markers, no overlaps -> pure no-op
-    val before = new java.io.File(path).listFiles().map(_.getName).sorted
-    graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
-    val after = new java.io.File(path).listFiles().map(_.getName).sorted
-    assert(after.toSeq === before.toSeq)
+    // the marker is a crashed zoneAppend's aside; its batch overlaps
+    // nothing, so the compaction has no rewrite to do and only recovers
+    crashAtEachStep(
+      setup = dir => graft.ext.Layout.zoneWrite(
+        (1L to 200L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 4,
+        s"$dir/t"),
+      op = dir => graft.ext.Layout.zoneAppend(
+        (201L to 220L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 1,
+        s"$dir/t")) { (dir, at) =>
+      val path = s"$dir/t"
+      graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
+      assert(!exists(s"${path}__append_old"),
+        s"$at: append marker survived the recovery")
+      val direct = spark.read.parquet(path).count()
+      assert(direct === 200L || direct === 220L, at)
+      assert(graft.ext.Layout.zoneRead(spark, path, "x",
+        lit(Long.MinValue), lit(Long.MaxValue)).count() === direct, at)
+      // second compact: no group pending, no overlaps -> pure no-op
+      val before = localFile(path).listFiles().map(_.getName).sorted
+      graft.ext.Layout.zoneCompact(spark, path, "x", rowsPerFile = 100L)
+      val after = localFile(path).listFiles().map(_.getName).sorted
+      assert(after.toSeq === before.toSeq, at)
+    }
   }
 
   // ---- dictBuild: guarded single-task path vs two-phase path ----

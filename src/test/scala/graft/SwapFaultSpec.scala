@@ -5,16 +5,17 @@ import java.net.URI
 
 import scala.util.Try
 
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 
 import graft.etl.Warehouse
-import graft.ext.{Dedup, Index, Layout}
+import graft.ext.{Dedup, Index, Layout, Similarity, Sketches}
 
-/** Every at-rest replace, failed or crashed at each of its renames and
-  * deletes in turn: a reader must then see exactly the old or exactly
-  * the new state — right after a failed call, and after a crash once
-  * the next writer has recovered (readers that resolve through the
-  * swap group see it right after the crash too).
+/** Every at-rest replace and append, failed or crashed at each of its
+  * renames and deletes in turn: a reader must then see exactly the old
+  * or exactly the new state — right after a failed call, and after a
+  * crash once the next writer has recovered (readers that resolve
+  * through the swap group see it right after the crash too).
   */
 class SwapFaultSpec extends FaultFsSpec {
   import spark.implicits._
@@ -78,14 +79,101 @@ class SwapFaultSpec extends FaultFsSpec {
       .getOrElse(Seq("<unreadable>"))
 
   test("overwriteSwap is all-or-nothing under faults and crashes") {
+    val upper = (d: String) =>
+      Warehouse.read(spark, d, "t").withColumn("v", functions.upper($"v"))
+    // overwrite is the same staged swap, so it takes the same sweep
+    for (write <- Seq[String => Unit](
+        d => Warehouse.overwriteSwap(spark, upper(d), d, "t"),
+        d => Warehouse.overwrite(upper(d), d, "t")))
+      sweep(
+        setup = d => Warehouse.overwrite(
+          (1 to 5).map(i => (i, s"v$i")).toDF("id", "v"), d, "t"),
+        write = write,
+        state = d => rows(s"$d/t"),
+        recover = d => Warehouse.recover(spark, d, "t"),
+        asides = d => Seq(s"$d/t__old"), staging = d => Seq(s"$d/t__tmp"))
+  }
+
+  private val appendBatch = Seq((1, 2020, "u1"), (2, 2021, "u2"),
+    (11, 2020, "n11"), (12, 2024, "n12")).toDF("id", "anio", "v")
+
+  test("idempotentAppend into a partitioned table lands whole under " +
+      "faults and crashes") {
     sweep(
-      setup = d => Warehouse.overwrite(
-        (1 to 5).map(i => (i, s"v$i")).toDF("id", "v"), d, "t"),
-      write = d => Warehouse.overwriteSwap(spark,
-        Warehouse.read(spark, d, "t").withColumn("v", upper($"v")), d, "t"),
+      setup = d => Warehouse.idempotentAppend(spark,
+        (1 to 10).map(i => (i, 2019 + i % 3, s"v$i")).toDF("id", "anio", "v")
+          .repartition(1), d, "t", Seq("id"), Seq("anio")),
+      write = d => Warehouse.idempotentAppend(spark,
+        appendBatch.repartition(1), d, "t", Seq("id"), Seq("anio")),
       state = d => rows(s"$d/t"),
       recover = d => Warehouse.recover(spark, d, "t"),
-      asides = d => Seq(s"$d/t__old"), staging = d => Seq(s"$d/t__tmp"))
+      asides = d => Seq(s"$d/t__append_old"),
+      staging = d => Seq(s"$d/t__append"))
+  }
+
+  test("idempotentAppend as a first write lands whole under faults and " +
+      "crashes") {
+    sweep(
+      setup = _ => (),
+      write = d => Warehouse.idempotentAppend(spark,
+        appendBatch.repartition(1), d, "t", Seq("id"), Seq("anio")),
+      state = d => rows(s"$d/t"),
+      recover = d => Warehouse.recover(spark, d, "t"),
+      asides = d => Seq(s"$d/t__append_old"),
+      staging = d => Seq(s"$d/t__append"))
+  }
+
+  test("cmAppend lands its sketch file whole under faults and crashes") {
+    def terms(ts: String*) = ts.toDF("t").repartition(1)
+    sweep(
+      setup = d => Sketches.cmWrite(terms("a", "b", "a"), $"t", 2, 16,
+        s"$d/cm"),
+      write = d => Sketches.cmAppend(terms("a", "c"), $"t", 2, 16, s"$d/cm"),
+      state = d => Sketches.cmRead(spark, s"$d/cm").collect()
+        .map(_.toString).sorted.toSeq,
+      recover = d => Sketches.cmAppend(terms(), $"t", 2, 16, s"$d/cm"),
+      asides = d => Seq(s"$d/cm__append_old"),
+      staging = d => Seq(s"$d/cm__append"))
+  }
+
+  test("appendIvfPq lands every cell's files whole under faults and " +
+      "crashes") {
+    val cents = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 0f, 1f, 0f))
+    val books = Seq(Seq(Array(1f, 0f), Array(0f, 1f)),
+      Seq(Array(1f, 0f), Array(0f, 1f)))
+    def vecs(ids: Range) = ids.map(i => (i.toLong,
+      if (i % 2 == 0) Seq(1f, i.toFloat, 0f, 0f)
+      else Seq(0f, 0f, 1f, i.toFloat)))
+      .toDF("id", "v")
+    sweep(
+      setup = d => Similarity.writeIvfPq(vecs(1 to 6), "id", "v", s"$d/pq",
+        cents, books),
+      write = d => Similarity.appendIvfPq(vecs(7 to 10), "id", "v",
+        s"$d/pq", cents, books),
+      state = d => rows(s"$d/pq"),
+      recover = d => Similarity.appendIvfPq(vecs(1 to 0), "id", "v",
+        s"$d/pq", cents, books),
+      asides = d => Seq(s"$d/pq__append_old"),
+      staging = d => Seq(s"$d/pq__append"))
+  }
+
+  test("writeSegment publishes postings and manifest as one group under " +
+      "faults and crashes") {
+    val terms = Seq("join", "hash", "scan", "filter", "sort")
+    def lookup(d: String) = Index.termLookupSegments(spark, s"$d/idx",
+      terms, k = 10).collect().map(_.toString).sorted.toSeq
+    sweep(
+      setup = d => Index.writeSegment(Seq((1L, "join hash join"),
+        (2L, "hash scan"), (3L, "sort join")).toDF("doc_id", "text"),
+        "doc_id", "text", s"$d/idx", seg = 0),
+      // doc 1 re-ingested: its seg-0 postings go stale once seg 1 lands
+      write = d => Index.writeSegment(Seq((1L, "scan filter"),
+        (4L, "join sort")).toDF("doc_id", "text"), "doc_id", "text",
+        s"$d/idx", seg = 1),
+      state = lookup,
+      recover = d => Index.compactSegments(spark, s"$d/idx"),
+      asides = d => Seq(s"$d/idx__append_old"),
+      staging = d => Seq(s"$d/idx__append"))
   }
 
   test("mergeByKey over three touched partitions is all-or-nothing " +
@@ -123,24 +211,61 @@ class SwapFaultSpec extends FaultFsSpec {
       asides = d => Seq(s"$d/t__expired"), staging = _ => Nil)
   }
 
+  private def zoned(d: String) =
+    Layout.zoneRead(spark, s"$d/z", "x", lit(0L), lit(Long.MaxValue))
+      .collect().map(_.toString).sorted.toSeq
+
+  /** After a maintenance op the table and its sidecar agree: a direct
+    * directory read sees exactly the sidecar's rows, and every file the
+    * sidecar lists exists.
+    */
+  private def zonesWhole(d: String): Unit = {
+    assert(rows(s"$d/z") == zoned(d),
+      "a direct read disagrees with the sidecar")
+    spark.read.parquet(s"$d/z.zones").select("file").collect()
+      .map(_.getString(0)).foreach(f => assert(exists(f), s"$f missing"))
+  }
+
+  private def zoneBase(d: String): Unit = Layout.zoneWrite(
+    (1L to 40L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 2, s"$d/z")
+
   test("zoneAppend's sidecar swap is all-or-nothing under faults and " +
       "crashes; the next maintenance op sweeps a dead append's files") {
-    def zoned(d: String) =
-      Layout.zoneRead(spark, s"$d/z", "x", lit(0L), lit(Long.MaxValue))
-        .collect().map(_.toString).sorted.toSeq
+    // the sidecar swap is now part of the append's one group with the
+    // data files
     sweep(
-      setup = d => Layout.zoneWrite(
-        (1L to 40L).map(i => (i, i * 10L)).toDF("id", "x"), "x", 2, s"$d/z"),
+      setup = zoneBase,
       write = d => Layout.zoneAppend(
         (41L to 60L).map(i => (i, i * 5L)).toDF("id", "x"), "x", 1, s"$d/z"),
       state = zoned,
       recover = { d =>
         Layout.zoneCompact(spark, s"$d/z", "x", 1000L)
-        assert(rows(s"$d/z") == zoned(d),
-          "a direct read disagrees with the sidecar")
+        zonesWhole(d)
       },
-      asides = d => Seq(s"$d/z.zones.old", s"$d/z.append.inprogress"),
-      staging = d => Seq(s"$d/z.zones.next"),
+      asides = d => Seq(s"$d/z__append_old"),
+      staging = d => Seq(s"$d/z__append"),
+      resolving = true)
+  }
+
+  test("zoneCompact promotes, retires and swaps the sidecar as one group " +
+      "under faults and crashes") {
+    sweep(
+      setup = { d =>
+        zoneBase(d)
+        Layout.zoneAppend((41L to 60L).map(i => (i, i * 5L)).toDF("id", "x"),
+          "x", 1, s"$d/z")
+      },
+      write = d => Layout.zoneCompact(spark, s"$d/z", "x", 1000L),
+      // compaction keeps every row, so the reader tells the states
+      // apart by the files the sidecar lists
+      state = d => (zoned(d), Layout.zoneFiles(spark, s"$d/z", lit(0L),
+        lit(Long.MaxValue)).size),
+      recover = { d =>
+        Layout.zoneCompact(spark, s"$d/z", "x", 1000L)
+        zonesWhole(d)
+      },
+      asides = d => Seq(s"$d/z__append_old"),
+      staging = d => Seq(s"$d/z__append"),
       resolving = true)
   }
 
@@ -211,7 +336,7 @@ class SwapFaultSpec extends FaultFsSpec {
       state = index,
       recover = d => Dedup.appendLshIndex(docs(1 to 0), "doc_id", "text",
         path = s"$d/lsh", nDirs = 2),
-      asides = d => Seq(s"$d/lsh/__append_old"),
-      staging = d => Seq(s"$d/lsh/__append"))
+      asides = d => Seq(s"$d/lsh__append_old"),
+      staging = d => Seq(s"$d/lsh__append"))
   }
 }

@@ -4,10 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.etl.ParquetRead
+
 /** Loaders for the driver's read-only TESTDATA parquet tables
-  * (see /root/repo/TESTDATA.md). Schemas come from the parquet footers —
-  * deterministic, no inference pass. Column pruning / predicate pushdown
-  * happen at the scan because every query builds a declarative plan on top.
+  * (see TESTDATA.md). Each is read through [[graft.etl.ParquetRead]]:
+  * the schema comes from the table file's footer, read on the driver,
+  * so loading a table submits no Spark job. Column pruning / predicate
+  * pushdown happen at the scan because every query builds a declarative
+  * plan on top.
   */
 object Tables {
   /** The full TESTDATA table list (single source of truth for view
@@ -18,7 +22,7 @@ object Tables {
     "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

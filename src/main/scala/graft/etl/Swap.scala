@@ -1,10 +1,12 @@
 package graft.etl
 
 import java.io.IOException
+import java.util.UUID
 
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.{JobExecutionStatus, ListenerBusDrain, SparkContext}
 import org.apache.spark.sql.SparkSession
 
 /** All-or-nothing promote of staged paths over their live paths: the
@@ -67,17 +69,45 @@ private[graft] object Swap {
 
   /** Run `write`, the writer's staging under `staging`; if it throws,
     * delete what it left there before rethrowing (a job commit that
-    * fails late leaves complete data files). A task of the failed job
-    * that is still running may recreate an empty `_temporary` skeleton;
-    * the writer's next stage overwrites it.
+    * fails late leaves complete data files). A failed job returns while
+    * its other tasks may still run, and one that creates a file after
+    * the delete recreates a `_temporary` skeleton: so `write`'s jobs
+    * carry a tag, and on failure they are cancelled and their tasks
+    * waited out first.
     */
-  def stage(fs: FileSystem, staging: Path)(write: => Unit): Unit =
+  def stage(spark: SparkSession, fs: FileSystem, staging: Path)(
+      write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-stage-${UUID.randomUUID()}"
+    sc.addJobTag(tag)
     try write
     catch {
       case e: Throwable =>
-        Try(fs.delete(staging, true))
+        try { sc.cancelJobsWithTag(tag); awaitTasks(sc, tag) }
+        catch { case w: Throwable => e.addSuppressed(w) }
+        finally Try(fs.delete(staging, true))
         throw e
+    } finally sc.removeJobTag(tag)
+  }
+
+  /** Block until no job tagged `tag` runs and none of their stages has
+    * a task left, as the status tracker shows once the listener bus has
+    * delivered every event posted so far (the store counts a failed
+    * stage's tasks until each ends). Gives up after [[TaskWaitMs]].
+    */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def active: Boolean = {
+      ListenerBusDrain(sc)
+      st.getJobIdsForTag(tag).flatMap(st.getJobInfo).exists(j =>
+        j.status == JobExecutionStatus.RUNNING ||
+          j.stageIds.flatMap(st.getStageInfo).exists(_.numActiveTasks > 0))
     }
+    val deadline = System.currentTimeMillis() + TaskWaitMs
+    while (active && System.currentTimeMillis() < deadline) Thread.sleep(10)
+  }
+
+  private val TaskWaitMs = 60000L
 
   /** Commit `moves` as one group. The caller [[recover]]s the group
     * before it stages, so the aside does not exist yet.
@@ -207,7 +237,7 @@ private[graft] object Swap {
     val fs = fsOf(spark, p)
     val (stage, aside) = appendPaths(p)
     fs.delete(stage, true) // a dead writer's partial staging
-    Swap.stage(fs, stage)(write(stage.toString))
+    Swap.stage(spark, fs, stage)(write(stage.toString))
     swap(fs, aside, appendMoves(fs, p) ++ extra, Some(stage))
     // Spark refreshes cached reads of the path it writes, which is the
     // staging here: refresh the live path's

@@ -24,13 +24,18 @@ object Warehouse {
   def exists(spark: SparkSession, dir: String, table: String): Boolean =
     fsOf(spark, dir).exists(new Path(path(dir, table)))
 
+  /** Read `table` under the schema of its first data file's footer
+    * ([[ParquetRead]]: no Spark job). A table whose files differ in
+    * schema reads through [[readMerged]].
+    */
   def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(path(dir, table))
+    ParquetRead(spark, path(dir, table))
 
   /** Schema-evolution read (the reference's `_ensure_column` analog,
     * PIPE:200-205, moved to the read path): Parquet footer merge across
     * batches written under older, narrower schemas — missing columns
-    * surface as nulls, no ALTER TABLE.
+    * surface as nulls, no ALTER TABLE. Spark reads every footer, in a
+    * job of its own.
     */
   def readMerged(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path(dir, table))
@@ -110,7 +115,7 @@ object Warehouse {
     val m = swapMove(dir, table)
     val fs = fsOf(spark, dir)
     val tmp = m.staged.get
-    Swap.stage(fs, tmp)(
+    Swap.stage(spark, fs, tmp)(
       df.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
     Swap.swap(fs, m.stash, Seq(m))
     spark.catalog.refreshByPath(path(dir, table)) // as Spark's own write
@@ -197,7 +202,7 @@ object Warehouse {
         val delta = path(dir, table + "__delta")
         val fs = fsOf(spark, dir)
         // stage: materializes the pruned existing read before any move
-        Swap.stage(fs, new Path(delta))(antiMerged(pruned).write
+        Swap.stage(spark, fs, new Path(delta))(antiMerged(pruned).write
           .mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
           .parquet(delta))
         Swap.swap(fs, new Path(path(dir, table + "__mergeold")),
@@ -271,7 +276,7 @@ object Warehouse {
     require(vs.contains(v),
       s"readVersion: version $v of $table not committed " +
         s"(have ${vs.mkString(",")})")
-    spark.read.parquet(s"${versionRoot(dir, table)}/v=$v")
+    ParquetRead(spark, s"${versionRoot(dir, table)}/v=$v")
   }
 
   /** Drop every committed snapshot except the newest `keep`, plus any

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 import graft.functions.DigestFunctions.fastMd5
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -443,13 +443,13 @@ object Dedup {
     val bRows = bandRows(batch, idCol, textCol, n, k, bands)
       .withColumn("pdir", indexDir(col("bkey"), nDirs))
       .withColumnRenamed(idCol, "batch_id")
-    val cands = spark.read.parquet(s"$indexPath/bands")
+    val cands = ParquetRead(spark, s"$indexPath/bands")
       .join(broadcast(bRows), Seq("pdir", "band", "bkey"))
       .select(col("batch_id"), col(idCol).as("corpus_id"))
       .distinct()
     val bSh = batch.select(col(idCol).as("batch_id"),
       array_distinct(shingles(col(textCol), n)).as("sh_b"))
-    val cSh = spark.read.parquet(s"$indexPath/shingles")
+    val cSh = ParquetRead(spark, s"$indexPath/shingles")
       .select(col(idCol).as("corpus_id"), col("sh").as("sh_a"))
     // the verify join must ALSO keep the corpus on the probe side:
     // candidates (bounded by the batch's near-dup fan-out) broadcast to

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 import graft.functions.DigestFunctions.fastMd5
 
 /** At-rest inverted index: the text-retrieval twin of
@@ -103,7 +103,7 @@ object Index {
     require(phrase.size >= 2, "phraseAtRest: need at least 2 words")
     val terms = phrase.distinct
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val bucketLits = AtRest.partitionLits("phraseAtRest", "bucket",
       all.schema("bucket").dataType, buckets.map(_.toLong))
     val pos = all.filter(col("bucket").isin(bucketLits: _*) &&
@@ -149,7 +149,7 @@ object Index {
     require(terms.nonEmpty, "termLookupAtRest: terms must be non-empty")
     import org.apache.spark.sql.expressions.Window
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val bucketLits = AtRest.partitionLits("termLookupAtRest", "bucket",
       all.schema("bucket").dataType, buckets.map(_.toLong))
     val byTerm = Window.partitionBy("term")
@@ -222,10 +222,10 @@ object Index {
     val ms = segmentMoves(path)
     val Seq(postPath, docsPath) = Swap.resolve(segmentFs(spark, path),
       ms.head.stash, ms).map(_.toString)
-    val post = spark.read.option("basePath", postPath).parquet(postPath)
+    val post = ParquetRead(spark, postPath)
     val bucketLits = AtRest.partitionLits("termLookupSegments", "bucket",
       post.schema("bucket").dataType, buckets.map(_.toLong))
-    val latest = spark.read.option("basePath", docsPath).parquet(docsPath)
+    val latest = ParquetRead(spark, docsPath)
       .groupBy("doc_id")
       .agg(max(col("seg").cast("long")).as("__live_seg"))
     val probed = post
@@ -276,10 +276,8 @@ object Index {
   def compactSegments(spark: SparkSession, path: String,
       nBuckets: Int = 16): Unit = {
     recoverSegments(spark, path)
-    val post = spark.read.option("basePath", s"$path/postings")
-      .parquet(s"$path/postings")
-    val latest = spark.read.option("basePath", s"$path/docs")
-      .parquet(s"$path/docs")
+    val post = ParquetRead(spark, s"$path/postings")
+    val latest = ParquetRead(spark, s"$path/docs")
       .groupBy("doc_id")
       .agg(max(col("seg").cast("long")).as("__live_seg"))
     val live = post.join(latest, "doc_id")
@@ -290,7 +288,7 @@ object Index {
     // stage the compacted layout next to the live one
     val stage = new Path(s"$path/__compact")
     if (fs.exists(stage)) fs.delete(stage, true)
-    Swap.stage(fs, stage) {
+    Swap.stage(spark, fs, stage) {
       live.repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$path/__compact/postings/seg=0")

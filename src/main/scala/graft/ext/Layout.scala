@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 
 /** Physical-layout operators: multi-dimensional clustering for data
   * skipping.
@@ -186,7 +186,7 @@ object Layout {
       xLo: Long, xHi: Long, yLo: Long, yHi: Long): Seq[String] = {
     val iv = hilbertBoxIntervals(bits, xLo, xHi, yLo, yHi)
     if (iv.isEmpty) return Seq.empty
-    spark.read.parquet(sidecarPath(spark, path))
+    ParquetRead(spark, sidecarPath(spark, path))
       .select("file", "mn", "mx").collect()
       .filter { r =>
         val (mn, mx) = (r.getLong(1), r.getLong(2))
@@ -209,8 +209,8 @@ object Layout {
     val files = hilbertBoxFiles(spark, path, bits, xLo, xHi, yLo, yHi)
     val pred = col(xCol) >= xLo && col(xCol) <= xHi &&
       col(yCol) >= yLo && col(yCol) <= yHi
-    if (files.isEmpty) spark.read.parquet(path).where(lit(false))
-    else spark.read.parquet(files: _*).where(pred)
+    if (files.isEmpty) ParquetRead(spark, path).where(lit(false))
+    else ParquetRead(spark, files: _*).where(pred)
   }
 
   /** Z-order clustered write: range-partition on the z-value (one range
@@ -246,7 +246,7 @@ object Layout {
     df.repartitionByRange(nFiles, col(zoneCol))
       .sortWithinPartitions(zoneCol)
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    ParquetRead(df.sparkSession, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
         count(lit(1)).as("rows"))
@@ -266,9 +266,9 @@ object Layout {
     val files = zoneFiles(spark, path, lo, hi)
     val pred = col(zoneCol) >= lo && col(zoneCol) <= hi
     if (files.isEmpty)
-      spark.read.parquet(path).where(lit(false))
+      ParquetRead(spark, path).where(lit(false))
     else
-      spark.read.parquet(files: _*).where(pred)
+      ParquetRead(spark, files: _*).where(pred)
   }
 
   /** The surviving file list for [lo, hi] — exposed so tests can assert
@@ -276,7 +276,7 @@ object Layout {
     */
   def zoneFiles(spark: SparkSession, path: String, lo: Column,
       hi: Column): Seq[String] =
-    spark.read.parquet(sidecarPath(spark, path))
+    ParquetRead(spark, sidecarPath(spark, path))
       .where(!(col("mx") < lo || col("mn") > hi))
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -298,7 +298,7 @@ object Layout {
       path: String): Unit = {
     val spark = df.sparkSession
     recoverZones(spark, path)
-    val prior = spark.read.parquet(path + ".zones")
+    val prior = ParquetRead(spark, path + ".zones")
       .select("file", "mn", "mx", "rows")
     val rows = prior.collect().toSeq
     Swap.append(spark, path, Seq(sidecarMove(path))) { stage =>
@@ -365,7 +365,7 @@ object Layout {
   def zoneCompact(spark: SparkSession, path: String, zoneCol: String,
       rowsPerFile: Long): Unit = {
     recoverZones(spark, path)
-    val zonesDf = spark.read.parquet(path + ".zones")
+    val zonesDf = ParquetRead(spark, path + ".zones")
       .select("file", "mn", "mx", "rows")
     val zones = zonesDf.collect()
     // connected overlap COMPONENTS (driver sweep, #files-scale):
@@ -383,7 +383,7 @@ object Layout {
           retire(path, new Path(new java.net.URI(v))))) { stage =>
         val ranged = comps.map { comp =>
           val rows = comp.map(i => zones(i).getLong(3)).sum
-          spark.read.parquet(comp.map(i => zones(i).getString(0)): _*)
+          ParquetRead(spark, comp.map(i => zones(i).getString(0)): _*)
             .repartitionByRange(
               math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt,
               col(zoneCol))
@@ -429,7 +429,7 @@ object Layout {
     */
   private def stageZones(spark: SparkSession, stage: String,
       zoneCol: String, prior: Seq[Row], schema: StructType): Unit = {
-    val fresh = spark.read.parquet(stage)
+    val fresh = ParquetRead(spark, stage)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(zoneCol)).as("mn"), max(col(zoneCol)).as("mx"),
         count(lit(1)).as("rows"))
@@ -447,8 +447,8 @@ object Layout {
     Swap.recoverAppend(spark, path, {
       val m = sidecarMove(path)
       val fs = m.live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val listed = spark.read
-        .parquet((m.staged.toSeq :+ m.live).find(fs.exists).get.toString)
+      val listed = ParquetRead(spark,
+          (m.staged.toSeq :+ m.live).find(fs.exists).get.toString)
         .select("file").collect()
         .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSet
       m +: fs.listStatus(new Path(path)).toSeq.map(_.getPath)

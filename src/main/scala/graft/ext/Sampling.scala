@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 import graft.functions.DigestFunctions.fastMd5
 
 /** Dataset-curation sampling operators for a training-data pipeline:
@@ -259,7 +259,7 @@ object Sampling {
       path: String, keyCol: String, weightCol: String,
       n: Int): DataFrame = {
     require(n > 0, "prioritySampleRead: n must be positive")
-    val merged = spark.read.parquet(path)
+    val merged = ParquetRead(spark, path)
       .orderBy(col("priority").desc, col(keyCol).asc)
       .limit(n + 1)
     priorityFinalize(merged, keyCol, weightCol, n)

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -413,7 +413,7 @@ object Similarity {
   def lshTopKAtRest(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String, queryId: Long, k: Int,
       nBits: Int = 8, probeHamming: Int = 2): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val q = all.filter(col(idCol) === queryId)
       .select(col(vecCol), col("bucket")).head()
     val qVec = q.getSeq[Float](0).toArray
@@ -787,7 +787,7 @@ object Similarity {
       idCol: String, vecCol: String, queryId: Long, k: Int,
       centroids: Seq[Array[Float]], nProbe: Int,
       queryVec: Option[Array[Float]] = None): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val qVec = queryVec.getOrElse(
       all.filter(col(idCol) === queryId).select(col(vecCol))
         .head().getSeq[Float](0).toArray)
@@ -894,7 +894,7 @@ object Similarity {
       path: String, idCol: String, vecCol: String, queryId: Long, k: Int,
       centroids: Seq[Array[Float]], nProbe: Int,
       queryVec: Option[Array[Float]] = None): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val qVec = queryVec.getOrElse(
       all.filter(col(idCol) === queryId).select(col(vecCol))
         .head().getSeq[Float](0).toArray)
@@ -1084,7 +1084,7 @@ object Similarity {
       : DataFrame = {
     require(rerank == 0 || rerankFrom.nonEmpty,
       "ivfPqTopKAtRest: rerank > 0 needs rerankFrom = (vectors, vecCol)")
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     def d2q(c: Array[Float]): Double =
       seqDot(queryVec, queryVec) - 2.0 * seqDot(queryVec, c) + seqDot(c, c)
     val probes = centroids.zipWithIndex
@@ -1148,7 +1148,7 @@ object Similarity {
       path: String, idCol: String, queryId: Long, queryVec: Array[Float],
       k: Int, centroids: Seq[Array[Float]],
       codebooks: Seq[Seq[Array[Float]]], nProbe: Int): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = ParquetRead(spark, path)
     val kern = graft.functions.IvfFunctions.kernel(centroids)
     val probesAd = kern.probesHier(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(queryVec),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, RelationalGro
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.etl.Swap
+import graft.etl.{ParquetRead, Swap}
 import graft.functions.DigestFunctions.fastMd5
 
 /** Engine-portable approximate sketches.
@@ -433,7 +433,7 @@ object Sketches {
 
   def cmRead(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
 
@@ -560,7 +560,7 @@ object Sketches {
       groupCol: String, k: Int,
       qs: Seq[(String, (Int, Int))]): DataFrame = {
     require(qs.nonEmpty, "sampleRead: need at least one quantile")
-    val t = spark.read.parquet(path)
+    val t = ParquetRead(spark, path)
     val counts = t.groupBy(col(groupCol)).agg(sum("n_part").as("n"))
     val sampler = udaf(new MinKSampleAggregator(k),
       Encoders.product[(Long, Long)])

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.ParquetRead
 import graft.Tables._
 import graft.ext.{Bloom, Clustering, Dedup, Similarity, Sketches, Skew, TextStats}
 import graft.streaming.EventsOps
@@ -280,7 +281,7 @@ private[queries] object ExtDedupQueries {
       val featPath = tempDir("graft_q222_") + "/feats"
       graft.ext.Dedup.dedupGroupFeatures(feats, "fid", "feature",
         nBits = 8).write.parquet(featPath)
-      graft.ext.Dedup.embeddingDedupGroupsOf(s.read.parquet(featPath),
+      graft.ext.Dedup.embeddingDedupGroupsOf(ParquetRead(s, featPath),
         threshold = 0.98, nBits = 8)
         .groupBy((col("id") / 100).cast("long").as("media_id"))
         .agg(min((col("group_rep") / 100).cast("long")).as("media_rep"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.ParquetRead
 import graft.Tables._
 
 /** Shared plumbing for the extension-query registry slices: the
@@ -204,7 +205,7 @@ private[queries] object ExtHarness {
     // never appends to $dir/out, so the directory may not exist —
     // grade that as an empty result with the job's schema, not a
     // path-not-found failure.
-    if (new java.io.File(s"$dir/out").exists()) s.read.parquet(s"$dir/out")
+    if (new java.io.File(s"$dir/out").exists()) ParquetRead(s, s"$dir/out")
     else {
       val schema =
         if (tagBatch) jobDf.schema
@@ -260,7 +261,7 @@ private[queries] object ExtHarness {
     require(new java.io.File(s"$dir/out").exists(),
       "streamReplayWriter: the job's sink wrote nothing to out/ — " +
         "nothing to grade")
-    s.read.parquet(s"$dir/out")
+    ParquetRead(s, s"$dir/out")
   }
 
 }

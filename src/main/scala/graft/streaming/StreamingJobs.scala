@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.etl.ParquetRead
+
 /** Structured Streaming entry points over the events stream. The
   * transforms are the SAME EventsOps code used in batch — these wrappers
   * add the streaming-only concerns: source schema, watermarks, output
@@ -101,8 +103,8 @@ object StreamingJobs {
       .select(col("batch_id"), col("ts"), col("sh_b"),
         posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
       .withColumn("pdir", Dedup.indexDir(col("bkey"), nDirs))
-    val bandIdx = spark.read.parquet(s"$indexPath/bands")
-    val cSh = spark.read.parquet(s"$indexPath/shingles")
+    val bandIdx = ParquetRead(spark, s"$indexPath/bands")
+    val cSh = ParquetRead(spark, s"$indexPath/shingles")
       .select(col(idCol).as("corpus_id"), col("sh").as("sh_a"))
     banded
       .join(bandIdx, Seq("pdir", "band", "bkey")) // stream-static

@@ -227,6 +227,25 @@ class PipelineSpec extends SparkSpec {
     assert(Warehouse.read(spark, dir, "obra_tema").count() == 5)
   }
 
+  test("every job of an incremental ingest, the catalog and the flat " +
+      "view runs under a SQL execution") {
+    // a bare parquet read's schema inference was the one job without
+    // an execution id; this keeps such jobs from coming back
+    val dir = freshDir()
+    Pipeline.ingest(spark, pages + "/page1.jsonl", dir)
+    val all = jobsDuring {
+      Pipeline.ingest(spark, pages + "/page2.jsonl", dir)
+      Pipeline.integrateCatalog(spark, csv, dir)
+      Pipeline.buildFlatView(spark, dir)
+    }
+    assert(all.nonEmpty)
+    val bare = all.filter(js => Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isEmpty)
+    assert(bare.isEmpty, s"${bare.size} of ${all.size} jobs outside a SQL " +
+      "execution: " + bare.map(_.stageInfos.map(_.name).mkString(","))
+        .mkString("; "))
+  }
+
   test("incremental ingest preserves dimension ids") {
     val dir = freshDir()
     Pipeline.ingest(spark, pages + "/page1.jsonl", dir)

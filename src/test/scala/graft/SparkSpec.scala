@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +26,20 @@ trait SparkSpec extends AnyFunSuite {
     getClass.getClassLoader.getResource(name).getPath
 
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** The jobs `body` submits, each delivered by the listener bus. */
+  def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(js)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    jobs.asScala.toSeq
+  }
 
   /** Partition-less window operators in a query's physical plan —
     * subqueries included. Planned with AQE OFF: under AQE the

@@ -8,7 +8,7 @@ import scala.util.Try
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 
-import graft.etl.Warehouse
+import graft.etl.{Swap, Warehouse}
 import graft.ext.{Dedup, Index, Layout, Similarity, Sketches}
 
 /** Every at-rest replace and append, failed or crashed at each of its
@@ -92,6 +92,37 @@ class SwapFaultSpec extends FaultFsSpec {
         state = d => rows(s"$d/t"),
         recover = d => Warehouse.recover(spark, d, "t"),
         asides = d => Seq(s"$d/t__old"), staging = d => Seq(s"$d/t__tmp"))
+  }
+
+  test("a staging write whose task throws leaves no staging and no " +
+      "_temporary behind") {
+    // partition 0's task throws at once. The other tasks ignore the
+    // interrupt that cancels them and create their first file (and its
+    // `_temporary` path) only after their first row, once the failed
+    // job has returned: the staging may be deleted only after they end
+    val boom = udf { (i: Long) =>
+      if (i < 3) throw new IllegalStateException("boom on partition 0")
+      val until = System.nanoTime() + 200000000L
+      while (System.nanoTime() < until) {} // deaf to interrupts
+      i
+    }
+    val d = freshDir()
+    val e = intercept[Exception](Swap.append(spark, s"$d/t") { stage =>
+      spark.range(0, 24, 1, 8).withColumn("p", $"id" % 2)
+        .sortWithinPartitions("p") // the partitioned write adds no sort
+        .select(boom($"id").as("id"), $"p")
+        .write.mode("overwrite").partitionBy("p").parquet(stage)
+    })
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")))
+    def left() = {
+      def walk(f: File): Seq[File] =
+        f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      walk(localFile(d)).tail.map(_.getPath)
+    }
+    assert(left().isEmpty)
+    Thread.sleep(1000) // what the failed job's tasks do after it fails
+    assert(left().isEmpty)
   }
 
   private val appendBatch = Seq((1, 2020, "u1"), (2, 2021, "u2"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Catalog, Entities, FlatView, Warehouse}
@@ -10,7 +10,12 @@ import graft.ingest.Crossref
 /** End-to-end orchestration of the reference pipeline (SURVEY.md §3):
   * ingest JSONL pages → UPS gate → dimensions (batch ER) → facts
   * (idempotent keyed append) → catalog integration → flat analytics view.
-  * Re-running `ingest` over the same pages is a no-op (K1 semantics).
+  * Re-running `ingest` over the same pages is a no-op (K1 semantics),
+  * and a batch whose every page is already committed skips the work:
+  * one MD5 and one marker probe per page, both read through the Hadoop
+  * file system in this process, decide it without a Spark job, and a
+  * full run marks its pages after its finish row, unless the F8 cap
+  * bound (`ingest` states the contract).
   *
   * On a small batch a stage's time is set by its chain of Spark jobs,
   * not by compute, so each stage submits the actions that share no
@@ -22,7 +27,8 @@ import graft.ingest.Crossref
   *    both dimensions in while it appends `obra_autor_afiliacion` (which
   *    sees the dimensions only through the two checkpoints) and counts
   *    `obras` (written in phase 1, untouched in phase 2). The run log's
-  *    start and finish rows stay first and last.
+  *    start and finish rows stay first and last; the page markers
+  *    follow the finish row.
   *  - `integrateCatalog`: after the `sedes_areas` swap, the CSV export
   *    and the relabel + `afiliaciones` swap, both readers of the new
   *    catalog.
@@ -37,10 +43,38 @@ object Pipeline {
   /** A phase action that only writes: no result for the phase. */
   private def write(f: => Unit): () => Option[Nothing] = () => { f; None }
 
+  /** The tables `ingest` writes, the run log aside. */
+  private val IngestTables = Seq("autores", "afiliaciones", "sedes_areas",
+    "obras", "obra_tema", "obra_autor_afiliacion")
+
   /** Ingest one batch of CrossRef JSONL page files into the warehouse.
     * `maxWorks` is the F8 ingest cap (reference MAX_WORKS, PIPE:27):
     * like the reference's arrival-order cutoff, the surviving subset is
     * arbitrary-but-capped, via `limit`.
+    *
+    * A batch whose every page is already committed is skipped: the
+    * call recovers each table it writes (a dead writer's pending swap
+    * is finished, as a full run would finish it), logs its start and
+    * finish rows and returns the `obras` count, in a handful of Spark
+    * jobs. A page is one non-blank line of a page file; it is committed
+    * when its marker `<dir>/_pages/<md5 of the line>` exists. Digests
+    * and markers are read in this process, so the decision runs no job.
+    * The rule is all or nothing: a batch with one uncommitted page runs
+    * in full, because the ORCID propagation, the in-batch DOI dedup and
+    * the cap each see the whole batch.
+    *
+    * A full run creates the markers of its uncommitted pages after its
+    * finish row, and only when the cap did not bind: fewer than
+    * `maxWorks` gated works, counted as an observed metric of the
+    * `obras` append in phase 1, so the check adds no job (a count over
+    * the gated cache plans a shuffle: two jobs). A capped batch left
+    * works out, and its re-run must see them. A run that fails or dies
+    * before its markers leaves its pages uncommitted, and its re-run
+    * runs in full.
+    *
+    * Contract: a marker asserts that its page's rows are in the ingest
+    * tables. A writer that removes rows from them must delete
+    * `<dir>/_pages`; no shipped caller removes any.
     */
   def ingest(spark: SparkSession, pagesPath: String, dir: String,
       maxWorks: Int = 1000000): Long = Materialize.scope {
@@ -48,6 +82,25 @@ object Pipeline {
     Warehouse.logRun(spark, dir, runId, "start", pagesPath, 0L)
 
     val items = Crossref.readPages(spark, pagesPath)
+    val pages = Warehouse.pageDigests(spark, items.inputFiles.toSeq)
+    val fresh = Warehouse.uncommittedPages(spark, dir, pages)
+    val (n, markable) =
+      if (pages.nonEmpty && fresh.isEmpty) {
+        IngestTables.foreach(Warehouse.recover(spark, dir, _))
+        (Warehouse.read(spark, dir, "obras").count(), false)
+      } else ingestBatch(spark, items, dir, maxWorks)
+    Warehouse.logRun(spark, dir, runId, "finish", pagesPath, n)
+    if (markable) Warehouse.commitPages(spark, dir, fresh)
+    // the scope releases a full run's three caches and two cuts, also
+    // when a phase throws
+    n
+  }
+
+  /** The full ingest of `items`: returns the `obras` count and whether
+    * the cap left every gated work in.
+    */
+  private def ingestBatch(spark: SparkSession, items: DataFrame, dir: String,
+      maxWorks: Int): (Long, Boolean) = {
     val allWorks = Materialize.disk(Crossref.works(items))
     // DETERMINISTIC F8 cap: a bare limit over an unordered plan picks
     // an arbitrary subset PER EVALUATION — if the cache is lost
@@ -88,6 +141,7 @@ object Pipeline {
     // action: the surrogate-id step materialises eagerly. The cuts are
     // made on ParJobs threads and still register with this scope.
     val obras = gated.drop("author", "subject")
+    val gatedN = Observation("gatedWorks")
     val Seq(autores, afiliaciones) = ParJobs[Option[DataFrame]](
       () => Some(Materialize.cut {
         val batch = Entities.resolveAuthors(occ)
@@ -102,7 +156,8 @@ object Pipeline {
         else batch
       }),
       // Facts — idempotent keyed appends (K1).
-      write(Warehouse.idempotentAppend(spark, obras, dir, "obras",
+      write(Warehouse.idempotentAppend(spark,
+        obras.observe(gatedN, count(lit(1)).as("n")), dir, "obras",
         Seq("doi"), partitionCols = Seq("anio"))),
       write(Warehouse.idempotentAppend(spark, Crossref.obraTema(gated), dir,
         "obra_tema", Seq("doi", "tema")))).flatten
@@ -135,11 +190,10 @@ object Pipeline {
       write(if (!hasSedes)
         Warehouse.overwrite(Catalog.seededSedes(spark), dir, "sedes_areas"))
     ).flatten
-
-    Warehouse.logRun(spark, dir, runId, "finish", pagesPath, n)
-    // the scope releases this batch's three caches and two cuts, also
-    // when a phase throws
-    n
+    // the append completed the observation before it returned; were it
+    // missing, the cap would count as bound and no page be marked
+    (n, gatedN.future.value.flatMap(_.toOption)
+      .exists(_.getLong(0) < maxWorks))
   }
 
   /** Catalog integration + keyword relabel (§3.2). */

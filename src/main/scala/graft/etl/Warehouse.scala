@@ -1,6 +1,9 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -355,6 +358,57 @@ object Warehouse {
         lit(500).as("rows"), lit("2022-01-01").as("from"),
         lit("2025-11-30").as("until"))))
       .drop("source"), dir, "runs", Nil)
+  }
+
+  /** The MD5 (hex) of each distinct non-blank line of `files` (qualified
+    * URIs, as `Dataset.inputFiles` lists them), read in this process
+    * through the Hadoop file system: no Spark job. Lines split as
+    * Spark's text readers split them, and a compressed file is read
+    * through its codec. A line of a CrossRef page file is one page
+    * envelope.
+    */
+  def pageDigests(spark: SparkSession, files: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val codecs = new CompressionCodecFactory(conf)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    files.flatMap { f =>
+      val p = new Path(new java.net.URI(f))
+      val raw = p.getFileSystem(conf).open(p)
+      val lines = new LineReader(Option(codecs.getCodec(p))
+        .fold[java.io.InputStream](raw)(_.createInputStream(raw)), conf)
+      val line = new Text
+      try Iterator.continually(lines.readLine(line)).takeWhile(_ > 0)
+        .filter(_ => line.toString.trim.nonEmpty)
+        .map { _ =>
+          md5.update(line.getBytes, 0, line.getLength)
+          md5.digest().map("%02x".format(_)).mkString
+        }
+        .toList
+      finally lines.close()
+    }.distinct
+  }
+
+  /** Page markers: `_pages/<digest>` under the warehouse, one per page
+    * whose rows are in the ingest tables (`Pipeline.ingest` states the
+    * contract). Spark skips `_` names, so no table read lists them.
+    */
+  private def pageMarker(dir: String, digest: String): Path =
+    new Path(path(dir, "_pages"), digest)
+
+  /** Of `digests`, the ones with no marker: one `exists` each. */
+  def uncommittedPages(spark: SparkSession, dir: String,
+      digests: Seq[String]): Seq[String] = {
+    val fs = fsOf(spark, dir)
+    digests.filterNot(d => fs.exists(pageMarker(dir, d)))
+  }
+
+  /** Mark each of `digests` committed: an empty file created only if
+    * absent (`overwrite = false`).
+    */
+  def commitPages(spark: SparkSession, dir: String,
+      digests: Seq[String]): Unit = {
+    val fs = fsOf(spark, dir)
+    digests.foreach(d => fs.create(pageMarker(dir, d), false).close())
   }
 
   /** Per-key aggregate-view state: (n, s, mn, mx) over `value`. The sum

@@ -11,29 +11,29 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** The local file system under the `faulty` scheme, failing on cue:
-  * the k-th rename or delete outside a Spark `_temporary` directory
-  * throws, returns false, or — in crash mode — throws, and so does
-  * every later mutation, as if the process had died there.
+  * the k-th rename, delete or file create outside a Spark `_temporary`
+  * directory throws, returns false (a create, which has no false
+  * answer, throws), or — in crash mode — throws, and so does every
+  * later mutation, as if the process had died there.
   */
 class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = FaultFs.Uri
 }) {
   override def getScheme: String = FaultFs.Uri.getScheme
   override def rename(src: Path, dst: Path): Boolean =
-    FaultFs.step(src, dst)(super.rename(src, dst))
+    FaultFs.step(src, dst)(false)(super.rename(src, dst))
   override def delete(p: Path, recursive: Boolean): Boolean =
-    FaultFs.step(p)(super.delete(p, recursive))
+    FaultFs.step(p)(false)(super.delete(p, recursive))
   override def mkdirs(p: Path): Boolean = { FaultFs.alive(); super.mkdirs(p) }
   override def mkdirs(p: Path, perm: FsPermission): Boolean = {
     FaultFs.alive(); super.mkdirs(p, perm)
   }
   override def create(p: Path, perm: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    FaultFs.alive()
-    super.create(p, perm, overwrite, bufferSize, replication, blockSize,
-      progress)
-  }
+      progress: Progressable): FSDataOutputStream =
+    FaultFs.step(p)(throw new IOException(s"FaultFs: create $p refused"))(
+      super.create(p, perm, overwrite, bufferSize, replication, blockSize,
+        progress))
 }
 
 object FaultFs {
@@ -60,14 +60,17 @@ object FaultFs {
   def alive(): Unit =
     if (dead) throw new IOException("FaultFs: the process has crashed")
 
-  def step(paths: Path*)(op: => Boolean): Boolean = {
+  /** `op`, unless it is the armed step: then `refused` is its answer in
+    * [[ReturnFalse]] mode.
+    */
+  def step[T](paths: Path*)(refused: => T)(op: => T): T = {
     alive()
     if (failAt > 0 && !paths.exists(_.toString.contains("/_temporary")) &&
         seen.incrementAndGet() == failAt) {
       fired = true
       firedOn = paths.mkString(" ")
       mode match {
-        case ReturnFalse => return false
+        case ReturnFalse => return refused
         case Throw => throw new IOException(s"FaultFs: fault at step $failAt")
         case Crash =>
           dead = true
@@ -98,10 +101,11 @@ trait FaultFsSpec extends SparkSpec {
   /** A `faulty://` path as a local file. */
   def localFile(p: String): File = new File(new URI(p).getPath)
 
-  /** `op` on a fresh `setup` fixture, crashed at its k-th rename or
-    * delete, for k = 1, 2, ... until a run ends before its k-th step;
-    * `after` then checks each fixture, given the paths the crash hit
-    * ("" for the run that did not crash). Returns the crash count.
+  /** `op` on a fresh `setup` fixture, crashed at its k-th rename,
+    * delete or create, for k = 1, 2, ... until a run ends before its
+    * k-th step; `after` then checks each fixture, given the paths the
+    * crash hit ("" for the run that did not crash). Returns the crash
+    * count.
     */
   def crashAtEachStep(setup: String => Unit, op: String => Unit)(
       after: (String, String) => Unit): Int = {

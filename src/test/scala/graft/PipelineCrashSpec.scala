@@ -49,6 +49,26 @@ class PipelineCrashSpec extends SparkSpec {
     assert(!new File(s"$dir/autores__tmp").exists())
   }
 
+  test("a skipped re-run after a crash inside a table swap finishes " +
+      "the swap") {
+    val dir = Files.createTempDirectory("graft_crash").toString
+    Pipeline.ingest(spark, pages, dir)
+    def rows(t: String) =
+      Warehouse.read(spark, dir, t).collect().map(_.toString).sorted.toSeq
+    val tables = Seq("autores", "obra_tema")
+    val before = tables.map(rows)
+    // a later writer died mid-swap; the re-run of the committed batch
+    // is a skip, and must leave both tables whole as a full run would
+    tables.foreach(crashMidSwap(dir, _))
+    val jobs = jobsDuring(Pipeline.ingest(spark, pages, dir))
+    assert(jobs.size <= 6, s"not a skip: ${jobs.size} jobs")
+    assert(tables.map(rows) == before)
+    tables.foreach { t =>
+      assert(!new File(s"$dir/${t}__old").exists())
+      assert(!new File(s"$dir/${t}__tmp").exists())
+    }
+  }
+
   test("integrateCatalog after a crash inside the sedes_areas swap keeps " +
       "the catalog rows of the earlier run") {
     val dir = Files.createTempDirectory("graft_crash").toString

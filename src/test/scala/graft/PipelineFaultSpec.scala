@@ -9,9 +9,10 @@ import scala.util.Try
 import graft.etl.Warehouse
 
 /** The incremental `ingest` runs its independent actions side by side;
-  * when one of them fails, or the process dies, at any rename or delete,
-  * a clean re-run must still leave every dimension and fact table — ids
-  * included — exactly as a run that never failed leaves it.
+  * when one of them fails, or the process dies, at any rename, delete
+  * or file create (its page markers included), a clean re-run must
+  * still leave every dimension and fact table — ids included — and the
+  * committed pages exactly as a run that never failed leaves them.
   */
 class PipelineFaultSpec extends FaultFsSpec {
 
@@ -36,6 +37,10 @@ class PipelineFaultSpec extends FaultFsSpec {
   private def snapshot(d: String): Map[String, Seq[String]] =
     tables.map(t => t -> Warehouse.read(spark, d, t).collect()
       .map(_.toString).sorted.toSeq).toMap
+
+  private def markers(d: String): Set[String] =
+    Option(localFile(s"$d/_pages").list()).toSet.flatten
+      .filterNot(_.startsWith("."))
 
   /** Persisted RDDs `body` left behind that were not there before. */
   private def leftBy(body: => Unit): Set[Int] = {
@@ -87,17 +92,21 @@ class PipelineFaultSpec extends FaultFsSpec {
     val clean = copyOf(base)
     Pipeline.ingest(spark, page2, clean)
     val expected = snapshot(clean)
+    val committed = markers(clean)
     assert(expected("autores").nonEmpty &&
       expected("obra_autor_afiliacion").nonEmpty)
     assert(snapshot(base) != expected, "page2 added nothing")
+    assert(committed.size == 2 && markers(base).size == 1)
     for (mode <- Seq(FaultFs.Throw, FaultFs.Crash)) {
       var k = 1
       var swept = false
+      var onMarker = false
       while (!swept) {
         val d = copyOf(base)
         FaultFs.arm(k, mode)
         val failed = Try(Pipeline.ingest(spark, page2, d)).isFailure
         swept = !FaultFs.fired
+        onMarker ||= FaultFs.firedOn.contains("/_pages/")
         FaultFs.disarm()
         val at = s"$mode at step $k"
         if (swept) assert(!failed, s"$at: failed without a fault")
@@ -105,9 +114,11 @@ class PipelineFaultSpec extends FaultFsSpec {
         val got = snapshot(d)
         tables.foreach(t => assert(got(t) == expected(t),
           s"$at: $t differs from the run that never failed"))
+        assert(markers(d) == committed, s"$at: committed pages differ")
         k += 1
       }
       assert(k > 3, s"$mode: the ingest made too few renames and deletes")
+      assert(onMarker, s"$mode: no fault hit a page marker")
     }
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
@@ -25,6 +29,89 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val pages = resource("crossref")
   private lazy val csv = resource("ups_institucional.csv")
+
+  private val ingestTables = Seq("autores", "afiliaciones", "sedes_areas",
+    "obras", "obra_tema", "obra_autor_afiliacion")
+
+  /** Every table `ingest` writes, as sorted row strings. */
+  private def snapshot(dir: String): Map[String, Seq[String]] =
+    ingestTables.map(t => t -> Warehouse.read(spark, dir, t).collect()
+      .map(_.toString).sorted.toSeq).toMap
+
+  /** The committed page digests under `dir` (the local file system
+    * keeps a `.<name>.crc` beside each marker).
+    */
+  private def markers(dir: String): Set[String] =
+    Option(new File(dir, "_pages").list()).toSet.flatten
+      .filterNot(_.startsWith("."))
+
+  private def rmTree(p: Path): Unit = if (Files.exists(p)) {
+    val s = Files.walk(p)
+    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    finally s.close()
+  }
+
+  private def finishRows(dir: String): Long =
+    Warehouse.read(spark, dir, "runs").filter($"phase" === "finish").count()
+
+  /** A person's name spellings and the one ORCID they share, if any;
+    * no spelling names two people.
+    */
+  private val people = Seq(
+    (Seq("José Pérez", "J. Pérez"), Some("0000-0001-0000-0001")),
+    (Seq("Ana Ruiz", "A. Ruiz"), Some("0000-0002-0000-0002")),
+    (Seq("Eva Mora", "E. Mora", "Eva M. Mora"), Some("0000-0003-0000-0003")),
+    (Seq("Pablo Vega"), Some("0000-0004-0000-0004")),
+    (Seq("Luis Torres"), None),
+    (Seq("María González", "M. González"), None),
+    (Seq("Raúl Cano"), None))
+  private val affiliations = Seq(
+    "Universidad Politécnica Salesiana, Cuenca, Ecuador",
+    "Universidad Politécnica Salesiana sede Quito",
+    "Universidad Politecnica Salesiana, Guayaquil",
+    "Universidad de Cuenca, Ecuador",
+    "University of California, U.S.A.",
+    "Escuela Politécnica Nacional, Quito")
+
+  /** One CrossRef page envelope of 2 to 4 works drawn from shared
+    * pools: DOIs recur across pages and batches (each delivery with
+    * its own authors and subjects), and an author occurrence may omit
+    * its person's ORCID.
+    */
+  private def randomPage(rnd: Random): String = {
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    val works = Seq.fill(2 + rnd.nextInt(3)) {
+      val w = rnd.nextInt(24)
+      val authors = Seq.fill(1 + rnd.nextInt(3)) {
+        val (names, orcid) = pick(people)
+        val Array(given, family) = pick(names).split(" (?=[^ ]+$)")
+        val o = orcid.filter(_ => rnd.nextDouble() < 0.6)
+          .map(x => s""", "ORCID": "https://orcid.org/$x"""").getOrElse("")
+        val affs = Seq.fill(rnd.nextInt(3))(pick(affiliations)).distinct
+          .map(a => s"""{"name": "$a"}""").mkString(", ")
+        s"""{"given": "$given", "family": "$family"$o, """ +
+          s""""sequence": "${pick(Seq("first", "additional"))}", """ +
+          s""""affiliation": [$affs]}"""
+      }
+      val subjects = Seq.fill(rnd.nextInt(3))(pick(Seq("Engineering",
+        "Education", "Computer Science", "Biology"))).distinct
+        .map(t => s""""$t"""").mkString(", ")
+      s"""{"DOI": "10.9/W$w", "title": ["Work $w"], """ +
+        s""""publisher": "P${w % 3}", """ +
+        s""""type": "journal-article", "is-referenced-by-count": $w, """ +
+        s""""issued": {"date-parts": [[${2019 + w % 5}]]}, """ +
+        s""""subject": [$subjects], "author": [${authors.mkString(", ")}]}"""
+    }
+    s"""{"message": {"items": [${works.mkString(", ")}]}}"""
+  }
+
+  /** A batch directory of two page files of one or two pages each. */
+  private def randomBatch(rnd: Random, root: Path): String = {
+    val b = Files.createTempDirectory(root, "batch")
+    Seq("p1.jsonl", "p2.jsonl").foreach(f => Files.write(b.resolve(f),
+      Seq.fill(1 + rnd.nextInt(2))(randomPage(rnd)).asJava))
+    b.toString
+  }
 
   test("e2e: ingest + catalog + flat view golden") {
     val dir = freshDir()
@@ -216,15 +303,100 @@ class PipelineSpec extends SparkSpec {
 
   test("K1 idempotence: re-running ingest is a no-op") {
     val dir = freshDir()
+    val n = Pipeline.ingest(spark, pages, dir)
+    val before = snapshot(dir)
+    var again = 0L
+    val jobs = jobsDuring { again = Pipeline.ingest(spark, pages, dir) }
+    assert(again == n)
+    ingestTables.foreach(t => assert(snapshot(dir)(t) == before(t), t))
+    assert(before("obra_tema").size == 5)
+    assert(finishRows(dir) == 2)
+    // every page is committed, so the re-run is the skip: its run-log
+    // rows, the recovery probes and the obras count
+    assert(jobs.size <= 6, s"the re-run ran ${jobs.size} jobs")
+  }
+
+  test("skipped re-runs of seeded random batch sequences equal the " +
+      "full re-run: every ingest table as it was") {
+    for (seed <- Seq(11, 12, 13)) {
+      val rnd = new Random(seed)
+      val root = Files.createTempDirectory("graft_batches")
+      val dir = freshDir()
+      // three batches over shared DOI and author pools, with a catalog
+      // relabel between the first and the second
+      val batches = Seq.fill(3)(randomBatch(rnd, root))
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Pipeline.ingest(spark, b, dir)
+        if (i == 0) Pipeline.integrateCatalog(spark, csv, dir)
+      }
+      val state = snapshot(dir)
+      val committed = markers(dir)
+      assert(state("obra_autor_afiliacion").nonEmpty, s"seed $seed")
+      rnd.shuffle(batches).foreach { b =>
+        val jobs = jobsDuring(Pipeline.ingest(spark, b, dir))
+        assert(jobs.size <= 6, s"seed $seed: a skip ran ${jobs.size} jobs")
+        ingestTables.foreach(t => assert(snapshot(dir)(t) == state(t),
+          s"seed $seed: a skipped re-run changed $t"))
+      }
+      assert(markers(dir) == committed)
+      // without the markers the same re-run takes the full path, which
+      // changes nothing either, and commits its pages again
+      rmTree(Paths.get(dir, "_pages"))
+      val b = batches(rnd.nextInt(batches.size))
+      Pipeline.ingest(spark, b, dir)
+      ingestTables.foreach(t => assert(snapshot(dir)(t) == state(t),
+        s"seed $seed: the full re-run changed $t"))
+      assert(markers(dir).nonEmpty && markers(dir).subsetOf(committed))
+      assert(finishRows(dir) == 7)
+    }
+  }
+
+  test("a batch that mixes a committed page and a new page runs in full") {
+    val root = Files.createTempDirectory("graft_mixed")
+    val mixed = Files.createDirectory(root.resolve("mixed"))
+    Seq("page1.jsonl", "page2.jsonl").foreach(f =>
+      Files.copy(Paths.get(pages, f), mixed.resolve(f)))
+    val dir = freshDir()
+    val expected = freshDir()
+    Seq(dir, expected).foreach(
+      Pipeline.ingest(spark, pages + "/page1.jsonl", _))
+    val page1 = markers(dir)
+    assert(page1.size == 1)
+    val before = snapshot(dir)
+    Pipeline.ingest(spark, mixed.toString, dir)
+    // the same batch with no page committed runs in full for sure
+    rmTree(Paths.get(expected, "_pages"))
+    Pipeline.ingest(spark, mixed.toString, expected)
+    assert(snapshot(dir) == snapshot(expected))
+    // and the new page's rows are in: a skip adds none
+    assert(snapshot(dir) != before)
+    assert(markers(dir) == markers(expected) && markers(dir).size == 2 &&
+      page1.subsetOf(markers(dir)))
+  }
+
+  test("pages re-delivered gzipped are the committed pages") {
+    // a page is a line of the decompressed file, as Spark reads it
+    val gz = Files.createTempDirectory("graft_gz")
+    val out = new java.util.zip.GZIPOutputStream(
+      Files.newOutputStream(gz.resolve("page1.jsonl.gz")))
+    try Files.copy(Paths.get(pages, "page1.jsonl"), out) finally out.close()
+    val dir = freshDir()
+    Pipeline.ingest(spark, pages + "/page1.jsonl", dir)
+    val before = snapshot(dir)
+    val jobs = jobsDuring(Pipeline.ingest(spark, gz.toString, dir))
+    assert(jobs.size <= 6, s"not a skip: ${jobs.size} jobs")
+    assert(snapshot(dir) == before && markers(dir).size == 1)
+  }
+
+  test("a run the maxWorks cap binds on commits no page") {
+    val dir = freshDir()
+    Pipeline.ingest(spark, pages, dir, maxWorks = 2)
+    assert(Warehouse.read(spark, dir, "obras").count() == 2)
+    assert(markers(dir).isEmpty)
+    // so the uncapped re-run runs in full and ingests the rest
     Pipeline.ingest(spark, pages, dir)
-    val obras1 = Warehouse.read(spark, dir, "obras").count()
-    val oaa1 = Warehouse.read(spark, dir, "obra_autor_afiliacion")
-      .orderBy("doi", "autorId", "afiliacionId").collect().toSeq
-    Pipeline.ingest(spark, pages, dir)
-    assert(Warehouse.read(spark, dir, "obras").count() == obras1)
-    assert(Warehouse.read(spark, dir, "obra_autor_afiliacion")
-      .orderBy("doi", "autorId", "afiliacionId").collect().toSeq == oaa1)
-    assert(Warehouse.read(spark, dir, "obra_tema").count() == 5)
+    assert(Warehouse.read(spark, dir, "obras").count() == 4)
+    assert(markers(dir).size == 3)
   }
 
   test("every job of an incremental ingest, the catalog and the flat " +

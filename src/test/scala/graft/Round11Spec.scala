@@ -13,8 +13,9 @@ class Round11Spec extends FaultFsSpec {
 
   // ---- zoneAppend: entry recovery of a dead prior append ----
 
-  test("zoneAppend with a pre-existing crash marker sweeps the dead " +
-      "run's orphans at entry; direct directory reads stay exact") {
+  test("zoneAppend crashed at each step of its zone group: the next " +
+      "append rolls the dead one forward at entry; direct directory " +
+      "reads stay exact") {
     // the crash marker is the dead append's aside: the next append
     // rolls it forward at entry; a crash before the commit leaves only
     // staging, which the next append overwrites
@@ -45,9 +46,9 @@ class Round11Spec extends FaultFsSpec {
     assert(crashes > 3)
   }
 
-  test("zoneAppend without a marker performs no sweep and no extra " +
-      "listing work on the happy path (files before == files after " +
-      "minus the appended batch)") {
+  test("zoneAppend with no pending zone group deletes no file on the " +
+      "happy path (files before == files after minus the appended " +
+      "batch)") {
     val dir = java.nio.file.Files.createTempDirectory("zones11b").toString
     val path = s"$dir/t"
     graft.ext.Layout.zoneWrite(
@@ -64,9 +65,9 @@ class Round11Spec extends FaultFsSpec {
 
   // ---- sidecar swap crash: roll-forward + reader fallback ----
 
-  test("a crash between swapZones' two renames (no live .zones) is " +
-      "survivable: readers fall back non-mutating, the next " +
-      "maintenance op rolls the committed .zones.next forward") {
+  test("a crash between the sidecar's stash and its promote (no live " +
+      ".zones) is survivable: readers fall back non-mutating, the next " +
+      "maintenance op rolls the committed zone group forward") {
     // the window: the append's data files are in place and its group is
     // committed, the live sidecar is stashed in the aside, and the new
     // one (`t__append/_zones`) is not promoted yet

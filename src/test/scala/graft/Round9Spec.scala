@@ -93,8 +93,8 @@ class Round9Spec extends FaultFsSpec {
     orphan
   }
 
-  test("zoneCompact sweeps unreferenced part files after the sidecar " +
-      "commit when a crash marker shows a prior run died") {
+  test("zoneCompact crashed at each step of its zone group: the next " +
+      "compaction sweeps the part files the new sidecar no longer lists") {
     // the crash marker is the maintenance group's aside: a compaction
     // crashed after its sidecar commit leaves victims the new sidecar
     // no longer lists, and the next op retires them
@@ -158,8 +158,9 @@ class Round9Spec extends FaultFsSpec {
       lit(Long.MinValue), lit(Long.MaxValue)).count() === 220L)
   }
 
-  test("zoneCompact recovery branch: a leftover append marker with NO " +
-      "overlaps still triggers the sweep and clears the marker") {
+  test("zoneCompact recovery branch: a zoneAppend crashed at each step, " +
+      "its batch overlapping NO zone, is rolled forward and its aside " +
+      "cleared") {
     // the marker is a crashed zoneAppend's aside; its batch overlaps
     // nothing, so the compaction has no rewrite to do and only recovers
     crashAtEachStep(

@@ -44,8 +44,8 @@ object Pipeline {
   private def write(f: => Unit): () => Option[Nothing] = () => { f; None }
 
   /** The tables `ingest` writes, the run log aside. */
-  private val IngestTables = Seq("autores", "afiliaciones", "sedes_areas",
-    "obras", "obra_tema", "obra_autor_afiliacion")
+  private[graft] val IngestTables = Seq("autores", "afiliaciones",
+    "sedes_areas", "obras", "obra_tema", "obra_autor_afiliacion")
 
   /** Ingest one batch of CrossRef JSONL page files into the warehouse.
     * `maxWorks` is the F8 ingest cap (reference MAX_WORKS, PIPE:27):
@@ -74,7 +74,7 @@ object Pipeline {
     *
     * Contract: a marker asserts that its page's rows are in the ingest
     * tables. A writer that removes rows from them must delete
-    * `<dir>/_pages`; no shipped caller removes any.
+    * `<dir>/_pages`, as `Warehouse.expirePartitions` does.
     */
   def ingest(spark: SparkSession, pagesPath: String, dir: String,
       maxWorks: Int = 1000000): Long = Materialize.scope {
@@ -82,7 +82,7 @@ object Pipeline {
     Warehouse.logRun(spark, dir, runId, "start", pagesPath, 0L)
 
     val items = Crossref.readPages(spark, pagesPath)
-    val pages = Warehouse.pageDigests(spark, items.inputFiles.toSeq)
+    val pages = Crossref.pageDigests(items)
     val fresh = Warehouse.uncommittedPages(spark, dir, pages)
     val (n, markable) =
       if (pages.nonEmpty && fresh.isEmpty) {

@@ -1,9 +1,6 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -313,8 +310,10 @@ object Warehouse {
     * `table__expired` as one [[Swap]] group with nothing promoted,
     * lowest value first, then the stash is deleted: a failure restores
     * every partition, and a crash leaves the table expired below some
-    * lower cutoff, which re-running the expiry completes. Returns the
-    * expired partition values.
+    * lower cutoff, which re-running the expiry completes. Before it
+    * moves a partition it deletes the warehouse's page markers, so a
+    * re-delivered batch re-ingests the expired rows (`Pipeline.ingest`
+    * states the marker contract). Returns the expired partition values.
     */
   def expirePartitions(spark: SparkSession, dir: String, table: String,
       partitionCol: String, cutoff: String): Seq[String] = {
@@ -329,9 +328,14 @@ object Warehouse {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .map(_.getPath).filter(value(_) < cutoff).sortBy(value)
     val aside = new Path(path(dir, table + "__expired"))
-    if (expired.nonEmpty)
+    if (expired.nonEmpty) {
+      // the page markers assert rows this removes; dropped first, so a
+      // crash between the two leaves rows without markers, which only
+      // makes the next ingest of their pages run in full
+      fs.delete(pagesDir(dir), true)
       Swap.swap(fs, aside,
         expired.map(p => Swap.Move(None, p, new Path(aside, p.getName))))
+    }
     expired.map(value)
   }
 
@@ -360,40 +364,14 @@ object Warehouse {
       .drop("source"), dir, "runs", Nil)
   }
 
-  /** The MD5 (hex) of each distinct non-blank line of `files` (qualified
-    * URIs, as `Dataset.inputFiles` lists them), read in this process
-    * through the Hadoop file system: no Spark job. Lines split as
-    * Spark's text readers split them, and a compressed file is read
-    * through its codec. A line of a CrossRef page file is one page
-    * envelope.
-    */
-  def pageDigests(spark: SparkSession, files: Seq[String]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val codecs = new CompressionCodecFactory(conf)
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    files.flatMap { f =>
-      val p = new Path(new java.net.URI(f))
-      val raw = p.getFileSystem(conf).open(p)
-      val lines = new LineReader(Option(codecs.getCodec(p))
-        .fold[java.io.InputStream](raw)(_.createInputStream(raw)), conf)
-      val line = new Text
-      try Iterator.continually(lines.readLine(line)).takeWhile(_ > 0)
-        .filter(_ => line.toString.trim.nonEmpty)
-        .map { _ =>
-          md5.update(line.getBytes, 0, line.getLength)
-          md5.digest().map("%02x".format(_)).mkString
-        }
-        .toList
-      finally lines.close()
-    }.distinct
-  }
-
   /** Page markers: `_pages/<digest>` under the warehouse, one per page
     * whose rows are in the ingest tables (`Pipeline.ingest` states the
     * contract). Spark skips `_` names, so no table read lists them.
     */
+  private def pagesDir(dir: String): Path = new Path(path(dir, "_pages"))
+
   private def pageMarker(dir: String, digest: String): Path =
-    new Path(path(dir, "_pages"), digest)
+    new Path(pagesDir(dir), digest)
 
   /** Of `digests`, the ones with no marker: one `exists` each. */
   def uncommittedPages(spark: SparkSession, dir: String,

@@ -1,5 +1,11 @@
 package graft.ingest
 
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -52,6 +58,35 @@ object Crossref {
   def readPages(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(envelopeSchema).json(path)
       .select(explode(col("message.items")).as("item"))
+
+  /** The MD5 (hex) of each distinct page `readPages` read into `items`:
+    * of each non-blank line of its input files, split as the JSON
+    * reader above splits them (one envelope per line) and read through
+    * the file's compression codec, if any. Read in this process through
+    * the Hadoop file system: no Spark job.
+    */
+  def pageDigests(items: DataFrame): Seq[String] = {
+    val conf = items.sparkSession.sparkContext.hadoopConfiguration
+    val codecs = new CompressionCodecFactory(conf)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    val line = new Text
+    items.inputFiles.toSeq.flatMap { f =>
+      val p = new Path(new java.net.URI(f))
+      Using.resource(p.getFileSystem(conf).open(p)) { raw =>
+        Using.resource(new LineReader(Option(codecs.getCodec(p))
+          .fold[java.io.InputStream](raw)(_.createInputStream(raw)), conf)) {
+          lines =>
+            Iterator.continually(lines.readLine(line)).takeWhile(_ > 0)
+              .filter(_ => line.toString.trim.nonEmpty)
+              .map { _ =>
+                md5.update(line.getBytes, 0, line.getLength)
+                md5.digest().map("%02x".format(_)).mkString
+              }
+              .toList
+        }
+      }
+    }.distinct
+  }
 
   /** Work-grain projection F1/C3-C5/C11 + in-batch DOI dedup F2/F3.
     * Keeps the raw `author`/`subject` arrays for the downstream explodes.

@@ -6,8 +6,6 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import graft.etl.Warehouse
-
 /** The incremental `ingest` runs its independent actions side by side;
   * when one of them fails, or the process dies, at any rename, delete
   * or file create (its page markers included), a clean re-run must
@@ -17,8 +15,6 @@ import graft.etl.Warehouse
 class PipelineFaultSpec extends FaultFsSpec {
 
   private lazy val pages = resource("crossref")
-  private val tables = Seq("autores", "afiliaciones", "sedes_areas", "obras",
-    "obra_tema", "obra_autor_afiliacion")
 
   private def local(d: String): Path = Paths.get(new URI(d).getPath)
 
@@ -33,14 +29,6 @@ class PipelineFaultSpec extends FaultFsSpec {
     }
     to
   }
-
-  private def snapshot(d: String): Map[String, Seq[String]] =
-    tables.map(t => t -> Warehouse.read(spark, d, t).collect()
-      .map(_.toString).sorted.toSeq).toMap
-
-  private def markers(d: String): Set[String] =
-    Option(localFile(s"$d/_pages").list()).toSet.flatten
-      .filterNot(_.startsWith("."))
 
   /** Persisted RDDs `body` left behind that were not there before. */
   private def leftBy(body: => Unit): Set[Int] = {
@@ -91,12 +79,12 @@ class PipelineFaultSpec extends FaultFsSpec {
     Pipeline.ingest(spark, pages + "/page1.jsonl", base)
     val clean = copyOf(base)
     Pipeline.ingest(spark, page2, clean)
-    val expected = snapshot(clean)
-    val committed = markers(clean)
+    val expected = ingestSnapshot(clean)
+    val committed = pageMarkers(clean)
     assert(expected("autores").nonEmpty &&
       expected("obra_autor_afiliacion").nonEmpty)
-    assert(snapshot(base) != expected, "page2 added nothing")
-    assert(committed.size == 2 && markers(base).size == 1)
+    assert(ingestSnapshot(base) != expected, "page2 added nothing")
+    assert(committed.size == 2 && pageMarkers(base).size == 1)
     for (mode <- Seq(FaultFs.Throw, FaultFs.Crash)) {
       var k = 1
       var swept = false
@@ -111,10 +99,10 @@ class PipelineFaultSpec extends FaultFsSpec {
         val at = s"$mode at step $k"
         if (swept) assert(!failed, s"$at: failed without a fault")
         Pipeline.ingest(spark, page2, d)
-        val got = snapshot(d)
-        tables.foreach(t => assert(got(t) == expected(t),
+        val got = ingestSnapshot(d)
+        Pipeline.IngestTables.foreach(t => assert(got(t) == expected(t),
           s"$at: $t differs from the run that never failed"))
-        assert(markers(d) == committed, s"$at: committed pages differ")
+        assert(pageMarkers(d) == committed, s"$at: committed pages differ")
         k += 1
       }
       assert(k > 3, s"$mode: the ingest made too few renames and deletes")

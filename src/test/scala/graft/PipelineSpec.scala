@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -29,21 +28,6 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val pages = resource("crossref")
   private lazy val csv = resource("ups_institucional.csv")
-
-  private val ingestTables = Seq("autores", "afiliaciones", "sedes_areas",
-    "obras", "obra_tema", "obra_autor_afiliacion")
-
-  /** Every table `ingest` writes, as sorted row strings. */
-  private def snapshot(dir: String): Map[String, Seq[String]] =
-    ingestTables.map(t => t -> Warehouse.read(spark, dir, t).collect()
-      .map(_.toString).sorted.toSeq).toMap
-
-  /** The committed page digests under `dir` (the local file system
-    * keeps a `.<name>.crc` beside each marker).
-    */
-  private def markers(dir: String): Set[String] =
-    Option(new File(dir, "_pages").list()).toSet.flatten
-      .filterNot(_.startsWith("."))
 
   private def rmTree(p: Path): Unit = if (Files.exists(p)) {
     val s = Files.walk(p)
@@ -304,11 +288,12 @@ class PipelineSpec extends SparkSpec {
   test("K1 idempotence: re-running ingest is a no-op") {
     val dir = freshDir()
     val n = Pipeline.ingest(spark, pages, dir)
-    val before = snapshot(dir)
+    val before = ingestSnapshot(dir)
     var again = 0L
     val jobs = jobsDuring { again = Pipeline.ingest(spark, pages, dir) }
     assert(again == n)
-    ingestTables.foreach(t => assert(snapshot(dir)(t) == before(t), t))
+    val after = ingestSnapshot(dir)
+    Pipeline.IngestTables.foreach(t => assert(after(t) == before(t), t))
     assert(before("obra_tema").size == 5)
     assert(finishRows(dir) == 2)
     // every page is committed, so the re-run is the skip: its run-log
@@ -329,24 +314,26 @@ class PipelineSpec extends SparkSpec {
         Pipeline.ingest(spark, b, dir)
         if (i == 0) Pipeline.integrateCatalog(spark, csv, dir)
       }
-      val state = snapshot(dir)
-      val committed = markers(dir)
+      val state = ingestSnapshot(dir)
+      val committed = pageMarkers(dir)
       assert(state("obra_autor_afiliacion").nonEmpty, s"seed $seed")
       rnd.shuffle(batches).foreach { b =>
         val jobs = jobsDuring(Pipeline.ingest(spark, b, dir))
         assert(jobs.size <= 6, s"seed $seed: a skip ran ${jobs.size} jobs")
-        ingestTables.foreach(t => assert(snapshot(dir)(t) == state(t),
+        val got = ingestSnapshot(dir)
+        Pipeline.IngestTables.foreach(t => assert(got(t) == state(t),
           s"seed $seed: a skipped re-run changed $t"))
       }
-      assert(markers(dir) == committed)
+      assert(pageMarkers(dir) == committed)
       // without the markers the same re-run takes the full path, which
       // changes nothing either, and commits its pages again
       rmTree(Paths.get(dir, "_pages"))
       val b = batches(rnd.nextInt(batches.size))
       Pipeline.ingest(spark, b, dir)
-      ingestTables.foreach(t => assert(snapshot(dir)(t) == state(t),
+      val got = ingestSnapshot(dir)
+      Pipeline.IngestTables.foreach(t => assert(got(t) == state(t),
         s"seed $seed: the full re-run changed $t"))
-      assert(markers(dir).nonEmpty && markers(dir).subsetOf(committed))
+      assert(pageMarkers(dir).nonEmpty && pageMarkers(dir).subsetOf(committed))
       assert(finishRows(dir) == 7)
     }
   }
@@ -360,18 +347,19 @@ class PipelineSpec extends SparkSpec {
     val expected = freshDir()
     Seq(dir, expected).foreach(
       Pipeline.ingest(spark, pages + "/page1.jsonl", _))
-    val page1 = markers(dir)
+    val page1 = pageMarkers(dir)
     assert(page1.size == 1)
-    val before = snapshot(dir)
+    val before = ingestSnapshot(dir)
     Pipeline.ingest(spark, mixed.toString, dir)
     // the same batch with no page committed runs in full for sure
     rmTree(Paths.get(expected, "_pages"))
     Pipeline.ingest(spark, mixed.toString, expected)
-    assert(snapshot(dir) == snapshot(expected))
+    assert(ingestSnapshot(dir) == ingestSnapshot(expected))
     // and the new page's rows are in: a skip adds none
-    assert(snapshot(dir) != before)
-    assert(markers(dir) == markers(expected) && markers(dir).size == 2 &&
-      page1.subsetOf(markers(dir)))
+    assert(ingestSnapshot(dir) != before)
+    val committed = pageMarkers(dir)
+    assert(committed == pageMarkers(expected) && committed.size == 2 &&
+      page1.subsetOf(committed))
   }
 
   test("pages re-delivered gzipped are the committed pages") {
@@ -382,21 +370,36 @@ class PipelineSpec extends SparkSpec {
     try Files.copy(Paths.get(pages, "page1.jsonl"), out) finally out.close()
     val dir = freshDir()
     Pipeline.ingest(spark, pages + "/page1.jsonl", dir)
-    val before = snapshot(dir)
+    val before = ingestSnapshot(dir)
     val jobs = jobsDuring(Pipeline.ingest(spark, gz.toString, dir))
     assert(jobs.size <= 6, s"not a skip: ${jobs.size} jobs")
-    assert(snapshot(dir) == before && markers(dir).size == 1)
+    assert(ingestSnapshot(dir) == before && pageMarkers(dir).size == 1)
   }
 
   test("a run the maxWorks cap binds on commits no page") {
     val dir = freshDir()
     Pipeline.ingest(spark, pages, dir, maxWorks = 2)
     assert(Warehouse.read(spark, dir, "obras").count() == 2)
-    assert(markers(dir).isEmpty)
+    assert(pageMarkers(dir).isEmpty)
     // so the uncapped re-run runs in full and ingests the rest
     Pipeline.ingest(spark, pages, dir)
     assert(Warehouse.read(spark, dir, "obras").count() == 4)
-    assert(markers(dir).size == 3)
+    assert(pageMarkers(dir).size == 3)
+  }
+
+  test("expiring a year of obras drops the page markers, so the " +
+      "re-delivered batch brings the expired works back") {
+    val dir = freshDir()
+    Pipeline.ingest(spark, pages, dir)
+    val before = ingestSnapshot(dir)
+    assert(pageMarkers(dir).size == 3)
+    assert(Warehouse.expirePartitions(spark, dir, "obras", "anio", "2024") ==
+      Seq("2022", "2023"))
+    assert(pageMarkers(dir).isEmpty)
+    assert(Warehouse.read(spark, dir, "obras").count() == 2)
+    Pipeline.ingest(spark, pages, dir)
+    assert(ingestSnapshot(dir) == before)
+    assert(pageMarkers(dir).size == 3)
   }
 
   test("every job of an incremental ingest, the catalog and the flat " +

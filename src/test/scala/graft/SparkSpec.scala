@@ -41,6 +41,20 @@ trait SparkSpec extends AnyFunSuite {
     jobs.asScala.toSeq
   }
 
+  /** Every table `Pipeline.ingest` writes under `dir`, as sorted row
+    * strings.
+    */
+  def ingestSnapshot(dir: String): Map[String, Seq[String]] =
+    Pipeline.IngestTables.map(t => t -> graft.etl.Warehouse.read(spark, dir,
+      t).collect().map(_.toString).sorted.toSeq).toMap
+
+  /** The committed page digests under `dir`, a local path or a URI (the
+    * local file system keeps a `.<name>.crc` beside each marker).
+    */
+  def pageMarkers(dir: String): Set[String] =
+    Option(new java.io.File(new java.net.URI(s"$dir/_pages").getPath)
+      .list()).toSet.flatten.filterNot(_.startsWith("."))
+
   /** Partition-less window operators in a query's physical plan —
     * subqueries included. Planned with AQE OFF: under AQE the
     * executed plan is an AdaptiveSparkPlanExec LEAF, so a tree

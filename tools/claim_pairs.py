@@ -2,16 +2,15 @@
 """Alternating parent/change pairs of the repository benchmark.
 
     python3 tools/claim_pairs.py <parent checkout> <change checkout> \
-        --workload etl_incremental --seeds 9101 9102 ... [--seconds 15] \
-        [--log pairs.jsonl]
-    python3 tools/claim_pairs.py --summarize pairs.jsonl
+        --workload etl_incremental --seeds 9101 9102 ... [--log pairs.jsonl]
 
 Each seed is one pair: ``python3 perfbench/run.py --workload <w> --seed <s>
---seconds <n> --trace 0`` runs once in each checkout, the parent first on
+--seconds 15 --trace 0`` runs once in each checkout, the parent first on
 even pair numbers and the change first on odd ones, so that a host that
-drifts over time does not favour one side. Each run's contract line
-(the last line of its standard output) is printed and, with ``--log``,
-appended to a JSON-lines file that ``--summarize`` reads back.
+drifts over time does not favour one side. The run length is the
+benchmark's own (BENCHMARK.json ``run_seconds``), the same on both sides.
+Each run's contract line (the last line of its standard output) is printed
+and, with ``--log``, appended to a JSON-lines file with its pair.
 
 The summary gives, per metric, each side's median and quartiles, the
 change's wins (pairs where it is better, in the direction the parent's
@@ -30,6 +29,7 @@ import subprocess
 import sys
 
 SIDES = ("parent", "change")
+SECONDS = 15
 
 
 def order(pair):
@@ -116,10 +116,10 @@ def report(summary, out=sys.stdout):
             file=out)
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed):
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         stdin=subprocess.DEVNULL, text=True)
     return contract_line(proc.stdout)
@@ -127,32 +127,19 @@ def run(checkout, workload, seed, seconds):
 
 def main(argv=None):
     ap = argparse.ArgumentParser()
-    ap.add_argument("parent", nargs="?")
-    ap.add_argument("change", nargs="?")
-    ap.add_argument("--workload")
-    ap.add_argument("--seeds", type=int, nargs="+")
-    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--log")
-    ap.add_argument("--summarize", metavar="LOG")
     a = ap.parse_args(argv)
-    if a.summarize:
-        with open(a.summarize) as f:
-            records = [json.loads(x) for x in f if x.strip()]
-        better = directions(records[0]["parent_checkout"]) \
-            if records and os.path.exists(os.path.join(
-                records[0]["parent_checkout"], "BENCHMARK.json")) else {}
-        report(summarize(records, better))
-        return 0
-    if not (a.parent and a.change and a.workload and a.seeds):
-        ap.error("give two checkouts, --workload and --seeds")
     checkouts = {"parent": os.path.abspath(a.parent),
                  "change": os.path.abspath(a.change)}
     records = []
     for i, seed in enumerate(a.seeds):
-        rec = {"pair": i, "seed": seed, "workload": a.workload,
-               "parent_checkout": checkouts["parent"]}
+        rec = {"pair": i, "seed": seed, "workload": a.workload}
         for side in order(i):
-            rec[side] = run(checkouts[side], a.workload, seed, a.seconds)
+            rec[side] = run(checkouts[side], a.workload, seed)
             print("pair %d seed %d %s: %s" % (i, seed, side,
                   json.dumps(rec[side])), flush=True)
         records.append(rec)
